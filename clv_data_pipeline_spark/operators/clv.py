@@ -120,26 +120,76 @@ def _gg_nll(
 # --- fit barriers ---------------------------------------------------------
 
 
+#: key columns of the fits' sufficient statistics
+_RFT_KEYS = ["frequency", "recency", "t"]
+_GG_KEYS = ["frequency", "monetary"]
+
+
+def _by_key(stats: pd.DataFrame, keys: list[str]) -> pd.DataFrame:
+    """Sufficient statistics sorted by their (unique) key columns.  The
+    weighted NLL then sums in one fixed order, so the fitted parameters
+    do not depend on the row order a collect happened to return."""
+    return stats.sort_values(keys, ignore_index=True)
+
+
+def _rft_stats(features: DataFrame | pd.DataFrame) -> pd.DataFrame:
+    """(frequency, recency, t) triples with count weights ``w``: taken
+    as given from a pandas frame, else grouped and collected."""
+    if isinstance(features, pd.DataFrame):
+        return features
+    return (
+        features.groupBy(*_RFT_KEYS)
+        .agg(F.count("*").alias("w"))
+        .toPandas()
+    )
+
+
+def fit_statistics(
+    returning: DataFrame, monetary_scale: int = 2
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Both fits' sufficient statistics in ONE collect: a grouping-sets
+    aggregate over ``(frequency, recency, t)`` and ``(frequency,
+    round(monetary, monetary_scale))``, split on the driver by
+    ``grouping_id()``.  Returns ``(bgnbd_stats, gamma_gamma_stats)``,
+    the inputs ``fit_bgnbd`` and ``fit_gamma_gamma`` accept in place of
+    a DataFrame.  ``returning`` must already be filtered to returning
+    customers (frequency > 0, monetary > 0), the filter
+    ``fit_gamma_gamma`` would otherwise apply itself.
+    """
+    cols = [*_RFT_KEYS, "monetary"]
+    stats = (
+        returning.select(
+            *_RFT_KEYS, F.round("monetary", monetary_scale).alias("monetary")
+        )
+        .groupingSets([_RFT_KEYS, _GG_KEYS], *cols)
+        .agg(F.count("*").alias("w"), F.grouping_id().alias("_set"))
+        .toPandas()
+    )
+    # grouping_id() sets one bit per column left out of the set, first
+    # column highest: monetary only -> 0b0001, recency and t -> 0b0110
+    bg = stats.loc[stats["_set"] == 0b0001, [*_RFT_KEYS, "w"]]
+    gg = stats.loc[stats["_set"] == 0b0110, [*_GG_KEYS, "w"]]
+    return bg, gg
+
+
 def fit_bgnbd(
-    features: DataFrame, penalizer: float = PENALIZER
+    features: DataFrame | pd.DataFrame, penalizer: float = PENALIZER
 ) -> BetaGeoParams:
     """M1: BG/NBD MLE.  Distributed compression first — the likelihood
     is a function of (frequency, recency, T) only, so group identical
     triples and carry a weight (the lifetimes weighted-fit convention).
     Millions of customers collapse to <= a few thousand rows before the
-    driver collect.
+    driver collect.  ``features`` may also be the already-collected
+    statistics (``fit_statistics``).
     """
-    stats = (
-        features.groupBy("frequency", "recency", "t")
-        .agg(F.count("*").alias("w"))
-        .toPandas()
-    )
+    stats = _rft_stats(features)
     if stats.empty:
         raise ValueError(
             "No customers to fit BG/NBD on (cold start: a single daily "
             "batch yields frequency=0 for everyone — accumulate history "
             "before scoring)"
         )
+    stats = _by_key(stats, _RFT_KEYS)
     x = stats["frequency"].to_numpy(dtype=np.float64)
     t_x = stats["recency"].to_numpy(dtype=np.float64)
     T = stats["t"].to_numpy(dtype=np.float64)
@@ -153,7 +203,7 @@ def fit_bgnbd(
 
 
 def fit_gamma_gamma(
-    features: DataFrame,
+    features: DataFrame | pd.DataFrame,
     penalizer: float = PENALIZER,
     monetary_scale: int = 2,
 ) -> GammaGammaParams:
@@ -175,19 +225,26 @@ def fit_gamma_gamma(
     (pinned ≤1e-9 in tests/test_clv_logic.py).  Callers feeding
     monetary with more than ``monetary_scale`` decimals get a
     cents-quantized fit — standard currency practice; pass a larger
-    scale to trade compression for precision.
+    scale to trade compression for precision.  ``features`` may also be
+    the already-collected statistics (``fit_statistics``).
     """
-    stats = (
-        features.filter((F.col("frequency") > 0) & (F.col("monetary") > 0))
-        .groupBy(
-            "frequency",
-            F.round(F.col("monetary"), monetary_scale).alias("monetary"),
+    if isinstance(features, pd.DataFrame):
+        stats = features
+    else:
+        stats = (
+            features.filter(
+                (F.col("frequency") > 0) & (F.col("monetary") > 0)
+            )
+            .groupBy(
+                "frequency",
+                F.round(F.col("monetary"), monetary_scale).alias("monetary"),
+            )
+            .agg(F.count("*").alias("w"))
+            .toPandas()
         )
-        .agg(F.count("*").alias("w"))
-        .toPandas()
-    )
     if stats.empty:
         raise ValueError("No returning customers to fit Gamma-Gamma on")
+    stats = _by_key(stats, _GG_KEYS)
     x = stats["frequency"].to_numpy(dtype=np.float64)
     m = stats["monetary"].to_numpy(dtype=np.float64)
     w = stats["w"].to_numpy(dtype=np.float64)
@@ -364,20 +421,25 @@ def score_customers(
 def run_clv_logic(features: DataFrame) -> DataFrame:
     """The reference's ``run_clv_logic`` (dags/clv_models.py:39-84):
     empty guard, exact-ordered-schema guard, returning-customer filter,
-    fit both models, score.  Error strings preserved verbatim so the
-    reference's tests port directly.
+    fit both models, score.  Error strings and their precedence are
+    preserved verbatim so the reference's tests port directly; the
+    empty guard's job only runs when a guard or the fit would fail.
     """
-    if features.isEmpty():
-        raise ValueError("Dataframe is empty")
     if list(features.columns) != MODEL_INPUT_COLUMNS:
+        if features.isEmpty():
+            raise ValueError("Dataframe is empty")
         raise ValueError(
             f"Bad Schema: expected {MODEL_INPUT_COLUMNS}, got {list(features.columns)}"
         )
     returning = features.filter(
         (F.col("frequency") > 0) & (F.col("monetary") > 0)
     )
-    bg = fit_bgnbd(returning)
-    gg = fit_gamma_gamma(returning)
+    bg_stats, gg_stats = fit_statistics(returning)
+    # an empty input has no statistics, so only then can it be empty
+    if bg_stats.empty and features.isEmpty():
+        raise ValueError("Dataframe is empty")
+    bg = fit_bgnbd(bg_stats)
+    gg = fit_gamma_gamma(gg_stats)
     return score_customers(returning, bg, gg)
 
 
@@ -486,13 +548,10 @@ def fit_pareto_nbd(
     optimizer touches <= a few thousand rows for millions of
     customers.  Parameter recovery from model-simulated data is
     pinned in tests/test_clv_logic.py."""
-    stats = (
-        features.groupBy("frequency", "recency", "t")
-        .agg(F.count("*").alias("w"))
-        .toPandas()
-    )
+    stats = _rft_stats(features)
     if stats.empty:
         raise ValueError("No customers to fit Pareto/NBD on")
+    stats = _by_key(stats, _RFT_KEYS)
     x = stats["frequency"].to_numpy(dtype=np.float64)
     t_x = stats["recency"].to_numpy(dtype=np.float64)
     T = stats["t"].to_numpy(dtype=np.float64)

@@ -6,10 +6,28 @@ Reference chain (dags/clv_data_dag.py:115):
     predict_clv_scores
 
 Airflow task boundaries (separate processes + GCS/BQ round trips)
-dissolve into DataFrame lineage.  The only true barriers remain:
-(a) the validation gate — its aggregates must materialize before the
-pass/fail decision; (b) the model-fit collects.  Everything else is one
-lazily-planned job per sink.
+dissolve into DataFrame lineage.  A day runs these actions and no
+others, each because the driver needs its answer or it is an output:
+
+- the registry's MAX(CustomerID) (only when ``max_existing_id`` is
+  None): the generator allocates new IDs above it;
+- the staging and registry writes: the day's batch and its new IDs;
+- one staging aggregate: the staging row count and the raw
+  distinct-customer count.  The latter is the firewall's data-loss
+  probe, so it comes from staging, independently of the feature build
+  it checks;
+- the feature write: its ``observe()`` metrics give the firewall the
+  feature row count and the negative-value count;
+- ``run_clv_logic``'s one fit collect, the sufficient statistics of
+  both models for the driver-side MLE (its empty guard runs a job only
+  when the fit finds nothing to fit);
+- the predictions write: its ``observe()`` count is the output row
+  count.
+
+Every table is read with a known schema (the written frame's, for the
+features), so no read runs a schema-inference job.  With adaptive
+execution each shuffle adds a job; a warm day runs 15 Spark jobs
+(budget pinned in tests/test_pipeline.py).
 
 Scale notes: staging is partitioned by ``load_date`` so the (full
 refresh) feature build reads only what it needs if later made
@@ -23,7 +41,8 @@ import datetime as dt
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from clv_data_pipeline_spark.operators.clv import run_clv_logic
@@ -35,6 +54,8 @@ from clv_data_pipeline_spark.operators.validate import (
     observed_features,
     run_validation_checks,
 )
+from clv_data_pipeline_spark.registry import ensure_worker_imports
+from clv_data_pipeline_spark.schemas import REGISTRY_SCHEMA, STAGING_SCHEMA
 from clv_data_pipeline_spark.simulate import simulate_daily_batch
 
 
@@ -54,17 +75,23 @@ def _registry_max_id(spark: SparkSession, path: str, before_date: str) -> int:
     branch).  Excluding the current day makes a day's rerun read the
     same max, allocate the same IDs, and therefore regenerate the same
     batch — idempotency the reference's unconditional streaming insert
-    lacks."""
+    lacks.  Any other read failure raises: treating an unreadable
+    registry as empty would re-issue existing IDs."""
     try:
-        df = spark.read.parquet(path)
-    except Exception:
+        df = spark.read.schema(REGISTRY_SCHEMA).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return 0
+    # the first row of a descending sort is one job (a top-1 per
+    # partition); a global MAX would add a shuffle and a second job
     row = (
         df.filter(F.col("load_date") < F.lit(before_date).cast("date"))
-        .agg(F.coalesce(F.max("CustomerID"), F.lit(0).cast("long")).alias("m"))
+        .select("CustomerID")
+        .orderBy(F.desc("CustomerID"))
         .first()
     )
-    return int(row["m"])
+    return int(row["CustomerID"]) if row else 0
 
 
 def run_pipeline(
@@ -97,6 +124,8 @@ def run_pipeline(
     predictions_path = os.path.join(base_dir, "predicted_clv")
     registry_path = os.path.join(base_dir, "master_users")
     run_date = str(run_date)
+    # the scoring pandas UDF imports this package on the Python workers
+    ensure_worker_imports(spark)
 
     # Task 0 — ID registry (reference simulate_data.py:23-95)
     if max_existing_id is None:
@@ -139,8 +168,13 @@ def run_pipeline(
             registry_path
         )
 
-    tx = spark.read.parquet(staging)
-    staging_rows = tx.count()
+    # the firewall's raw distinct-customer count is its data-loss probe,
+    # so it comes from staging, not from the feature build it checks
+    tx = spark.read.schema(STAGING_SCHEMA).parquet(staging)
+    raw = tx.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count_distinct("CustomerID").alias("customers"),
+    ).first()
 
     # Task 3 — full-refresh feature build (reference clv_data_dag.py:77-96).
     # The firewall's feature-side probes (row count == distinct customers,
@@ -150,22 +184,19 @@ def run_pipeline(
     observed, obs = observed_features(features)
     observed.write.mode("overwrite").parquet(features_path)
     metrics = obs.get
-    features = spark.read.parquet(features_path)
+    features = spark.read.schema(observed.schema).parquet(features_path)
 
     # Task 4 — the firewall (reference clv_data_dag.py:99-103); raises on
-    # DATA LOSS / SCHEMA ERROR / SANITY ERROR.  Only the raw-side
-    # distinct-customer count still needs its own aggregate.
-    raw_c = int(
-        tx.agg(F.count_distinct("CustomerID").alias("c")).first()["c"]
-    )
+    # DATA LOSS / SCHEMA ERROR / SANITY ERROR.
     run_validation_checks(
-        raw_c,
+        int(raw["customers"]),
         int(metrics["feature_count"]),
         int(metrics["invalid_count"]),
         features.columns,
     )
 
-    # Task 5 — scoring (reference clv_data_dag.py:106-110)
+    # Task 5 — scoring (reference clv_data_dag.py:106-110); the output
+    # row count rides the write like the firewall's metrics.
     preds = run_clv_logic(normalize_for_model(features))
     out = preds.select(
         "customer_id",
@@ -175,12 +206,15 @@ def run_pipeline(
         "negatif_clv_flag",
         "outliners_flag",
     )
-    out.write.mode("overwrite").parquet(predictions_path)
+    written = Observation("predictions")
+    out.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(predictions_path)
 
     return PipelineResult(
-        staging_rows=staging_rows,
-        feature_rows=features.count(),
-        prediction_rows=spark.read.parquet(predictions_path).count(),
+        staging_rows=int(raw["rows"]),
+        feature_rows=int(metrics["feature_count"]),
+        prediction_rows=int(written.get["rows"]),
         features_path=features_path,
         predictions_path=predictions_path,
     )

@@ -81,6 +81,12 @@ MASTER_USERS_SCHEMA = T.StructType(
     [T.StructField("CustomerID", T.LongType(), nullable=False)]
 )
 
+#: the pipeline's staging and registry tables as written: the columns
+#: above plus the ``load_date`` partition column
+_LOAD_DATE = T.StructField("load_date", T.DateType())
+STAGING_SCHEMA = T.StructType([*TRANSACTIONS_SCHEMA.fields, _LOAD_DATE])
+REGISTRY_SCHEMA = T.StructType([*MASTER_USERS_SCHEMA.fields, _LOAD_DATE])
+
 # --- driver testdata tables (TESTDATA.md) --------------------------------
 
 TESTDATA_TABLES = [

@@ -9,7 +9,9 @@ append / overwrite / create-if-missing dispositions map to save modes.
 
 Scale notes: staging writes are partitioned by load date so the daily
 full-refresh feature build prunes to the partitions it needs instead of
-re-listing 100 TB of history; readers never infer schemas.
+re-listing 100 TB of history.  CSV readers take an explicit schema;
+``load_table`` infers each testdata table's schema from its parquet
+footers, which costs one small Spark job per table.
 """
 
 from __future__ import annotations

@@ -79,6 +79,17 @@ def test_empty_df_as_input(spark):
         run_clv_logic(df)
 
 
+def test_empty_guard_precedence(spark):
+    """The empty guard's error wins over the fit's, also when the empty
+    frame has the model schema; a non-empty frame without returning
+    customers reaches the fit's cold-start error."""
+    happy = _happy_features(spark)
+    with pytest.raises(ValueError, match="Dataframe is empty"):
+        run_clv_logic(happy.limit(0))
+    with pytest.raises(ValueError, match="^No customers to fit BG/NBD on"):
+        run_clv_logic(happy.withColumn("frequency", happy["frequency"] * 0))
+
+
 def test_validation_fails_on_data_loss():
     with pytest.raises(ValueError, match="DATA LOSS"):
         run_validation_checks(100, 80, 0, MODEL_COLS)
@@ -263,3 +274,86 @@ def test_pareto_nbd_expected_purchases_monotone(spark):
     a = pnbd_expected_purchases_np(p1a, 13.0, x, t_x, T)
     b = pnbd_expected_purchases_np(p1b, 13.0, x, t_x, T)
     assert np.allclose(a, b, rtol=2e-2), (a, b)
+
+
+def _fit_features(spark, n=600):
+    """Returning customers with many distinct (frequency, recency, t)
+    triples and (frequency, cents) pairs, so the collects hold enough
+    rows for their order to vary."""
+    from pyspark.sql import functions as F
+
+    return spark.range(n).select(
+        F.col("id").alias("customer_id"),
+        (F.col("id") % 17 + 1).alias("frequency"),
+        (F.col("id") % 23 + 3).alias("recency"),
+        (F.col("id") % 5 + 30).alias("t"),
+        F.round(F.col("id") % 41 * 1.37 + 5.0, 2).alias("monetary"),
+    )
+
+
+def test_fused_fit_statistics_match_standalone_fits(spark):
+    """run_clv_logic collects both fits' statistics in one grouping-sets
+    aggregate; the fitted parameters, and so the scores, must be
+    bit-identical to the standalone fits' own collects."""
+    from clv_data_pipeline_spark.operators.clv import fit_statistics
+
+    feats = _fit_features(spark)
+    bg_stats, gg_stats = fit_statistics(feats)
+    assert fit_bgnbd(bg_stats) == fit_bgnbd(feats)
+    assert fit_gamma_gamma(gg_stats) == fit_gamma_gamma(feats)
+
+    model_in = feats.selectExpr(
+        "customer_id", "recency", "t", "frequency", "monetary",
+        "current_timestamp() AS first_purchase",
+        "current_timestamp() AS last_purchase",
+    )
+    cols = ["customer_id", "predicted_purchases", "predicted_avg_value", "clv"]
+    fused = run_clv_logic(model_in).select(*cols).toPandas()
+    alone = score_customers(
+        feats, fit_bgnbd(feats), fit_gamma_gamma(feats)
+    ).select(*cols).toPandas()
+    key = "customer_id"
+    assert fused.sort_values(key, ignore_index=True).equals(
+        alone.sort_values(key, ignore_index=True)
+    )
+
+
+def test_fits_independent_of_collect_order(spark):
+    """The same features give bit-identical parameters at 1 and at 4
+    shuffle partitions, although the statistics arrive in another
+    order (partition coalescing off, so the 4 partitions stay 4)."""
+    from clv_data_pipeline_spark.operators.clv import fit_pareto_nbd
+
+    feats = _fit_features(spark).repartition(3).cache()
+    conf = spark.conf
+    saved = {
+        k: conf.get(k)
+        for k in (
+            "spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled",
+        )
+    }
+    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    runs = []
+    try:
+        for n in (1, 4):
+            conf.set("spark.sql.shuffle.partitions", str(n))
+            order = [
+                tuple(r)
+                for r in feats.groupBy("frequency", "recency", "t")
+                .count()
+                .collect()
+            ]
+            runs.append((
+                order,
+                fit_bgnbd(feats),
+                fit_gamma_gamma(feats),
+                fit_pareto_nbd(feats),
+            ))
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+        feats.unpersist()
+    (order1, *params1), (order4, *params4) = runs
+    assert sorted(order1) == sorted(order4) and order1 != order4
+    assert params1 == params4

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -177,3 +179,62 @@ def test_observed_firewall_metrics_parity_on_dirty_data(spark, tmp_path):
             20, int(metrics["feature_count"]), int(metrics["invalid_count"]),
             list(FIREWALL_REQUIRED_COLUMNS),
         )
+
+
+def test_pipeline_ships_package_to_workers(spark, tmp_path, monkeypatch):
+    """run_pipeline ships the package to the Python workers itself, so
+    the scoring pandas UDF imports it whatever the caller's cwd."""
+    sc = spark.sparkContext
+    monkeypatch.setattr(sc, "_clv_pkg_shipped", False, raising=False)
+    res = run_pipeline(spark, str(tmp_path), run_date="2026-01-01", seed=1)
+    assert res.prediction_rows > 0
+    assert sc._clv_pkg_shipped is True
+
+
+def test_pipeline_unreadable_registry_raises(spark, tmp_path):
+    """Only a missing registry means "no IDs yet"; an unreadable one
+    must raise instead of restarting IDs at 1."""
+    registry = tmp_path / "master_users"
+    registry.mkdir()
+    (registry / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_pipeline(spark, str(tmp_path), run_date="2026-01-01", seed=1,
+                     max_existing_id=None)
+
+
+#: Spark jobs of one warm day, measured on the benchmark's session
+#: (local[4], 4 shuffle partitions) and on the test session
+DAY_JOB_BUDGET = 15
+
+
+def test_pipeline_job_budget_and_observed_counts(spark, tmp_path):
+    """A warm day runs at most DAY_JOB_BUDGET Spark jobs, and the counts
+    the cycle takes from its aggregates and observations (no read-back)
+    equal read-back counts of the tables it wrote."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    base = str(tmp_path)
+    jobs = []
+    try:
+        for i, day in enumerate(["2026-01-01", "2026-01-02", "2026-01-03"]):
+            group = f"pipeline-budget-day{i}"
+            sc.setJobGroup(group, group)
+            try:
+                res = run_pipeline(spark, base, run_date=day, seed=i + 1,
+                                   max_existing_id=None)
+            except ValueError as exc:  # day 1: no returning customers
+                assert i == 0 and str(exc).startswith("No customers")
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.append(len(tracker.getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < jobs[2] <= DAY_JOB_BUDGET, jobs
+
+    staging = spark.read.parquet(os.path.join(base, "transactions_staging"))
+    features = spark.read.parquet(res.features_path)
+    predictions = spark.read.parquet(res.predictions_path)
+    assert res.staging_rows == staging.count()
+    assert res.feature_rows == features.count()
+    assert res.prediction_rows == predictions.count()
+    assert 0 < res.prediction_rows <= res.feature_rows
