@@ -123,6 +123,14 @@ def _gg_nll(
 #: key columns of the fits' sufficient statistics
 _RFT_KEYS = ["frequency", "recency", "t"]
 _GG_KEYS = ["frequency", "monetary"]
+#: decimals monetary is rounded to before the Gamma-Gamma grouping
+MONETARY_SCALE = 2
+
+
+def _returning(features: DataFrame) -> DataFrame:
+    """Returning customers: frequency > 0 and monetary > 0 (reference
+    dags/clv_models.py:53)."""
+    return features.filter((F.col("frequency") > 0) & (F.col("monetary") > 0))
 
 
 def _by_key(stats: pd.DataFrame, keys: list[str]) -> pd.DataFrame:
@@ -133,43 +141,66 @@ def _by_key(stats: pd.DataFrame, keys: list[str]) -> pd.DataFrame:
 
 
 def _rft_stats(features: DataFrame | pd.DataFrame) -> pd.DataFrame:
-    """(frequency, recency, t) triples with count weights ``w``: taken
-    as given from a pandas frame, else grouped and collected."""
-    if isinstance(features, pd.DataFrame):
-        return features
-    return (
-        features.groupBy(*_RFT_KEYS)
-        .agg(F.count("*").alias("w"))
-        .toPandas()
-    )
+    """(frequency, recency, t) triples with count weights ``w``, sorted
+    by key: taken as given from a pandas frame, else grouped and
+    collected."""
+    if not isinstance(features, pd.DataFrame):
+        features = (
+            features.groupBy(*_RFT_KEYS)
+            .agg(F.count("*").alias("w"))
+            .toPandas()
+        )
+    return _by_key(features, _RFT_KEYS)
 
 
-def fit_statistics(
-    returning: DataFrame, monetary_scale: int = 2
-) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Both fits' sufficient statistics in ONE collect: a grouping-sets
+def _gg_stats(
+    features: DataFrame | pd.DataFrame, monetary_scale: int
+) -> pd.DataFrame:
+    """(frequency, rounded monetary) pairs of returning customers with
+    count weights ``w``, sorted by key: taken as given from a pandas
+    frame, else filtered, grouped and collected."""
+    if not isinstance(features, pd.DataFrame):
+        features = (
+            _returning(features)
+            .groupBy(
+                "frequency",
+                F.round(F.col("monetary"), monetary_scale).alias("monetary"),
+            )
+            .agg(F.count("*").alias("w"))
+            .toPandas()
+        )
+    return _by_key(features, _GG_KEYS)
+
+
+def _grouping_id(cols: list[str], kept: list[str]) -> int:
+    """``grouping_id()`` of the grouping set ``kept`` over ``cols``: one
+    bit per column left out of the set, first column highest."""
+    return sum(1 << i for i, c in enumerate(reversed(cols)) if c not in kept)
+
+
+def fit_statistics(features: DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Both fits' sufficient statistics over the returning customers
+    (frequency > 0, monetary > 0) in ONE collect: a grouping-sets
     aggregate over ``(frequency, recency, t)`` and ``(frequency,
-    round(monetary, monetary_scale))``, split on the driver by
+    round(monetary, MONETARY_SCALE))``, split on the driver by
     ``grouping_id()``.  Returns ``(bgnbd_stats, gamma_gamma_stats)``,
     the inputs ``fit_bgnbd`` and ``fit_gamma_gamma`` accept in place of
-    a DataFrame.  ``returning`` must already be filtered to returning
-    customers (frequency > 0, monetary > 0), the filter
-    ``fit_gamma_gamma`` would otherwise apply itself.
+    a DataFrame.
     """
     cols = [*_RFT_KEYS, "monetary"]
     stats = (
-        returning.select(
-            *_RFT_KEYS, F.round("monetary", monetary_scale).alias("monetary")
+        _returning(features)
+        .select(
+            *_RFT_KEYS, F.round("monetary", MONETARY_SCALE).alias("monetary")
         )
         .groupingSets([_RFT_KEYS, _GG_KEYS], *cols)
         .agg(F.count("*").alias("w"), F.grouping_id().alias("_set"))
         .toPandas()
     )
-    # grouping_id() sets one bit per column left out of the set, first
-    # column highest: monetary only -> 0b0001, recency and t -> 0b0110
-    bg = stats.loc[stats["_set"] == 0b0001, [*_RFT_KEYS, "w"]]
-    gg = stats.loc[stats["_set"] == 0b0110, [*_GG_KEYS, "w"]]
-    return bg, gg
+    return tuple(
+        stats.loc[stats["_set"] == _grouping_id(cols, keys), [*keys, "w"]]
+        for keys in (_RFT_KEYS, _GG_KEYS)
+    )
 
 
 def fit_bgnbd(
@@ -189,7 +220,6 @@ def fit_bgnbd(
             "batch yields frequency=0 for everyone — accumulate history "
             "before scoring)"
         )
-    stats = _by_key(stats, _RFT_KEYS)
     x = stats["frequency"].to_numpy(dtype=np.float64)
     t_x = stats["recency"].to_numpy(dtype=np.float64)
     T = stats["t"].to_numpy(dtype=np.float64)
@@ -205,7 +235,7 @@ def fit_bgnbd(
 def fit_gamma_gamma(
     features: DataFrame | pd.DataFrame,
     penalizer: float = PENALIZER,
-    monetary_scale: int = 2,
+    monetary_scale: int = MONETARY_SCALE,
 ) -> GammaGammaParams:
     """M3: Gamma-Gamma MLE over returning customers (frequency > 0,
     monetary > 0 — the reference filters before fitting,
@@ -214,8 +244,8 @@ def fit_gamma_gamma(
     Distributed compression first, same shape as ``fit_bgnbd``: the
     likelihood depends on (frequency, monetary) only, and monetary is
     currency — the pipeline rounds it to cents before scoring
-    (queries/clvq.py ``_features``), so grouping by
-    ``(frequency, round(monetary, 2))`` with count weights is LOSSLESS
+    (queries/clvq.py ``_features``), so grouping by ``(frequency,
+    round(monetary, MONETARY_SCALE))`` with count weights is LOSSLESS
     on the production path and the driver collect is bounded by
     distinct (frequency, cents) pairs, not customers.  At 10⁸
     customers the old 1-row-per-customer ``toPandas()`` was a multi-GB
@@ -226,25 +256,12 @@ def fit_gamma_gamma(
     monetary with more than ``monetary_scale`` decimals get a
     cents-quantized fit — standard currency practice; pass a larger
     scale to trade compression for precision.  ``features`` may also be
-    the already-collected statistics (``fit_statistics``).
+    the already-collected statistics (``fit_statistics``), which are
+    rounded to the default ``MONETARY_SCALE``.
     """
-    if isinstance(features, pd.DataFrame):
-        stats = features
-    else:
-        stats = (
-            features.filter(
-                (F.col("frequency") > 0) & (F.col("monetary") > 0)
-            )
-            .groupBy(
-                "frequency",
-                F.round(F.col("monetary"), monetary_scale).alias("monetary"),
-            )
-            .agg(F.count("*").alias("w"))
-            .toPandas()
-        )
+    stats = _gg_stats(features, monetary_scale)
     if stats.empty:
         raise ValueError("No returning customers to fit Gamma-Gamma on")
-    stats = _by_key(stats, _GG_KEYS)
     x = stats["frequency"].to_numpy(dtype=np.float64)
     m = stats["monetary"].to_numpy(dtype=np.float64)
     w = stats["w"].to_numpy(dtype=np.float64)
@@ -431,10 +448,8 @@ def run_clv_logic(features: DataFrame) -> DataFrame:
         raise ValueError(
             f"Bad Schema: expected {MODEL_INPUT_COLUMNS}, got {list(features.columns)}"
         )
-    returning = features.filter(
-        (F.col("frequency") > 0) & (F.col("monetary") > 0)
-    )
-    bg_stats, gg_stats = fit_statistics(returning)
+    returning = _returning(features)
+    bg_stats, gg_stats = fit_statistics(features)
     # an empty input has no statistics, so only then can it be empty
     if bg_stats.empty and features.isEmpty():
         raise ValueError("Dataframe is empty")
@@ -551,7 +566,6 @@ def fit_pareto_nbd(
     stats = _rft_stats(features)
     if stats.empty:
         raise ValueError("No customers to fit Pareto/NBD on")
-    stats = _by_key(stats, _RFT_KEYS)
     x = stats["frequency"].to_numpy(dtype=np.float64)
     t_x = stats["recency"].to_numpy(dtype=np.float64)
     T = stats["t"].to_numpy(dtype=np.float64)

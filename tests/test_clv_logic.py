@@ -302,6 +302,20 @@ def test_fused_fit_statistics_match_standalone_fits(spark):
     assert fit_bgnbd(bg_stats) == fit_bgnbd(feats)
     assert fit_gamma_gamma(gg_stats) == fit_gamma_gamma(feats)
 
+    # non-returning customers (frequency 0 or monetary 0) do not enter
+    # the statistics, however the input is filtered
+    extra = feats.limit(2).selectExpr(
+        "customer_id", "0 AS frequency", "recency", "t", "monetary"
+    ).union(feats.limit(2).selectExpr(
+        "customer_id", "frequency", "recency", "t", "0.0 AS monetary"
+    ))
+    for got, want in zip(
+        fit_statistics(feats.union(extra)), (bg_stats, gg_stats)
+    ):
+        assert got.sort_values(list(got.columns), ignore_index=True).equals(
+            want.sort_values(list(want.columns), ignore_index=True)
+        )
+
     model_in = feats.selectExpr(
         "customer_id", "recency", "t", "frequency", "monetary",
         "current_timestamp() AS first_purchase",
