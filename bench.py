@@ -271,141 +271,15 @@ HEADLINE = [
     "q_knn_label_portable",
 ]
 
-#: Frozen comparable subsets — apples-to-apples totals across rounds.
-#: COMPARABLE_R3: the 22 queries benched every round since r3 (the
-#: set VERDICT r4 tracked at 14.14 s vs the ~28 s round-1 baseline).
-#: COMPARABLE_R4: the full 55-query r4 headline list, frozen so later
-#: rounds' additions can't hide regressions in round-4 operators.
-#: Append-only: new rounds may add new frozen sets, never edit these.
-COMPARABLE_R3 = (
-    "q_rfm", "q_tpch_q1", "q_tpch_q3", "q_tpch_q5", "q_tpch_q8",
-    "q_tpch_q17", "q_window_rank", "q_moving_avg", "q_asof_join",
-    "q_range_join", "q_sessionize", "q_events_daily", "q_dedup_exact",
-    "q_minhash_dedup", "q_simhash", "q_cosine_topk", "q_ann_lsh",
-    "q_ann_ivf", "q_text_stats", "q_lang_id", "q_quality_score",
-    "q_clv_scores",
-)
-COMPARABLE_R4 = (
-    "q_rfm", "q_tpch_q1", "q_tpch_q3", "q_tpch_q5", "q_tpch_q8",
-    "q_tpch_q17", "q_window_rank", "q_moving_avg", "q_asof_join",
-    "q_range_join", "q_sessionize", "q_events_daily", "q_dedup_exact",
-    "q_minhash_dedup", "q_simhash", "q_cosine_topk", "q_ann_lsh",
-    "q_ann_ivf", "q_text_stats", "q_lang_id", "q_quality_score",
-    "q_quality_classifier", "q_bpe_tokenize", "q_dedup_lines",
-    "q_corpus_curate", "q_dedup_incremental", "q_minhash_incremental",
-    "q_decontaminate_semantic", "q_dedup_embedding_incremental",
-    "q_knn_label_ann", "q_bloom_join", "q_ann_pq", "q_pca_project",
-    "q_communities", "q_perplexity_bigram", "q_image_features",
-    "q_audio_features", "q_embedding_drift", "q_attribution",
-    "q_tree_paths", "q_media_curate", "q_hll_merge", "q_market_basket",
-    "q_interpolate", "q_sessionize_incremental", "q_feature_hash",
-    "q_rolling_distinct", "q_bucketed_join", "q_erasure",
-    "q_minhash_weighted", "q_entity_resolution", "q_image_dedup",
-    "q_rank_fusion", "q_bootstrap", "q_clv_scores",
-)
-#: COMPARABLE_R5: the full 109-query r5 headline list (as of aef9751),
-#: frozen before any round-6 additions so those can't hide regressions
-#: in round-5 operators.
-COMPARABLE_R5 = (
-    "q_rfm", "q_tpch_q1", "q_tpch_q3", "q_tpch_q5", "q_tpch_q8",
-    "q_tpch_q17", "q_window_rank", "q_moving_avg", "q_asof_join",
-    "q_range_join", "q_sessionize", "q_events_daily",
-    "q_dedup_exact", "q_minhash_dedup", "q_simhash",
-    "q_cosine_topk", "q_ann_lsh", "q_ann_ivf", "q_text_stats",
-    "q_lang_id", "q_quality_score", "q_quality_classifier",
-    "q_bpe_tokenize", "q_dedup_lines", "q_corpus_curate",
-    "q_dedup_incremental", "q_minhash_incremental",
-    "q_decontaminate_semantic", "q_dedup_embedding_incremental",
-    "q_knn_label_ann", "q_bloom_join", "q_ann_pq", "q_pca_project",
-    "q_communities", "q_perplexity_bigram", "q_image_features",
-    "q_audio_features", "q_embedding_drift", "q_attribution",
-    "q_tree_paths", "q_media_curate", "q_hll_merge",
-    "q_market_basket", "q_interpolate", "q_sessionize_incremental",
-    "q_feature_hash", "q_rolling_distinct", "q_bucketed_join",
-    "q_erasure", "q_minhash_weighted", "q_entity_resolution",
-    "q_image_dedup", "q_rank_fusion", "q_bootstrap", "q_clv_scores",
-    "q_small_files", "q_ann_pq_incremental", "q_scd2_stream",
-    "q_gopher_rules", "q_dsir", "q_t_closeness",
-    "q_gopher_repetition", "q_mix_budget", "q_normalize_ladder",
-    "q_group_split", "q_naive_bayes", "q_ann_ivf_pq",
-    "q_stream_mix", "q_assign_ids", "q_bm25_retrieval",
-    "q_padding_audit", "q_curriculum", "q_semdedup",
-    "q_assign_ids_incremental", "q_lateral_topk",
-    "q_unigram_tokenize", "q_prefix_sum", "q_adamic_adar",
-    "q_late_events", "q_calibration", "q_quantiles_incremental",
-    "q_attribution_linear", "q_auc_sliced", "q_word_vectors",
-    "q_churn_labels", "q_conversion_lag", "q_point_in_time",
-    "q_temperature_mix", "q_tokenizer_fertility", "q_semdedup_eval",
-    "q_recursive_cte", "q_sql_udf", "q_shard_manifest",
-    "q_pareto_nbd", "q_clv_compare", "q_dedup_keep_best",
-    "q_join_explosion_audit", "q_target_encode", "q_ks_test",
-    "q_mannwhitney", "q_isotonic_calibration", "q_mmr_diversify",
-    "q_stream_assign_ids", "q_bootstrap_auc", "q_grouped_bootstrap",
-    "q_stream_quantiles", "q_als_recommend", "q_als_eval",
-    "q_best_split",
-)
-#: COMPARABLE_R6: the full 169-query round-6 headline list, frozen
-#: before any round-7 additions so those cannot hide regressions in
-#: round-6 operators.
-COMPARABLE_R6 = (
-    "q_rfm", "q_tpch_q1", "q_tpch_q3",
-    "q_tpch_q5", "q_tpch_q8", "q_tpch_q17",
-    "q_window_rank", "q_moving_avg", "q_asof_join",
-    "q_range_join", "q_sessionize", "q_events_daily",
-    "q_dedup_exact", "q_minhash_dedup", "q_simhash",
-    "q_cosine_topk", "q_ann_lsh", "q_ann_ivf",
-    "q_text_stats", "q_lang_id", "q_quality_score",
-    "q_quality_classifier", "q_bpe_tokenize", "q_dedup_lines",
-    "q_corpus_curate", "q_dedup_incremental", "q_minhash_incremental",
-    "q_decontaminate_semantic", "q_dedup_embedding_incremental", "q_knn_label_ann",
-    "q_bloom_join", "q_ann_pq", "q_pca_project",
-    "q_communities", "q_perplexity_bigram", "q_image_features",
-    "q_audio_features", "q_embedding_drift", "q_attribution",
-    "q_tree_paths", "q_media_curate", "q_hll_merge",
-    "q_market_basket", "q_interpolate", "q_sessionize_incremental",
-    "q_feature_hash", "q_rolling_distinct", "q_bucketed_join",
-    "q_erasure", "q_minhash_weighted", "q_entity_resolution",
-    "q_image_dedup", "q_rank_fusion", "q_bootstrap",
-    "q_clv_scores", "q_small_files", "q_ann_pq_incremental",
-    "q_scd2_stream", "q_gopher_rules", "q_dsir",
-    "q_t_closeness", "q_gopher_repetition", "q_mix_budget",
-    "q_normalize_ladder", "q_group_split", "q_naive_bayes",
-    "q_ann_ivf_pq", "q_stream_mix", "q_assign_ids",
-    "q_bm25_retrieval", "q_padding_audit", "q_curriculum",
-    "q_semdedup", "q_assign_ids_incremental", "q_lateral_topk",
-    "q_unigram_tokenize", "q_prefix_sum", "q_adamic_adar",
-    "q_late_events", "q_calibration", "q_quantiles_incremental",
-    "q_attribution_linear", "q_auc_sliced", "q_word_vectors",
-    "q_churn_labels", "q_conversion_lag", "q_point_in_time",
-    "q_temperature_mix", "q_tokenizer_fertility", "q_semdedup_eval",
-    "q_recursive_cte", "q_sql_udf", "q_shard_manifest",
-    "q_pareto_nbd", "q_clv_compare", "q_dedup_keep_best",
-    "q_join_explosion_audit", "q_target_encode", "q_ks_test",
-    "q_mannwhitney", "q_isotonic_calibration", "q_mmr_diversify",
-    "q_stream_assign_ids", "q_bootstrap_auc", "q_grouped_bootstrap",
-    "q_stream_quantiles", "q_als_recommend", "q_als_eval",
-    "q_best_split", "q_dedup_substring", "q_tpch_q9_derived",
-    "q_tpch_q21_derived", "q_bradley_terry", "q_logreg",
-    "q_skyline", "q_bitext_mining", "q_adaboost_stumps",
-    "q_holt_winters", "q_dedup_substring_incremental", "q_markov_attribution",
-    "q_interval_join", "q_label_noise", "q_lm_generate",
-    "q_stream_dedup_substring", "q_observe", "q_null_safe_join",
-    "q_tpch_q2_derived", "q_tpch_q11_derived", "q_tpch_q16_derived",
-    "q_tpch_q20_derived", "q_dp_quantiles", "q_mahalanobis",
-    "q_msprt", "q_binary_ingest", "q_ridge",
-    "q_woe_iv", "q_ndcg", "q_did",
-    "q_shapley_attribution", "q_conformal", "q_changepoint",
-    "q_item_cf", "q_jl_projection", "q_srm",
-    "q_rake", "q_power_analysis", "q_stratified_ate",
-    "q_ucb_bandit", "q_ipf_raking", "q_fellegi_sunter",
-    "q_active_learning", "q_kneser_ney", "q_skipgram_pairs",
-    "q_spearman", "q_geometric_median", "q_tail_index",
-    "q_segment_migration", "q_freshness", "q_lift_curve",
-    "q_price_elasticity", "q_offpolicy_eval", "q_range_window",
-    "q_dbscan", "q_growth_accounting", "q_threshold_tuning",
-    "q_rec_coverage", "q_wasserstein", "q_covariate_balance",
-    "q_qte",
-)
+#: Frozen comparable subsets of HEADLINE (append-only, so each is a
+#: fixed prefix): apples-to-apples totals across rounds that later
+#: additions cannot dilute.  COMPARABLE_R3 is the 22 queries benched
+#: every round since r3; R4/R5/R6 are the full headline lists of those
+#: rounds.  New rounds may add new frozen sets, never edit these.
+COMPARABLE_R3 = (*HEADLINE[:21], "q_clv_scores")
+COMPARABLE_R4 = tuple(HEADLINE[:55])
+COMPARABLE_R5 = tuple(HEADLINE[:109])
+COMPARABLE_R6 = tuple(HEADLINE[:169])
 
 
 #: Queries whose FIRST run builds content-keyed derived artifacts

@@ -2797,7 +2797,12 @@ def _nb_fused_correct(
                     )
                 ).alias(f"s_{mi}_{ci}")
             )
-    g = joined.groupBy(*key_cols).agg(*aggs)
+    # every model empty: no score columns, and agg() needs at least one
+    g = (
+        joined.groupBy(*key_cols).agg(*aggs)
+        if aggs
+        else ttest.select(*key_cols).distinct()
+    )
 
     sel = [F.col(c) for c in key_cols]
     for mi, (tag, classes, lp0, _lpo, _lp) in enumerate(metas):

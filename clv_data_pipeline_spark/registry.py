@@ -74,512 +74,6 @@ class RegisteredQuery:
 
 _REGISTRY: dict[str, RegisteredQuery] = {}
 
-#: Queries already hash-verified by the driver in round 1
-#: (``CORRECTNESS_r01.json`` holds exactly the first 50 registrations —
-#: the driver works through ``queries()`` in dict order with a bounded
-#: budget).  Registration order is therefore a scheduling decision:
-#: still-unverified queries go FIRST so each round's artifact extends
-#: hard coverage instead of re-proving round 1.
-_R1_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_gamma_gamma_value", "q_prob_alive", "q_predicted_purchases",
-        "q_clv_scores", "q_rfm", "q_rfm_window", "q_scan_full", "q_project",
-        "q_total_purchase", "q_filter_returning", "q_sanity_count",
-        "q_ratio_counts", "q_max_id", "q_flags", "q_clip", "q_cast",
-        "q_avg_value", "q_flag_sums", "q_scan_parquet", "q_avg_clv",
-        "q_clv_formula", "q_rfm_salted", "q_rfm_incremental",
-        "q_csv_roundtrip", "q_jsonl_roundtrip", "q_sample",
-        "q_join_features_preds", "q_orc_roundtrip", "q_upsert", "q_tpch_q6",
-        "q_json_extract", "q_string_funcs", "q_percentiles", "q_rollup",
-        "q_pivot", "q_semi_join", "q_anti_join", "q_intersect", "q_except",
-        "q_explode", "q_cube", "q_sql_rfm", "q_approx_distinct",
-        "q_grouping_sets", "q_ntile_lead", "q_corr_subquery",
-        "q_approx_percentiles", "q_array_funcs", "q_percent_rank", "q_corr",
-    }
-)
-
-
-#: Queries the driver checked in round 2 (``CORRECTNESS_r02.json``):
-#: 39 green + 6 rows-only-by-contract.  The 5 that FAILED in r2 (the
-#: NTZ breakage: q_sessionize q_moving_avg q_event_gaps q_asof_join
-#: q_range_join) are deliberately NOT here — they must re-verify first
-#: in round 3 now that the fix landed.
-_R2_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_tpch_q1", "q_tpch_q3", "q_tpch_q4", "q_tpch_q5", "q_tpch_q7",
-        "q_tpch_q8", "q_tpch_q10", "q_tpch_q12", "q_tpch_q13", "q_tpch_q14",
-        "q_tpch_q15", "q_tpch_q17", "q_tpch_q18", "q_tpch_q19", "q_tpch_q22",
-        "q_topk", "q_window_rank", "q_union", "q_distinct", "q_stream_daily",
-        "q_events_daily", "q_dedup_exact", "q_dedup_clusters", "q_lang_id",
-        "q_text_stats", "q_quality_score", "q_fingerprint", "q_ngram_jaccard",
-        "q_vocab_top", "q_chunk_documents", "q_pack_documents",
-        "q_multimodal_meta", "q_pii_scrub", "q_train_split", "q_repetition",
-        "q_source_mix", "q_decontaminate", "q_set_similarity_join",
-        "q_cosine_topk", "q_minhash_dedup", "q_minhash_candidates",
-        "q_simhash", "q_frame_sample", "q_minhash_clusters", "q_ann_lsh",
-    }
-)
-
-#: Queries the driver checked in round 3 (``CORRECTNESS_r03.json``):
-#: 47 hash-green + 3 rows-only-by-contract (q_ann_ivf q_dedup_embedding
-#: q_semantic_clusters).  All 50 sampled names count as round-3
-#: freshness for rotation purposes.
-_R3_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_anomaly_days", "q_argmax", "q_asof_join", "q_bigram_counts",
-        "q_bm25", "q_centroids", "q_cogroup_reconcile", "q_concurrency",
-        "q_date_funcs", "q_embedding_class_sim", "q_event_gaps",
-        "q_event_sequences", "q_funnel", "q_heavy_hitters", "q_histogram",
-        "q_knn_label", "q_mapinarrow", "q_moving_avg", "q_pagerank",
-        "q_profile", "q_python_datasource", "q_quantize_embeddings",
-        "q_range_join", "q_retention_cohorts", "q_scd2", "q_scd2_merge",
-        "q_sessionize", "q_skew_report", "q_sliding_windows",
-        "q_source_report", "q_stratified_sample", "q_tfidf_top_terms",
-        "q_token_entropy", "q_topk", "q_tpch_q1", "q_tpch_q3", "q_tpch_q5",
-        "q_transitions", "q_udtf_sentences", "q_union", "q_unpivot",
-        "q_variant_extract", "q_window_dedup", "q_window_rank",
-        "q_winsorize", "q_zorder", "q_zscore", "q_ann_ivf",
-        "q_dedup_embedding", "q_semantic_clusters",
-    }
-)
-
-#: Queries the driver checked in round 4 (``CORRECTNESS_r04.json``):
-#: all 50 sampled names green (45 hash-match + 5 rows-only-by-contract).
-#: Folding them into the tiers keeps round 5's budget pointed at the
-#: 41 late-round-4 registrations the driver has never seen.
-_R4_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_apply_changes", "q_attribution", "q_audio_dedup",
-        "q_audio_features", "q_bloom_join", "q_bucketed_join",
-        "q_burstiness", "q_cdc_chunks", "q_chisq", "q_communities",
-        "q_containment", "q_corpus_curate", "q_crosscorr", "q_cusum",
-        "q_decontaminate_semantic", "q_dedup_chunks", "q_dedup_incremental",
-        "q_dedup_lines", "q_embedding_drift", "q_ewma", "q_expectations",
-        "q_forecast_backtest", "q_full_outer", "q_hard_negatives",
-        "q_image_dedup", "q_image_features", "q_image_resize",
-        "q_interpolate", "q_k_anonymity", "q_media_curate",
-        "q_minhash_weighted", "q_ngram_novelty", "q_rfm_segments",
-        "q_robust_trend", "q_salted_join", "q_sample_exact_n",
-        "q_schema_evolution", "q_seasonality", "q_session_funnel",
-        "q_sessionize_incremental", "q_snapshot_diff", "q_stream_dedup",
-        "q_stream_join", "q_stream_rfm", "q_stream_sessions", "q_survival",
-        "q_tree_depth_doubling", "q_tree_paths", "q_vocab_oov", "q_zipf_fit",
-    }
-)
-
-#: Queries the driver checked in round 5 (``CORRECTNESS_r05.json``):
-#: all 50 sampled names green (37 hash-match + 13 rows-only-by-contract,
-#: 0 failures).  Folding them into the tiers points round 6's budget at
-#: the 45 round-5 registrations the driver has never seen.
-_R5_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_ab_test", "q_ann_pq", "q_ann_recall", "q_applyinarrow",
-        "q_auc", "q_benford", "q_bootstrap", "q_bpe_merges",
-        "q_bpe_tokenize", "q_cohort_ltv", "q_communities_ann", "q_cuped",
-        "q_curriculum", "q_dedup_embedding_incremental",
-        "q_dedup_keep_best", "q_dp_counts", "q_entity_resolution",
-        "q_erasure", "q_feature_hash", "q_fuzzy_join",
-        "q_gopher_repetition", "q_gopher_rules", "q_hll_merge", "q_kcore",
-        "q_knn_label_ann", "q_l_diversity", "q_lorenz_gini",
-        "q_market_basket", "q_minhash_eval", "q_minhash_incremental",
-        "q_mix_budget", "q_normalize_ladder", "q_padding_audit",
-        "q_pca_incremental", "q_pca_project", "q_pca_variance",
-        "q_perplexity", "q_perplexity_bigram", "q_pmi", "q_psi_drift",
-        "q_quality_classifier", "q_rank_fusion", "q_robust_z",
-        "q_rolling_distinct", "q_stream_mix", "q_stream_pyds",
-        "q_temperature_mix", "q_trend", "q_triangles", "q_weighted_sample",
-    }
-)
-
-#: Queries the driver checked in round 6 (``CORRECTNESS_r06.json``):
-#: 49 of 50 sampled names green (33 hash-match + 16 rows-only-by-
-#: contract).  The 50th, ``q_word_vectors``, ERRORED in the driver's
-#: canonicalizer (array column) — it is deliberately NOT listed here so
-#: it stays in tier 0 and re-samples first in round 7 with the fixed
-#: string-vector output.
-_R6_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_adamic_adar", "q_als_eval", "q_als_recommend", "q_ann_ivf_pq",
-        "q_ann_pq_incremental", "q_assign_ids", "q_assign_ids_incremental",
-        "q_attribution_linear", "q_auc_sliced", "q_best_split",
-        "q_bitext_mining", "q_bm25_retrieval", "q_bootstrap_auc",
-        "q_calibration", "q_churn_labels", "q_clv_compare",
-        "q_conversion_lag", "q_dedup_substring",
-        "q_dedup_substring_incremental", "q_dsir", "q_group_split",
-        "q_grouped_bootstrap", "q_isotonic_calibration",
-        "q_join_explosion_audit", "q_ks_test", "q_late_events",
-        "q_lateral_topk", "q_mannwhitney", "q_mmr_diversify",
-        "q_naive_bayes", "q_pareto_nbd", "q_point_in_time", "q_prefix_sum",
-        "q_quantiles_incremental", "q_rake", "q_recursive_cte",
-        "q_scd2_stream", "q_semdedup", "q_semdedup_eval",
-        "q_shard_manifest", "q_small_files", "q_sql_udf",
-        "q_stream_assign_ids", "q_stream_dedup_substring",
-        "q_stream_quantiles", "q_t_closeness", "q_target_encode",
-        "q_tokenizer_fertility", "q_unigram_tokenize",
-    }
-)
-
-_VERIFIED: frozenset[str]  # assigned below _R7_VERIFIED
-
-#: Queries REGISTERED during round 5 itself.  VERDICT r4's top ask is
-#: that the 41 registered-but-never-driver-sampled round-4 names all
-#: land in CORRECTNESS_r05; new round-5 registrations must not crowd
-#: them out of the ~50-name budget, so within tier 0 they sort AFTER
-#: that backlog (they are locally oracle/pytest-verified and can take
-#: their driver row in round 6 if the budget cuts).
-_R5_NEW: frozenset[str] = frozenset(
-    {
-        "q_small_files", "q_ann_pq_incremental", "q_scd2_stream",
-        "q_gopher_rules", "q_dsir", "q_t_closeness", "q_gopher_repetition",
-        "q_mix_budget", "q_normalize_ladder", "q_group_split",
-        "q_naive_bayes", "q_ann_ivf_pq", "q_stream_mix",
-        "q_assign_ids", "q_bm25_retrieval", "q_padding_audit",
-        "q_curriculum", "q_semdedup", "q_assign_ids_incremental",
-        "q_lateral_topk", "q_unigram_tokenize", "q_prefix_sum",
-        "q_adamic_adar", "q_late_events", "q_calibration",
-        "q_quantiles_incremental", "q_attribution_linear",
-        "q_auc_sliced", "q_word_vectors", "q_churn_labels",
-        "q_conversion_lag", "q_point_in_time", "q_temperature_mix",
-        "q_tokenizer_fertility", "q_semdedup_eval", "q_recursive_cte",
-        "q_sql_udf", "q_shard_manifest", "q_pareto_nbd",
-        "q_clv_compare", "q_dedup_keep_best", "q_join_explosion_audit",
-        "q_target_encode", "q_ks_test", "q_mannwhitney",
-        "q_isotonic_calibration", "q_mmr_diversify",
-        "q_stream_assign_ids", "q_bootstrap_auc", "q_grouped_bootstrap",
-        "q_stream_quantiles", "q_als_recommend", "q_als_eval",
-        "q_best_split",
-    }
-)
-
-
-#: Queries REGISTERED during round 6.  VERDICT r5's top ask: the 45
-#: round-5 registrations that never got a driver row must fill
-#: CORRECTNESS_r06 first; round-6 additions sort behind them within
-#: tier 0 and take their driver row in round 7 if the budget cuts.
-_R6_NEW: set[str] = {
-    "q_dedup_substring", "q_bradley_terry", "q_logreg",
-    "q_skyline", "q_null_safe_join", "q_bitext_mining",
-    "q_adaboost_stumps", "q_holt_winters",
-    "q_dedup_substring_incremental", "q_markov_attribution",
-    "q_interval_join", "q_label_noise", "q_lm_generate",
-    "q_stream_dedup_substring", "q_observe", "q_dp_quantiles",
-    "q_mahalanobis", "q_msprt",
-    "q_tpch_q2_derived", "q_tpch_q9_derived", "q_tpch_q11_derived",
-    "q_tpch_q16_derived", "q_tpch_q20_derived", "q_tpch_q21_derived",
-    "q_binary_ingest", "q_ridge", "q_woe_iv", "q_ndcg", "q_did",
-    "q_shapley_attribution", "q_conformal", "q_changepoint",
-    "q_item_cf", "q_jl_projection", "q_srm", "q_rake",
-    "q_power_analysis", "q_stratified_ate", "q_ucb_bandit",
-    "q_ipf_raking", "q_fellegi_sunter", "q_active_learning",
-    "q_kneser_ney", "q_skipgram_pairs", "q_spearman",
-    "q_geometric_median", "q_tail_index", "q_segment_migration",
-    "q_freshness", "q_lift_curve", "q_price_elasticity",
-    "q_offpolicy_eval", "q_range_window", "q_dbscan",
-    "q_growth_accounting", "q_threshold_tuning", "q_rec_coverage",
-    "q_wasserstein", "q_covariate_balance", "q_qte",
-    "q_experiment_readout", "q_random_walks", "q_modularity",
-    "q_stream_drift", "q_item_cf_incremental", "q_hits",
-    "q_abc_analysis", "q_causal_impact",
-}
-
-
-#: Queries REGISTERED during round 7.  VERDICT r6's top ask: the 63
-#: round-6 registrations that never got a driver row (plus the fixed
-#: q_word_vectors) must fill CORRECTNESS_r07 first; round-7 additions
-#: sort behind them within tier 0 and take their driver row in round 8
-#: if the budget cuts.
-_R7_NEW: set[str] = {
-    "q_iv_2sls", "q_rdd", "q_propensity_matching", "q_stl_decompose",
-    "q_bayes_ab", "q_bh_fdr", "q_stream_topk", "q_filter_funnel",
-    "q_simpson", "q_mediation", "q_stream_funnel", "q_anova",
-    "q_dataset_card", "q_coreset", "q_overdispersion", "q_price_index",
-    "q_kmeans", "q_icc_deff", "q_gaussian_mixture", "q_stream_mixture",
-    "q_learning_curve", "q_uplift", "q_metric_decomposition",
-    "q_cross_validation", "q_good_turing", "q_heaps_law",
-    "q_capture_recapture", "q_markov_ltv", "q_hhi", "q_evalue",
-}
-
-
-#: Queries the driver checked in round 7 (``CORRECTNESS_r07.json``):
-#: all 50 sampled names hash-green, 0 errors — the first fully-clean
-#: driver sample since round 4.  Folding them in points round 8's
-#: budget at the 44 registrations the driver has never seen plus the
-#: graduated-but-stale re-sample tier below.
-_R7_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_ndcg", "q_jl_projection", "q_geometric_median", "q_modularity",
-        "q_observe", "q_binary_ingest", "q_freshness", "q_lift_curve",
-        "q_holt_winters", "q_markov_attribution", "q_interval_join",
-        "q_range_window", "q_bradley_terry", "q_logreg", "q_skyline",
-        "q_null_safe_join", "q_adaboost_stumps", "q_label_noise",
-        "q_lm_generate", "q_dp_quantiles", "q_mahalanobis", "q_msprt",
-        "q_ridge", "q_woe_iv", "q_did", "q_shapley_attribution",
-        "q_conformal", "q_changepoint", "q_item_cf", "q_srm",
-        "q_power_analysis", "q_stratified_ate", "q_ucb_bandit",
-        "q_ipf_raking", "q_active_learning", "q_spearman", "q_tail_index",
-        "q_segment_migration", "q_price_elasticity", "q_offpolicy_eval",
-        "q_growth_accounting", "q_threshold_tuning", "q_wasserstein",
-        "q_covariate_balance", "q_qte", "q_experiment_readout",
-        "q_abc_analysis", "q_causal_impact", "q_stream_drift",
-        "q_word_vectors",
-    }
-)
-
-#: Queries the driver checked in round 8 (``CORRECTNESS_r08.json``):
-#: all 50 sampled names hash-green, 0 errors — the second consecutive
-#: fully-clean driver sample.  Folding them in (VERDICT r8 "do this"
-#: item 1) points round 9's budget at the 9 graduated-but-stale names
-#: below instead of re-verifying fresh greens.
-_R8_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_filter_funnel", "q_dataset_card", "q_good_turing",
-        "q_heaps_law", "q_coreset", "q_stream_topk", "q_stream_funnel",
-        "q_stl_decompose", "q_iv_2sls", "q_rdd", "q_propensity_matching",
-        "q_bayes_ab", "q_bh_fdr", "q_simpson", "q_mediation", "q_anova",
-        "q_overdispersion", "q_price_index", "q_icc_deff",
-        "q_gaussian_mixture", "q_stream_mixture", "q_uplift",
-        "q_metric_decomposition", "q_capture_recapture", "q_markov_ltv",
-        "q_hhi", "q_evalue", "q_kneser_ney", "q_skipgram_pairs",
-        "q_rec_coverage", "q_item_cf_incremental", "q_hits",
-        "q_learning_curve", "q_cross_validation", "q_fellegi_sunter",
-        "q_dbscan", "q_random_walks", "q_kmeans", "q_tpch_q2_derived",
-        "q_tpch_q9_derived", "q_tpch_q11_derived", "q_tpch_q16_derived",
-        "q_tpch_q20_derived", "q_tpch_q21_derived", "q_ann_lsh_portable",
-        "q_csv_roundtrip", "q_jsonl_roundtrip", "q_orc_roundtrip",
-        "q_isotonic_calibration", "q_mmr_diversify",
-    }
-)
-
-#: Queries that GRADUATED from rows-only to oracle-backed after their
-#: last driver sample (VERDICT r7/r8 "what's missing"): the driver row
-#: on file is a weak rows-only check but the registry now carries a
-#: full oracle.  They re-sample ahead of every verified tier (but
-#: behind any never-sampled backlog) so the next CORRECTNESS file
-#: records the hash-match.  The round-10 trio (q_pca_project,
-#: q_als_recommend, q_als_eval) got green r10 rows and moved to
-#: _R10_VERIFIED.  Listed in judge-priority order — the driver budget
-#: cuts from the back.  The round-11 pair (q_pareto_nbd,
-#: q_pca_incremental) got green r11 rows and moved to _R11_VERIFIED.
-_GRADUATED_STALE: tuple[str, ...] = (
-    # (empty since round 13: the round-12 graduations q_clv_scores and
-    # q_dedup_substring_eval both came back hash-green in the driver's
-    # r12 sample — CORRECTNESS_r12.json — and folded into
-    # _R12_VERIFIED.)
-)
-
-#: Queries whose BEHAVIOR (output values or load-bearing constants)
-#: changed after their last driver sample (ADVICE r11 item 2: the
-#: _GRADUATED_STALE idea generalized — a changed query must not keep a
-#: stale "verified" status).  Same tier-0.5 priority as graduations:
-#: re-sample ahead of every verified cohort, behind the never-sampled
-#: backlog.  Drop a name once a later CORRECTNESS round re-greens it.
-_CHANGED_SINCE_SAMPLE: tuple[str, ...] = (
-    # (the round-12 entries — q_lsh_param_sweep, the fused-NB trio,
-    # q_splade_retrieval, q_simhash — all came back hash-green in the
-    # driver's r12 sample and folded into _R12_VERIFIED.)
-    #
-    # round-12 plan change missed by the r12 list (ADVICE r12 item 1):
-    # q_word_vectors gained three persist() materialization points —
-    # output unchanged (local oracle green) but the executed plan
-    # differs from what the driver last verified.
-    "q_word_vectors",
-    # round-13 plan-only changes (outputs unchanged — every one
-    # re-verified hash-identical against the DuckDB oracle in a
-    # driver-style session this round): splade's materialized
-    # inverted index; broadcast hints / inline norms in the reranker
-    # and the portable ANN twins; q_dbscan's pair-plan broadcasts;
-    # item-CF's union+group-sum state merge; the streaming trio's
-    # trigger trims and one-file state commits.
-    "q_splade_retrieval",
-    "q_rerank_cross",
-    "q_ann_lsh_portable",
-    "q_ann_ivf_portable",
-    "q_ann_pq_portable",
-    "q_knn_label_portable",
-    "q_dbscan",
-    "q_item_cf_incremental",
-    "q_stream_pair_curate",
-    "q_stream_dedup_substring",
-    "q_stream_semdedup",
-)
-
-#: Queries the driver checked in round 9 (``CORRECTNESS_r09.json``):
-#: 49 of 50 sampled names hash-green, the 50th is the
-#: rows-only-by-design ``q_dedup_substring_eval`` which executed clean
-#: — the third consecutive fully-clean driver sample.  Folding them in
-#: (VERDICT r9 "do this" item 1) points round 10's budget at the
-#: r1–r5-stale cohorts plus this round's graduations.
-_R9_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_ann_ivf_portable", "q_ann_pq_portable", "q_anti_join",
-        "q_approx_distinct", "q_approx_percentiles", "q_array_funcs",
-        "q_bpe_merges", "q_bpe_tokenize", "q_clv_compare", "q_corr",
-        "q_corr_subquery", "q_cube", "q_data_shapley",
-        "q_dedup_substring_eval", "q_domain_reweight", "q_dp_histogram",
-        "q_except", "q_explode", "q_frame_sample", "q_grouping_sets",
-        "q_hll_merge", "q_intersect", "q_json_extract",
-        "q_knn_label_portable", "q_min_pieces_tokenize",
-        "q_minhash_candidates", "q_minhash_clusters", "q_ntile_lead",
-        "q_pca_portable", "q_pca_variance", "q_percent_rank",
-        "q_percentiles", "q_pivot", "q_predicted_purchases", "q_rfm",
-        "q_rfm_window", "q_rollup", "q_sample", "q_scan_full",
-        "q_self_influence", "q_semdedup_portable", "q_semi_join",
-        "q_simhash", "q_sql_rfm", "q_stream_semdedup", "q_string_funcs",
-        "q_tokenizer_fertility", "q_topic_anchors", "q_tpch_q6",
-        "q_unigram_tokenize",
-    }
-)
-
-#: Queries the driver checked in round 10 (``CORRECTNESS_r10.json``):
-#: 49 of 50 sampled names hash-green, the 50th is the
-#: rows-only-by-contract ``q_clv_scores`` which executed clean (150
-#: rows) — the fourth consecutive fully-clean driver sample.  Folding
-#: them in (VERDICT r10 "do this" item 1) points round 11's budget at
-#: the r2–r5-stale cohorts plus this round's graduations.
-_R10_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_lsh_param_sweep", "q_dedup_substring_chars", "q_rerank_cross",
-        "q_pca_project", "q_als_recommend", "q_als_eval", "q_project",
-        "q_total_purchase", "q_filter_returning", "q_sanity_count",
-        "q_ratio_counts", "q_max_id", "q_flags", "q_clip", "q_cast",
-        "q_avg_value", "q_flag_sums", "q_scan_parquet", "q_avg_clv",
-        "q_clv_formula", "q_rfm_salted", "q_rfm_incremental",
-        "q_join_features_preds", "q_upsert", "q_gamma_gamma_value",
-        "q_prob_alive", "q_distinct", "q_stream_daily", "q_events_daily",
-        "q_tpch_q10", "q_tpch_q18", "q_tpch_q12", "q_tpch_q14",
-        "q_tpch_q4", "q_tpch_q13", "q_tpch_q17", "q_tpch_q19",
-        "q_tpch_q7", "q_tpch_q22", "q_tpch_q8", "q_tpch_q15",
-        "q_dedup_exact", "q_dedup_clusters", "q_lang_id", "q_text_stats",
-        "q_quality_score", "q_fingerprint", "q_ngram_jaccard",
-        "q_vocab_top",
-    }
-)
-
-#: Queries the driver checked in round 11 (``CORRECTNESS_r11.json``):
-#: 47 of 50 sampled names hash-green, the other 3 are
-#: rows-only-by-contract (``q_clv_scores`` 150 rows,
-#: ``q_minhash_dedup`` 147, ``q_ann_lsh`` 500 — all executed clean) —
-#: the fifth consecutive fully-clean driver sample.  Folding them in
-#: (VERDICT r11 "do this" item 2) points round 12's budget at the
-#: remaining stale cohorts plus this round's graduations.
-_R11_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_argmax", "q_asof_join", "q_bigram_counts", "q_centroids",
-        "q_chunk_documents", "q_concurrency", "q_cosine_topk",
-        "q_date_funcs", "q_decontaminate", "q_embedding_class_sim",
-        "q_event_gaps", "q_event_sequences", "q_funnel",
-        "q_heavy_hitters", "q_histogram", "q_moving_avg",
-        "q_multimodal_meta", "q_pack_documents", "q_pack_eval",
-        "q_pagerank", "q_pareto_nbd", "q_pca_incremental",
-        "q_pii_scrub", "q_quantize_embeddings", "q_range_join",
-        "q_repetition", "q_retention_cohorts", "q_scd2",
-        "q_scd2_merge", "q_sessionize", "q_set_similarity_join",
-        "q_sliding_windows", "q_source_mix", "q_splade_retrieval",
-        "q_stratified_sample", "q_tfidf_top_terms", "q_topk",
-        "q_tpch_q1", "q_tpch_q3", "q_tpch_q5", "q_train_split",
-        "q_transitions", "q_union", "q_window_dedup", "q_window_rank",
-        "q_zorder", "q_zscore",
-    }
-)
-
-#: Queries the driver checked in round 12 (``CORRECTNESS_r12.json``):
-#: 45 of 50 sampled names hash-green, the other 5 are
-#: rows-only-by-contract (``q_minhash_dedup`` 147 rows, ``q_ann_lsh``
-#: 500, ``q_ann_ivf`` 500, ``q_dedup_embedding`` 429,
-#: ``q_semantic_clusters`` 500 — all executed clean) — the sixth
-#: consecutive fully-clean driver sample.  Folding them in points
-#: round 13's budget at the remaining stale cohorts plus this round's
-#: plan-changed re-samples.
-_R12_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q_caption_align", "q_pair_curate", "q_stream_pair_curate",
-        "q_clv_scores", "q_dedup_substring_eval", "q_lsh_param_sweep",
-        "q_data_shapley", "q_cross_validation", "q_learning_curve",
-        "q_splade_retrieval", "q_simhash", "q_minhash_dedup",
-        "q_ann_lsh", "q_skew_report", "q_profile", "q_source_report",
-        "q_anomaly_days", "q_python_datasource", "q_variant_extract",
-        "q_udtf_sentences", "q_cogroup_reconcile", "q_bm25",
-        "q_token_entropy", "q_knn_label", "q_unpivot", "q_winsorize",
-        "q_mapinarrow", "q_ann_ivf", "q_dedup_embedding",
-        "q_semantic_clusters", "q_ewma", "q_stream_sessions",
-        "q_stream_rfm", "q_stream_join", "q_dedup_incremental",
-        "q_stream_dedup", "q_image_features", "q_image_resize",
-        "q_audio_features", "q_media_curate", "q_dedup_lines",
-        "q_corpus_curate", "q_minhash_weighted", "q_containment",
-        "q_vocab_oov", "q_zipf_fit", "q_burstiness", "q_image_dedup",
-        "q_audio_dedup", "q_cdc_chunks",
-    }
-)
-
-_VERIFIED = (
-    _R1_VERIFIED | _R2_VERIFIED | _R3_VERIFIED | _R4_VERIFIED
-    | _R5_VERIFIED | _R6_VERIFIED | _R7_VERIFIED | _R8_VERIFIED
-    | _R9_VERIFIED | _R10_VERIFIED | _R11_VERIFIED | _R12_VERIFIED
-)
-
-
-def _ordered_names() -> list[str]:
-    """Registration order tiered by driver-verification staleness.
-
-    The driver's per-round oracle budget covers ~50 names in dict
-    order, so ordering is scheduling.  Round 8's front of the queue =
-    the 44 never-driver-checked registrations, then the
-    graduated-but-stale re-sample tier, then verified cohorts oldest
-    first.  A name's tier is the LATEST round that sampled it, so
-    nothing re-verifies ahead of something staler."""
-    names = list(_REGISTRY)
-    graduated_rank = {
-        n: i
-        for i, n in enumerate(_GRADUATED_STALE + _CHANGED_SINCE_SAMPLE)
-    }
-    tier = {}
-    for n in names:
-        if n in _R12_VERIFIED:
-            tier[n] = 12
-        elif n in _R11_VERIFIED:
-            tier[n] = 11
-        elif n in _R10_VERIFIED:
-            tier[n] = 10
-        elif n in _R9_VERIFIED:
-            tier[n] = 9
-        elif n in _R8_VERIFIED:
-            tier[n] = 8
-        elif n in _R7_VERIFIED:
-            tier[n] = 7
-        elif n in _R6_VERIFIED:
-            tier[n] = 6
-        elif n in _R5_VERIFIED:
-            tier[n] = 5
-        elif n in _R4_VERIFIED:
-            tier[n] = 4
-        elif n in _R3_VERIFIED:
-            tier[n] = 3
-        elif n in _R2_VERIFIED:
-            tier[n] = 2
-        elif n in _R1_VERIFIED:
-            tier[n] = 1
-        else:
-            tier[n] = 0  # never sampled — always first
-        if n in graduated_rank and tier[n] > 0:
-            tier[n] = 0.5  # stale rows-only driver row + fresh oracle
-    order = {n: i for i, n in enumerate(names)}
-    # Within a staleness tier, oracle-checked names outrank rows-only
-    # ones: an oracle row is a hash-verified result, a rows-only row
-    # only proves execution — when the budget cuts a tier, spend it on
-    # the stronger check first.
-    # (round 13 registered no new queries, so the prior rounds'
-    # "new this round sorts behind older never-sampled backlog"
-    # tie-break is dead code and was dropped.)
-    return sorted(
-        names,
-        key=lambda n: (
-            tier[n],
-            graduated_rank.get(n, 0),
-            0 if _REGISTRY[n].oracle is not None else 1,
-            order[n],
-        ),
-    )
-
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query; ``oracle=None`` marks it rows-only (non-SQL ops)."""
@@ -601,17 +95,15 @@ def _shipping(fn: QueryFn) -> QueryFn:
 
 
 def all_queries() -> dict[str, QueryFn]:
+    """Every registered query, in registration order."""
     _load()
-    return {n: _shipping(_REGISTRY[n].fn) for n in _ordered_names()}
+    return {n: _shipping(q.fn) for n, q in _REGISTRY.items()}
 
 
 def all_oracles() -> dict[str, str]:
+    """Every oracle SQL string, in registration order."""
     _load()
-    return {
-        n: _REGISTRY[n].oracle
-        for n in _ordered_names()
-        if _REGISTRY[n].oracle is not None
-    }
+    return {n: q.oracle for n, q in _REGISTRY.items() if q.oracle is not None}
 
 
 _LOADED = False
@@ -622,12 +114,6 @@ def _load() -> None:
     global _LOADED
     if _LOADED:
         return
-    # Import order IS registration order IS the driver's verification
-    # order (its per-round oracle budget covers ~50 registrations, and
-    # _ordered_names pushes round-1-verified queries to the back).  The
-    # round-1 backlog modules (tpch/textops/similarity/extra) come
-    # first so their still-unverified queries drain before this round's
-    # brand-new ones consume budget.
     from clv_data_pipeline_spark.queries import (  # noqa: F401
         tpch,
         textops,

@@ -5,10 +5,12 @@ line, so the bench's printed summary must stay compact while the full
 per-query record persists to BENCH_LOCAL.json (VERDICT r12 item 2a).
 The artifact-warmup lanes must partition ARTIFACT_WARMUP exactly —
 same queries warmed, just scheduled concurrently (VERDICT r12 item 7).
+The frozen comparable subsets must keep their exact names and order.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -26,15 +28,30 @@ def test_warmup_lanes_partition_artifact_warmup():
     assert set(lane_names) == set(bench.ARTIFACT_WARMUP)
 
 
-def test_headline_is_append_only_superset_of_frozen_subsets():
-    headline = set(bench.HEADLINE)
-    for names in (
-        bench.COMPARABLE_R3,
-        bench.COMPARABLE_R4,
-        bench.COMPARABLE_R5,
-        bench.COMPARABLE_R6,
-    ):
-        assert set(names) <= headline
+#: (length, sha256 of the comma-joined names) of each frozen subset.
+#: The subsets are HEADLINE slices, so this pins HEADLINE's first 169
+#: entries: an edit, reorder or insert there changes a digest.
+FROZEN_SUBSET_PINS = {
+    "COMPARABLE_R3": (
+        22, "39da19a1eb0e23cc050d8348d06ba8c7dc5656bf156ad55d5c2416f99a579caa"
+    ),
+    "COMPARABLE_R4": (
+        55, "bbe022585b1b5e3684cbc9f6f1a536a4dd4d2f702c655d246438f7e205324f2d"
+    ),
+    "COMPARABLE_R5": (
+        109, "7e023fee47ac112f56a2e5a9d3fa986d62eafc9f54504fbb43662a8ff45dc339"
+    ),
+    "COMPARABLE_R6": (
+        169, "2a1032670c3174fb72a92ce7b08060fb1d7a166b973582018d6d7564d86f75c0"
+    ),
+}
+
+
+def test_frozen_subsets_are_pinned():
+    for attr, pin in FROZEN_SUBSET_PINS.items():
+        names = getattr(bench, attr)
+        digest = hashlib.sha256(",".join(names).encode()).hexdigest()
+        assert (len(names), digest) == pin, attr
 
 
 def test_bench_local_snapshot_carries_full_per_query_dict():

@@ -344,3 +344,16 @@ def test_nb_fused_correct_empty_class_model_degrades(spark):
         ).alias("c")
     ).first()["c"]
     assert correct == 0
+
+    # every model empty: no score column at all, still one row per doc
+    all_empty = _nb_fused_correct(
+        spark,
+        ttest.union(ttest),
+        [("e1", {}, {"de": 2}), ("e2", {}, {"en": 1})],
+    )
+    rows = all_empty.collect()
+    assert sorted((r["doc_id"], r["true_lang"]) for r in rows) == [
+        (1, "en"),
+        (2, "de"),
+    ]
+    assert all(r["win_e1"] is None and r["win_e2"] is None for r in rows)
