@@ -1651,11 +1651,8 @@ def q_stream_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the same generate_series oracle as the batch connector
     (q_python_datasource).  Proves the engine's source API surface is
     complete in BOTH execution modes with one arithmetic contract."""
-    import shutil
-    import tempfile
-    import uuid
-
     from clv_data_pipeline_spark.sources.pyds import register
+    from clv_data_pipeline_spark.streaming.ingest import drain_to_memory
 
     register(spark)
     stream = (
@@ -1664,19 +1661,7 @@ def q_stream_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("partitions", 8)
         .load()
     )
-    sink = f"stream_pyds_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_pyds_")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink).groupBy("customer_id").agg(
+    return drain_to_memory(stream, "append").groupBy("customer_id").agg(
         F.count("*").cast("long").alias("n_txns"),
         F.round(
             F.sum(F.col("amount").cast("decimal(18,4)")).cast("double"), 2
@@ -6080,10 +6065,8 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     In production the period split is a sliding reference-vs-current
     window and the finish runs per trigger; availableNow + a fixed
     cut keeps the parity proof deterministic here."""
-    import tempfile
-    import uuid
+    from clv_data_pipeline_spark.streaming.ingest import drain_to_memory
 
-    path_dir = sf_dir
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(
         f"{sf_dir}/events.parquet"
@@ -6091,7 +6074,7 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
-        .parquet(path_dir)
+        .parquet(sf_dir)
     )
     if dict(
         (f.name, f.dataType.simpleString()) for f in raw_schema
@@ -6125,22 +6108,9 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("c2"),
         )
     )
-    sink = f"stream_drift_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_drift_")
-    q = (
-        hist.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    b = spark.table(sink)
-    t = (
-        spark.table(sink)
-        .groupBy(F.col("event_type").alias("et"))
-        .agg(F.sum("c1").alias("n1"), F.sum("c2").alias("n2"))
+    b = drain_to_memory(hist, "complete")
+    t = b.groupBy(F.col("event_type").alias("et")).agg(
+        F.sum("c1").alias("n1"), F.sum("c2").alias("n2")
     )
     t = t.withColumnRenamed("et", "event_type")
     wc = (
@@ -7795,48 +7765,25 @@ def q_stream_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals train-at-once BIT FOR BIT, which is exactly the claim a
     nightly incremental training pipeline rests on.  Shares
     q_gaussian_mixture's oracle."""
-    import shutil
-    import tempfile
-    import uuid
-
     from clv_data_pipeline_spark.streaming.ingest import (
         histogram_merge_sink,
+        replay_arrivals,
+        scratch_tables,
     )
 
     ev = load_table(spark, sf_dir, "events").select("ts", "value")
-    src_root = tempfile.mkdtemp(prefix="q_stream_gmm_")
-    src = src_root + "/arrivals"
     cuts = ("2024-01-11", "2024-01-21")
     slices = (
         ev.filter(F.col("ts") < cuts[0]),
         ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
         ev.filter(F.col("ts") >= cuts[1]),
     )
-    for s in slices:
-        s.coalesce(1).write.mode("append").parquet(src)
-    target_table = f"gmm_stream_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="q_stream_gmm_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(
-            histogram_merge_sink(
-                target_table, lo=0.0, hi=512.0, n_bins=256
-            )
+    with scratch_tables(spark, "gmm_stream") as (target_table,):
+        replay_arrivals(
+            slices,
+            histogram_merge_sink(target_table, lo=0.0, hi=512.0, n_bins=256),
         )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src_root, ignore_errors=True)
-    hist = spark.table(target_table).collect()
-    spark.sql(f"DROP TABLE IF EXISTS {target_table}")
+        hist = spark.table(target_table).collect()
     bins = [((r["bin"] + 0.5) * 2.0, int(r["cnt"])) for r in hist]
     n = sum(c for _, c in bins)
     return spark.createDataFrame(_fit_gmm_from_bins(bins, n), _GMM_SCHEMA)

@@ -1461,49 +1461,27 @@ def q_stream_assign_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5) — so the driver hash-verifies that three sequential online
     issuances with persisted state equal the one-shot batch
     assignment."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from clv_data_pipeline_spark.streaming.ingest import id_issuance_sink
+    from clv_data_pipeline_spark.streaming.ingest import (
+        id_issuance_sink,
+        replay_arrivals,
+        scratch_tables,
+    )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     n = d.count()
     c1, c2 = n // 3, (2 * n) // 3
-    src_root = tempfile.mkdtemp(prefix="q_stream_ids_")
-    src = src_root + "/arrivals"
     slices = (
         d.filter(F.col("doc_id") < c1),
         d.filter((F.col("doc_id") >= c1) & (F.col("doc_id") < c2)),
         d.filter(F.col("doc_id") >= c2),
     )
-    for s in slices:
-        s.coalesce(1).write.mode("append").parquet(src)
-
-    target_table = f"ids_stream_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="q_stream_ids_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(id_issuance_sink(target_table))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src_root, ignore_errors=True)
-    out = (
-        spark.table(target_table)
-        .select("doc_id", "new_id")
-        .localCheckpoint(eager=True)
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {target_table}")
-    return out
+    with scratch_tables(spark, "ids_stream") as (target_table,):
+        replay_arrivals(slices, id_issuance_sink(target_table))
+        return (
+            spark.table(target_table)
+            .select("doc_id", "new_id")
+            .localCheckpoint(eager=True)
+        )
 
 
 @query(
@@ -1541,68 +1519,43 @@ def q_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes the same fixed-bin estimate over all events in
     one batch pass, so the driver hash-verifies that merge-as-you-go
     equals compute-at-once — the mergeability property itself."""
-    import shutil
-    import tempfile
-    import uuid
+    from pyspark.sql.window import Window as W
 
     from clv_data_pipeline_spark.streaming.ingest import (
         histogram_merge_sink,
+        replay_arrivals,
+        scratch_tables,
     )
 
     ev = load_table(spark, sf_dir, "events").select("ts", "value")
-    src_root = tempfile.mkdtemp(prefix="q_stream_q_")
-    src = src_root + "/arrivals"
     cuts = ("2024-01-11", "2024-01-21")
     slices = (
         ev.filter(F.col("ts") < cuts[0]),
         ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
         ev.filter(F.col("ts") >= cuts[1]),
     )
-    for s in slices:
-        s.coalesce(1).write.mode("append").parquet(src)
-
-    target_table = f"hist_stream_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="q_stream_q_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(
-            histogram_merge_sink(target_table, lo=0.0, hi=512.0)
+    with scratch_tables(spark, "hist_stream") as (target_table,):
+        replay_arrivals(
+            slices, histogram_merge_sink(target_table, lo=0.0, hi=512.0)
         )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src_root, ignore_errors=True)
-    hist = spark.table(target_table)
-    from pyspark.sql.window import Window as W
-
-    wc = W.orderBy("bin").rowsBetween(W.unboundedPreceding, 0)
-    wall = W.partitionBy(F.lit(1))
-    cum = hist.select(
-        "bin",
-        F.sum("cnt").over(wc).alias("c"),
-        F.sum("cnt").over(wall).alias("n"),
-    )
-    qs = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "q double")
-    est = (
-        cum.join(F.broadcast(qs), F.col("c") >= F.col("q") * F.col("n"))
-        .groupBy("q")
-        .agg(F.min("bin").alias("qbin"), F.max("n").alias("n"))
-    )
-    out = est.select(
-        F.col("q").cast("double").alias("q"),
-        F.round((F.col("qbin") + 1) * 0.25, 6).alias("est"),
-        F.col("n").cast("long").alias("n"),
-    ).localCheckpoint(eager=True)
-    spark.sql(f"DROP TABLE IF EXISTS {target_table}")
-    return out
+        wc = W.orderBy("bin").rowsBetween(W.unboundedPreceding, 0)
+        wall = W.partitionBy(F.lit(1))
+        cum = spark.table(target_table).select(
+            "bin",
+            F.sum("cnt").over(wc).alias("c"),
+            F.sum("cnt").over(wall).alias("n"),
+        )
+        qs = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "q double")
+        est = (
+            cum.join(F.broadcast(qs), F.col("c") >= F.col("q") * F.col("n"))
+            .groupBy("q")
+            .agg(F.min("bin").alias("qbin"), F.max("n").alias("n"))
+        )
+        return est.select(
+            F.col("q").cast("double").alias("q"),
+            F.round((F.col("qbin") + 1) * 0.25, 6).alias("est"),
+            F.col("n").cast("long").alias("n"),
+        ).localCheckpoint(eager=True)
 
 
 @query(
@@ -1947,55 +1900,32 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals compute-at-once.  At an open key domain the same sink
     would cap state with a count-min sketch + candidate set; the
     bounded user domain keeps the parity proof exact."""
-    import shutil
-    import tempfile
-    import uuid
+    from pyspark.sql.window import Window as W
 
-    from clv_data_pipeline_spark.streaming.ingest import count_merge_sink
+    from clv_data_pipeline_spark.streaming.ingest import (
+        count_merge_sink,
+        replay_arrivals,
+        scratch_tables,
+    )
 
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
-    src_root = tempfile.mkdtemp(prefix="q_stream_topk_")
-    src = src_root + "/arrivals"
     cuts = ("2024-01-11", "2024-01-21")
     slices = (
         ev.filter(F.col("ts") < cuts[0]),
         ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
         ev.filter(F.col("ts") >= cuts[1]),
     )
-    for s in slices:
-        s.coalesce(1).write.mode("append").parquet(src)
-
-    target_table = f"topk_stream_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="q_stream_topk_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(count_merge_sink(target_table))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src_root, ignore_errors=True)
-    from pyspark.sql.window import Window as W
-
-    state = spark.table(target_table)
-    ranked = state.select(
-        F.col("k").cast("long").alias("user_id"),
-        F.col("cnt").cast("long").alias("n_events"),
-        F.row_number()
-        .over(W.orderBy(F.desc("cnt"), "k"))
-        .cast("long")
-        .alias("rnk"),
-    )
-    out = ranked.filter(F.col("rnk") <= 10).localCheckpoint(eager=True)
-    spark.sql(f"DROP TABLE IF EXISTS {target_table}")
-    return out
+    with scratch_tables(spark, "topk_stream") as (target_table,):
+        replay_arrivals(slices, count_merge_sink(target_table))
+        ranked = spark.table(target_table).select(
+            F.col("k").cast("long").alias("user_id"),
+            F.col("cnt").cast("long").alias("n_events"),
+            F.row_number()
+            .over(W.orderBy(F.desc("cnt"), "k"))
+            .cast("long")
+            .alias("rnk"),
+        )
+        return ranked.filter(F.col("rnk") <= 10).localCheckpoint(eager=True)
 
 
 @query(
@@ -2029,68 +1959,46 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     history, which is why the batch and streaming funnels are
     separate, documented semantics.  The oracle computes the same
     min-based funnel over all events in one batch pass."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from clv_data_pipeline_spark.streaming.ingest import min_ts_merge_sink
+    from clv_data_pipeline_spark.streaming.ingest import (
+        min_ts_merge_sink,
+        replay_arrivals,
+        scratch_tables,
+    )
 
     ev = load_table(spark, sf_dir, "events").select(
         "ts", "user_id", "event_type"
     )
-    src_root = tempfile.mkdtemp(prefix="q_stream_funnel_")
-    src = src_root + "/arrivals"
     cuts = ("2024-01-11", "2024-01-21")
     slices = (
         ev.filter(F.col("ts") < cuts[0]),
         ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
         ev.filter(F.col("ts") >= cuts[1]),
     )
-    for s in slices:
-        s.coalesce(1).write.mode("append").parquet(src)
-
-    target_table = f"funnel_stream_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="q_stream_funnel_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(min_ts_merge_sink(target_table))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src_root, ignore_errors=True)
-    state = spark.table(target_table)
-    pu = state.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "view", F.col("min_ts"))
-        ).alias("tv"),
-        F.min(
-            F.when(F.col("event_type") == "click", F.col("min_ts"))
-        ).alias("tc"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("min_ts"))
-        ).alias("tp"),
-    )
-    out = pu.agg(
-        F.count("tv").cast("long").alias("step1_view"),
-        F.count(F.when(F.col("tc") >= F.col("tv"), 1))
-        .cast("long")
-        .alias("step2_click"),
-        F.count(
-            F.when(
-                (F.col("tc") >= F.col("tv")) & (F.col("tp") >= F.col("tc")),
-                1,
-            )
+    with scratch_tables(spark, "funnel_stream") as (target_table,):
+        replay_arrivals(slices, min_ts_merge_sink(target_table))
+        pu = spark.table(target_table).groupBy("user_id").agg(
+            F.min(
+                F.when(F.col("event_type") == "view", F.col("min_ts"))
+            ).alias("tv"),
+            F.min(
+                F.when(F.col("event_type") == "click", F.col("min_ts"))
+            ).alias("tc"),
+            F.min(
+                F.when(F.col("event_type") == "purchase", F.col("min_ts"))
+            ).alias("tp"),
         )
-        .cast("long")
-        .alias("step3_purchase"),
-    ).localCheckpoint(eager=True)
-    spark.sql(f"DROP TABLE IF EXISTS {target_table}")
-    return out
+        return pu.agg(
+            F.count("tv").cast("long").alias("step1_view"),
+            F.count(F.when(F.col("tc") >= F.col("tv"), 1))
+            .cast("long")
+            .alias("step2_click"),
+            F.count(
+                F.when(
+                    (F.col("tc") >= F.col("tv"))
+                    & (F.col("tp") >= F.col("tc")),
+                    1,
+                )
+            )
+            .cast("long")
+            .alias("step3_purchase"),
+        ).localCheckpoint(eager=True)

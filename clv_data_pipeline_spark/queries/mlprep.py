@@ -991,20 +991,16 @@ def q_stream_pair_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join + one map-only Arrow kernel + one 1-row aggregate) plus
     an O(1) state merge; state is FIVE integers regardless of corpus
     size — the cheapest possible exactly-mergeable monitoring state."""
-    import shutil
-    import tempfile
-    import uuid
-
     from clv_data_pipeline_spark.streaming.ingest import (
         counter_merge_sink,
+        replay_arrivals,
+        scratch_tables,
     )
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     emb = _ca_quantized_emb(spark, sf_dir)
-    src_root = tempfile.mkdtemp(prefix="q_stream_pair_curate_")
-    src = src_root + "/arrivals"
     cuts = docs.agg(
         F.expr("percentile_approx(doc_id, 0.5)").alias("c1"),
     ).first()
@@ -1012,38 +1008,18 @@ def q_stream_pair_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") <= cuts["c1"]),
         docs.filter(F.col("doc_id") > cuts["c1"]),
     )
-    for sl in slices:
-        sl.coalesce(1).write.mode("append").parquet(src)
-
-    target_table = f"pair_curate_stream_{uuid.uuid4().hex[:8]}"
 
     def _agg(batch_df):
         return _pair_stats_frames(batch_df, emb).agg(
             *_pc_counter_aggs()
         )
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="q_stream_pair_curate_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(
-            counter_merge_sink(target_table, _agg)
+    with scratch_tables(spark, "pair_curate_stream") as (target_table,):
+        replay_arrivals(slices, counter_merge_sink(target_table, _agg))
+        one = spark.table(target_table).select(
+            "n0", "s1", "s2", "s3", "s4"
         )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src_root, ignore_errors=True)
-    one = spark.table(target_table).select(
-        "n0", "s1", "s2", "s3", "s4"
-    )
-    return _pc_stage_rows(one)
+        return _pc_stage_rows(one).localCheckpoint(eager=True)
 
 
 @query(

@@ -1704,12 +1704,10 @@ def q_stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the broadcast direction frame, a cell equi-join probe of
     the stored kept table (cells prune it — never a full shuffle),
     candidate-pair-only scoring, and a contested-subgraph driver
-    greedy.  uuid-suffixed state tables are dropped afterwards."""
-    import shutil
-    import tempfile
-    import uuid
-
+    greedy."""
     from clv_data_pipeline_spark.streaming.ingest import (
+        replay_arrivals,
+        scratch_tables,
         semdedup_admission_sink,
     )
 
@@ -1720,45 +1718,20 @@ def q_stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = e.agg(F.max("vec_id").alias("mx")).collect()[0]["mx"]
     c1 = mx // 2
-    src_root = tempfile.mkdtemp(prefix="q_stream_semdedup_")
-    src = src_root + "/arrivals"
-    for lo, hi in ((None, c1), (c1, None)):
-        sl = e
-        if lo is not None:
-            sl = sl.filter(F.col("vec_id") >= lo)
-        if hi is not None:
-            sl = sl.filter(F.col("vec_id") < hi)
-        sl.coalesce(1).write.mode("append").parquet(src)
-    suffix = uuid.uuid4().hex[:8]
-    kept_table = f"semdedup_stream_kept_{suffix}"
-    out_table = f"semdedup_stream_out_{suffix}"
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="q_stream_semdedup_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(
+    slices = (e.filter(F.col("vec_id") < c1), e.filter(F.col("vec_id") >= c1))
+    with scratch_tables(
+        spark, "semdedup_stream_kept", "semdedup_stream_out"
+    ) as (kept_table, out_table):
+        replay_arrivals(
+            slices,
             semdedup_admission_sink(
                 kept_table,
                 out_table,
                 threshold=_SD_THRESHOLD,
                 n_cells=_SD_CELLS,
-            )
+            ),
         )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src_root, ignore_errors=True)
-    out = spark.table(out_table).localCheckpoint(eager=True)
-    spark.sql(f"DROP TABLE IF EXISTS {out_table}")
-    spark.sql(f"DROP TABLE IF EXISTS {kept_table}")
-    return out
+        return spark.table(out_table).localCheckpoint(eager=True)
 
 
 @query(

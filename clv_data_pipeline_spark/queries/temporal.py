@@ -490,8 +490,8 @@ def q_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 maintenance run by the REAL Structured Streaming engine —
     q_scd2_merge's streaming twin: the event log arrives as three
-    chronological micro-batches (maxFilesPerTrigger=1 over slice files,
-    simulating daily arrivals) and each trigger folds its batch into
+    chronological micro-batches (replay_arrivals, simulating daily
+    arrivals) and each trigger folds its batch into
     the stored interval table via streaming/ingest.py
     scd2_maintenance_sink (O(batch) per trigger, only affected keys
     recompute).  The oracle is the FULL batch recompute over all
@@ -499,57 +499,29 @@ def q_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental merges are exactly equivalent to rebuild — the
     dimension-table maintenance loop every warehouse runs, on the
     streaming engine with checkpointed exactly-once file progress."""
-    import shutil
-    import tempfile
-    import uuid
-
     from clv_data_pipeline_spark.streaming.ingest import (
+        replay_arrivals,
         scd2_maintenance_sink,
+        scratch_tables,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
-    # fixture prep, not pipeline work: write three chronological slice
-    # files (the shape real daily arrivals already have).  Sequential
-    # single-file writes give strictly increasing mtimes, which is the
-    # file source's processing order at maxFilesPerTrigger=1.
-    src_root = tempfile.mkdtemp(prefix="q_scd2_stream_")
-    src = src_root + "/arrivals"
     cuts = ("2024-01-11", "2024-01-21")
     slices = (
         ev.filter(F.col("ts") < cuts[0]),
         ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
         ev.filter(F.col("ts") >= cuts[1]),
     )
-    for s in slices:
-        s.coalesce(1).write.mode("append").parquet(src)
-
-    target_table = f"scd2_stream_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="q_scd2_stream_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(scd2_maintenance_sink(target_table))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src_root, ignore_errors=True)
-    out = (
-        spark.table(target_table)
-        .select("user_id", "event_type", "valid_from", "valid_to",
-                "is_current")
-        .localCheckpoint(eager=True)
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {target_table}")
-    return out
+    with scratch_tables(spark, "scd2_stream") as (target_table,):
+        replay_arrivals(slices, scd2_maintenance_sink(target_table))
+        return (
+            spark.table(target_table)
+            .select("user_id", "event_type", "valid_from", "valid_to",
+                    "is_current")
+            .localCheckpoint(eager=True)
+        )
 
 
 @query(

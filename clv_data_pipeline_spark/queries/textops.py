@@ -465,21 +465,13 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted table must hash-match the same DuckDB oracle as the batch
     q_dedup_exact — streaming admission and batch dedup must agree
     bit-for-bit.  Per-trigger work is O(batch): the batch's
-    fingerprints broadcast to probe the stored index map-side.  The
-    uuid-suffixed state tables are dropped after materializing the
-    result, so repeated invocations don't accumulate warehouse
-    state."""
-    import shutil
-    import tempfile
-    import uuid
-
+    fingerprints broadcast to probe the stored index map-side."""
     from clv_data_pipeline_spark.streaming.ingest import (
         dedup_admission_sink,
+        drain,
+        scratch_tables,
     )
 
-    suffix = uuid.uuid4().hex[:8]
-    index_table = f"stream_dedup_idx_{suffix}"
-    admitted_table = f"stream_dedup_adm_{suffix}"
     raw_schema = spark.read.parquet(
         f"{sf_dir}/documents.parquet"
     ).schema
@@ -488,25 +480,15 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
-    ckpt = tempfile.mkdtemp(prefix="q_stream_dedup_")
-    q = (
-        stream.writeStream.foreachBatch(
-            dedup_admission_sink(index_table, admitted_table)
+    with scratch_tables(
+        spark, "stream_dedup_idx", "stream_dedup_adm"
+    ) as (index_table, admitted_table):
+        drain(stream, dedup_admission_sink(index_table, admitted_table))
+        return (
+            spark.table(admitted_table)
+            .select("doc_id", "text", "lang", "source", "n_chars")
+            .localCheckpoint(eager=True)
         )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    out = (
-        spark.table(admitted_table)
-        .select("doc_id", "text", "lang", "source", "n_chars")
-        .localCheckpoint(eager=True)
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {admitted_table}")
-    spark.sql(f"DROP TABLE IF EXISTS {index_table}")
-    return out
 
 
 @query("q_minhash_incremental")  # rows-only: MinHash is engine-specific
@@ -3652,62 +3634,36 @@ def q_stream_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget half-fills in batch 1 must admit only the remainder in
     batch 2, which is exactly what the stored cum_seen state proves.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from clv_data_pipeline_spark.streaming.ingest import (
         budget_admission_sink,
+        replay_arrivals,
+        scratch_tables,
     )
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    # fixture prep: three doc_id-sliced arrival files; sequential
-    # single-file writes give increasing mtimes = the file source's
-    # processing order at maxFilesPerTrigger=1 (q_scd2_stream pattern),
-    # so arrival order == doc_id order and the oracle can model it.
+    # doc_id-sliced arrivals: arrival order == doc_id order, which the
+    # oracle's prefix sum models
     stats = d.agg(F.max("doc_id").alias("mx")).collect()[0]
     c1, c2 = stats["mx"] // 3, 2 * stats["mx"] // 3
-    src_root = tempfile.mkdtemp(prefix="q_stream_mix_")
-    src = src_root + "/arrivals"
-    for lo, hi in ((None, c1), (c1, c2), (c2, None)):
-        s = d
-        if lo is not None:
-            s = s.filter(F.col("doc_id") > lo)
-        if hi is not None:
-            s = s.filter(F.col("doc_id") <= hi)
-        s.coalesce(1).write.mode("append").parquet(src)
-
-    suffix = uuid.uuid4().hex[:8]
-    state_table = f"stream_mix_state_{suffix}"
-    admitted_table = f"stream_mix_adm_{suffix}"
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    slices = (
+        d.filter(F.col("doc_id") <= c1),
+        d.filter((F.col("doc_id") > c1) & (F.col("doc_id") <= c2)),
+        d.filter(F.col("doc_id") > c2),
     )
-    ckpt = tempfile.mkdtemp(prefix="q_stream_mix_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(
-            budget_admission_sink(state_table, admitted_table, budget=4000)
+    with scratch_tables(
+        spark, "stream_mix_state", "stream_mix_adm"
+    ) as (state_table, admitted_table):
+        replay_arrivals(
+            slices,
+            budget_admission_sink(state_table, admitted_table, budget=4000),
         )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src_root, ignore_errors=True)
-    out = (
-        spark.table(admitted_table)
-        .select("doc_id", "source", F.col("n_chars").cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {admitted_table}")
-    spark.sql(f"DROP TABLE IF EXISTS {state_table}")
-    return out
+        return (
+            spark.table(admitted_table)
+            .select("doc_id", "source", F.col("n_chars").cast("long"))
+            .localCheckpoint(eager=True)
+        )
 
 
 #: Sequence-length bucket ladder for q_padding_audit (powers of two up
@@ -4541,12 +4497,10 @@ def q_stream_dedup_substring(
     cycle, and the accumulated per-doc stats are slicing-independent
     (keeper = global MIN doc_id under id-ordered arrival), so the
     oracle hash is unchanged by construction.  Per-trigger work is
-    O(batch); uuid-suffixed state tables are dropped afterwards."""
-    import shutil
-    import tempfile
-    import uuid
-
+    O(batch)."""
     from clv_data_pipeline_spark.streaming.ingest import (
+        replay_arrivals,
+        scratch_tables,
         substring_audit_sink,
     )
 
@@ -4555,40 +4509,15 @@ def q_stream_dedup_substring(
     )
     ids = d.agg(F.max("doc_id").alias("mx")).collect()[0]["mx"]
     c1 = ids // 2
-    src_root = tempfile.mkdtemp(prefix="q_stream_substr_")
-    src = src_root + "/arrivals"
-    for lo, hi in ((None, c1), (c1, None)):
-        sl = d
-        if lo is not None:
-            sl = sl.filter(F.col("doc_id") >= lo)
-        if hi is not None:
-            sl = sl.filter(F.col("doc_id") < hi)
-        sl.coalesce(1).write.mode("append").parquet(src)
-    suffix = uuid.uuid4().hex[:8]
-    index_table = f"substr_stream_idx_{suffix}"
-    out_table = f"substr_stream_out_{suffix}"
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="q_stream_substr_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(
-            substring_audit_sink(index_table, out_table, window=_SUBSTR_W)
+    slices = (d.filter(F.col("doc_id") < c1), d.filter(F.col("doc_id") >= c1))
+    with scratch_tables(
+        spark, "substr_stream_idx", "substr_stream_out"
+    ) as (index_table, out_table):
+        replay_arrivals(
+            slices,
+            substring_audit_sink(index_table, out_table, window=_SUBSTR_W),
         )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src_root, ignore_errors=True)
-    out = spark.table(out_table).localCheckpoint(eager=True)
-    spark.sql(f"DROP TABLE IF EXISTS {out_table}")
-    spark.sql(f"DROP TABLE IF EXISTS {index_table}")
-    return out
+        return spark.table(out_table).localCheckpoint(eager=True)
 
 
 @query(

@@ -601,8 +601,8 @@ def q_stream_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     unsupported in streaming; the HLL variant lives in streaming/.)
     """
     import os
-    import tempfile
-    import uuid
+
+    from clv_data_pipeline_spark.streaming.ingest import drain_to_memory
 
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -632,24 +632,7 @@ def q_stream_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    sink = f"stream_daily_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_daily_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    # the memory sink holds the rows; the checkpoint is only needed
-    # while the query runs — reclaim it so repeated invocations don't
-    # accumulate tmp dirs
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink)
+    return drain_to_memory(agg, "complete")
 
 
 @query(
@@ -696,9 +679,8 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     state concern; the production path adds a watermark and append
     mode (streaming/ingest.py streaming_sessions)."""
     import os
-    import shutil
-    import tempfile
-    import uuid
+
+    from clv_data_pipeline_spark.streaming.ingest import drain_to_memory
 
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -726,19 +708,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    sink = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_sessions_")
-    q = (
-        sess.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink)
+    return drain_to_memory(sess, "complete")
 
 
 @query(
@@ -770,10 +740,8 @@ def q_stream_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshots per user in update mode; the final state row per user is
     selected by max n_events (snapshots are monotone)."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from clv_data_pipeline_spark.streaming.ingest import drain_to_memory
     from clv_data_pipeline_spark.streaming.stateful import running_user_stats
 
     path = os.path.join(sf_dir, "events.parquet")
@@ -792,19 +760,7 @@ def q_stream_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     cents = stream.withColumn("value", F.round(F.col("value") * 100))
     snap = running_user_stats(cents)
-    sink = f"stream_rfm_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_rfm_")
-    q = (
-        snap.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    out = spark.table(sink)
+    out = drain_to_memory(snap, "update")
     w = Window.partitionBy("user_id").orderBy(
         F.desc("n_events"), F.desc("last_us")
     )
@@ -844,8 +800,11 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     and batch attribution agree exactly.
     """
     import os
-    import tempfile
-    import uuid
+
+    from clv_data_pipeline_spark.streaming.ingest import (
+        drain_to_memory,
+        ensure_event_time,
+    )
 
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -858,10 +817,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _events_stream():
-        from clv_data_pipeline_spark.streaming.ingest import (
-            ensure_event_time,
-        )
-
         s = (
             spark.readStream.schema(raw_schema)
             .option("pathGlobFilter", "events.parquet")
@@ -902,21 +857,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("view_id").cast("long"),
         F.col("user_id").cast("long"),
     )
-    sink = f"stream_join_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="q_stream_join_")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink)
+    return drain_to_memory(joined, "append")
 
 
 @query(

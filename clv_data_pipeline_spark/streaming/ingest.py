@@ -10,6 +10,23 @@ were ingested, each trigger drains only the new ones, and the batch
 function reruns the same deterministic full-refresh the batch pipeline
 uses.  Same results, exactly-once file accounting for free.
 
+Every streaming run in the engine goes through the helpers here:
+
+- :func:`drain` runs an availableNow ``foreachBatch`` query;
+- :func:`drain_to_memory` runs an availableNow memory-sink query and
+  returns the landed rows;
+- :func:`replay_arrivals` replays ordered slices as one trigger each
+  (the replay contract is in its docstring);
+- :func:`scratch_tables` names the per-call state tables a sink writes.
+
+Cleanup guarantees, on success and on error alike: a scratch
+checkpoint or arrival directory is removed before the helper returns;
+every wait is bounded by :data:`AWAIT_TIMEOUT_S`, and a query still
+running then is stopped before ``TimeoutError`` is raised, so no query
+outlives its helper; a memory sink's temp view is unregistered (the
+view pins the sink's rows in driver memory); scratch tables are
+dropped when their ``with`` block exits.
+
 Also here: the streaming twins of the batch event analytics —
 watermarked tumbling-window counts and session windows
 (``F.session_window``), matching q_events_daily / q_sessionize.
@@ -17,14 +34,21 @@ watermarked tumbling-window counts and session windows
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from clv_data_pipeline_spark.schemas import TRANSACTIONS_SCHEMA
+
+#: Seconds a streaming run may take before it is stopped and raises.
+AWAIT_TIMEOUT_S = 300
 
 
 def ensure_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -61,6 +85,111 @@ def _replay_anti_join(batch: DataFrame, stored: DataFrame, key: str) -> DataFram
     return batch.join(F.broadcast(hits), key, "left_anti")
 
 
+@contextmanager
+def _scratch_dir(prefix: str) -> Iterator[str]:
+    path = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+@contextmanager
+def scratch_tables(
+    spark: SparkSession, *prefixes: str
+) -> Iterator[tuple[str, ...]]:
+    """Yield one ``<prefix>_<uuid>`` table name per prefix (one shared
+    suffix) and drop those tables on exit, error included.  Read the
+    result out of them (``localCheckpoint`` or ``collect``) inside the
+    ``with`` block: a lazy frame over a dropped table fails later."""
+    suffix = uuid.uuid4().hex[:8]
+    names = tuple(f"{p}_{suffix}" for p in prefixes)
+    try:
+        yield names
+    finally:
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def _run(writer: DataStreamWriter, checkpoint: str | None) -> StreamingQuery:
+    """Start ``writer`` as an availableNow query and wait until it has
+    drained its source; a scratch checkpoint when ``checkpoint`` is
+    None.  The query is stopped on every exit path."""
+    if checkpoint is None:
+        with _scratch_dir("stream_ckpt_") as ckpt:
+            return _run(writer, ckpt)
+    q = (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        if not q.awaitTermination(AWAIT_TIMEOUT_S):
+            raise TimeoutError(
+                f"streaming query {q.id} still running after "
+                f"{AWAIT_TIMEOUT_S} s"
+            )
+    finally:
+        q.stop()
+    return q
+
+
+def drain(
+    stream: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Run ``sink(batch_df, batch_id)`` over everything ``stream`` has
+    now (availableNow ``foreachBatch``) and return the finished query.
+    Pass ``checkpoint`` to keep file progress across calls; without it
+    a scratch checkpoint is used and removed."""
+    return _run(stream.writeStream.foreachBatch(sink), checkpoint)
+
+
+def drain_to_memory(stream: DataFrame, output_mode: str) -> DataFrame:
+    """Run ``stream`` through a memory sink (availableNow) and return
+    the landed rows, ``localCheckpoint``-ed, after unregistering the
+    sink's temp view."""
+    spark = stream.sparkSession
+    name = f"stream_{uuid.uuid4().hex[:8]}"
+    writer = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+    )
+    try:
+        _run(writer, None)
+        return spark.table(name).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def replay_arrivals(
+    slices: Sequence[DataFrame], sink: Callable[[DataFrame, int], None]
+) -> None:
+    """Replay ``slices`` as ordered arrivals, one trigger each, through
+    ``sink`` — the daily micro-append a parity query proves against its
+    batch twin.
+
+    The contract: each slice is written, in order, as ONE parquet file
+    (``coalesce(1)``) into a scratch source directory.  Sequential
+    writes give strictly increasing mtimes, which is the file source's
+    processing order at ``maxFilesPerTrigger=1``, so trigger ``i``
+    sees exactly ``slices[i]`` and arrival order is slice order.  The
+    slices share one schema; the caller owns the boundaries (moving a
+    boundary row moves it to another trigger)."""
+    with _scratch_dir("arrivals_") as src:
+        for s in slices:
+            s.coalesce(1).write.mode("append").parquet(src)
+        stream = (
+            slices[0].sparkSession.readStream.schema(slices[0].schema)
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        drain(stream, sink)
+
+
 def ingest_stream(
     spark: SparkSession,
     source_dir: str,
@@ -69,9 +198,11 @@ def ingest_stream(
     schema: T.StructType = TRANSACTIONS_SCHEMA,
     fmt: str = "parquet",
 ) -> StreamingQuery:
-    """Drain all new files from ``source_dir`` through ``batch_fn``,
-    then stop (availableNow).  ``batch_fn(batch_df, batch_id)`` gets
-    the reference's full-refresh body (RFM rebuild + validate + score).
+    """Drain all new files from ``source_dir`` through ``batch_fn``
+    (availableNow) and return the finished query.  ``batch_fn(batch_df,
+    batch_id)`` gets the reference's full-refresh body (RFM rebuild +
+    validate + score).  ``checkpoint_dir`` belongs to the caller, so a
+    second call drains only the files that arrived since the first.
 
     File-source streams never infer schemas (a listing-time scan at
     100 TB) — the explicit schema is mandatory here like everywhere
@@ -80,13 +211,7 @@ def ingest_stream(
     reader = spark.readStream.schema(schema).format(fmt)
     if fmt == "csv":
         reader = reader.option("header", True)
-    stream = reader.load(source_dir)
-    return (
-        stream.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(reader.load(source_dir), batch_fn, checkpoint_dir)
 
 
 def windowed_event_counts(

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import pathlib
 
 import pytest
 
@@ -176,3 +177,17 @@ def test_plan_has_no_scale_killers(spark, name):
             f"{name}: BroadcastNestedLoopJoin outside the 1-row-scalar "
             "whitelist — quadratic pair generation or a missing equi key"
         )
+
+
+def test_queries_run_streams_only_through_the_ingest_helpers():
+    """Streaming runs (checkpoint, bounded wait, cleanup) live in
+    streaming/ingest.py; a query that starts or awaits its own stream
+    would skip the cleanup guarantees documented there."""
+    pkg = pathlib.Path(registry.__file__).parent
+    offenders = [
+        f"{path.name}: {token}"
+        for path in sorted((pkg / "queries").glob("*.py"))
+        for token in ("writeStream", "awaitTermination")
+        if token in path.read_text()
+    ]
+    assert offenders == []

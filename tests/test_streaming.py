@@ -570,3 +570,66 @@ def test_substring_audit_sink_replay_is_idempotent(spark):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {out_table}")
         spark.sql(f"DROP TABLE IF EXISTS {index_table}")
+
+
+def _catalog_names(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables()}
+
+
+def test_stream_pair_curate_drops_its_state_table(spark):
+    from clv_data_pipeline_spark import registry
+
+    out = registry.all_queries()["q_stream_pair_curate"](spark, SF_SMOKE)
+    assert out.count() == 4
+    left = [n for n in _catalog_names(spark) if n.startswith("pair_curate_stream_")]
+    assert left == []
+
+
+def test_memory_sink_query_unregisters_its_view(spark):
+    from clv_data_pipeline_spark import registry
+
+    before = _catalog_names(spark)
+    out = registry.all_queries()["q_stream_pyds"](spark, SF_SMOKE)
+    assert out.count() > 0
+    assert _catalog_names(spark) == before
+
+
+def test_stream_helpers_clean_up_when_the_sink_raises(spark, tmp_path, monkeypatch):
+    """A failing sink's error reaches the caller, and neither the
+    scratch arrival/checkpoint dirs nor the state table survive it."""
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    from clv_data_pipeline_spark.streaming.ingest import (
+        replay_arrivals,
+        scratch_tables,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    before = _catalog_names(spark)
+
+    def sink(batch_df, batch_id):
+        batch_df.write.saveAsTable(table)
+        raise RuntimeError("sink failed on purpose")
+
+    with pytest.raises(StreamingQueryException, match="sink failed on purpose"):
+        with scratch_tables(spark, "failing_sink") as (table,):
+            replay_arrivals([spark.range(3), spark.range(3, 6)], sink)
+    assert os.listdir(tmp_path) == []
+    assert _catalog_names(spark) == before
+
+
+def test_stream_helpers_stop_a_query_that_outlives_the_timeout(spark, monkeypatch):
+    import time
+
+    from clv_data_pipeline_spark.streaming import ingest
+
+    monkeypatch.setattr(ingest, "AWAIT_TIMEOUT_S", 1)
+
+    def slow_sink(batch_df, batch_id):
+        time.sleep(4)
+
+    with pytest.raises(TimeoutError):
+        ingest.replay_arrivals([spark.range(3)], slow_sink)
+    assert spark.streams.active == []
