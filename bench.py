@@ -2,13 +2,14 @@
 """Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"sf": ..., "slowest": {name: sec}, ...}; the full per-query dict
-{name: sec} for every headline query is written to BENCH_LOCAL.json
-(+ the per-round BENCH_LOCAL_r{N}.json snapshot) because the driver
-keeps only a ~2 KB stdout tail, which a 229-entry dict cannot fit
-(VERDICT r12 item 2a).  Set SPARK_GRAFT_BENCH_STDOUT=full to also
-print the full record as a first line.  The timed query set itself is
-append-only across rounds (HEADLINE below).
+"sf": ..., "session": {resolved config}, "slowest": {name: sec}, ...};
+the full per-query dict {name: sec} for every headline query is
+written to BENCH_LOCAL.json (+ the per-round BENCH_LOCAL_r{N}.json
+snapshot) because the driver keeps only a ~2 KB stdout tail, which a
+229-entry dict cannot fit (VERDICT r12 item 2a).  Set
+SPARK_GRAFT_BENCH_STDOUT=full to also print the full record as a
+first line.  The timed query set itself is append-only across rounds
+(HEADLINE below).
 
 Queries execute via count() — full plan execution without collect
 transfer.  The set covers every workload family: the flagship RFM agg,
@@ -410,6 +411,44 @@ def _calibrate(spark) -> dict[str, float]:
     return out
 
 
+#: Byte budget of the printed summary line: the driver keeps a ~2 KB
+#: stdout tail, which must also hold the line's neighbours.
+SUMMARY_MAX_BYTES = 1500
+
+
+def session_config(spark) -> dict:
+    """The resolved session settings the timings depend on: master,
+    heap (as configured and as the JVM got it), GC, shuffle partitions
+    and the generated-class cache size."""
+    conf = spark.sparkContext.getConf()
+    runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
+    return {
+        "spark.master": conf.get("spark.master"),
+        "spark.driver.memory": conf.get("spark.driver.memory", "unset"),
+        "jvm_max_heap_mb": round(runtime.maxMemory() / 2**20),
+        "gc": [o for o in conf.get("spark.driver.extraJavaOptions", "").split()
+               if o.startswith("-XX:+Use") and o.endswith("GC")],
+        "spark.sql.shuffle.partitions":
+            spark.conf.get("spark.sql.shuffle.partitions"),
+        "spark.sql.codegen.cache.maxEntries":
+            spark.conf.get("spark.sql.codegen.cache.maxEntries"),
+    }
+
+
+def summarize(out: dict) -> dict:
+    """The compact printed line: ``out`` without its per-query dict,
+    plus the query count and the 10 slowest queries (the ones worth
+    reading) as the line's per-query signal."""
+    timings = out["queries"]
+    summary = {k: v for k, v in out.items() if k != "queries"}
+    summary["n_queries"] = len(timings)
+    summary["slowest"] = dict(
+        sorted(timings.items(), key=lambda kv: -kv[1])[:10]
+    )
+    summary["per_query_file"] = "BENCH_LOCAL.json"
+    return summary
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -489,6 +528,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
+        "session": session_config(spark),
         # untimed pass building keyed artifacts (stored models/indexes)
         # before the timed reps — timings measure the warm path
         "artifact_warmup_sec": warm_sec,
@@ -532,14 +572,7 @@ def main() -> None:
     # snapshot (both committed), which is where every cross-round
     # per-query baseline has been read from since round 7 anyway.
     # SPARK_GRAFT_BENCH_STDOUT=full restores the old two-line form.
-    summary = {k: v for k, v in out.items() if k != "queries"}
-    summary["n_queries"] = len(timings)
-    # Give the driver-recorded summary SOME per-query signal within its
-    # ~2 KB budget: the 10 slowest queries (the ones worth reading).
-    summary["slowest"] = dict(
-        sorted(timings.items(), key=lambda kv: -kv[1])[:10]
-    )
-    summary["per_query_file"] = "BENCH_LOCAL.json"
+    summary = summarize(out)
     if os.environ.get("SPARK_GRAFT_BENCH_STDOUT") == "full":
         print(json.dumps(out), flush=True)
     print(json.dumps(summary), flush=True)

@@ -344,6 +344,7 @@ def als_fit_cached(
     from clv_data_pipeline_spark.sources.io import (
         artifact_path,
         materialize_temp,
+        read_parquet,
     )
 
     spark = ratings.sparkSession
@@ -363,10 +364,10 @@ def als_fit_cached(
             "als_yf_",
             key=full_key,
         )
-    uf_df = spark.read.parquet(uf_path)
+    uf_df = read_parquet(spark, uf_path)
     Y = {
         row["item"]: np.array(row["yf"])
-        for row in spark.read.parquet(yf_path).collect()
+        for row in read_parquet(spark, yf_path).collect()
     }
     return uf_df, Y
 

@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from clv_data_pipeline_spark.functions.text import normalize_text
 from clv_data_pipeline_spark.registry import query
-from clv_data_pipeline_spark.sources.io import load_table
+from clv_data_pipeline_spark.sources.io import load_table, read_parquet
 
 
 @query(
@@ -6068,9 +6068,7 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clv_data_pipeline_spark.streaming.ingest import drain_to_memory
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(
-        f"{sf_dir}/events.parquet"
-    ).schema
+    raw_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")

@@ -4891,6 +4891,7 @@ def _als_portable_fit(
     from clv_data_pipeline_spark.sources.io import (
         artifact_path,
         materialize_temp,
+        read_parquet,
     )
 
     if cache_key is not None:
@@ -4904,12 +4905,12 @@ def _als_portable_fit(
         ):
             Y = {
                 r["it"]: [r["y1"], r["y2"], r["y3"], r["y4"]]
-                for r in spark.read.parquet(ypath).collect()
+                for r in read_parquet(spark, ypath).collect()
             }
             return (
-                spark.read.parquet(xpath),
+                read_parquet(spark, xpath),
                 Y,
-                spark.read.parquet(rpath),
+                read_parquet(spark, rpath),
             )
         # the quantized interaction table is itself a derived artifact
         # (the seen-set every serve-path anti-join probes) — store it
@@ -8010,8 +8011,9 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Three unrolled iterations, each one edge-keyed shuffle per
     direction with 9 dp-rounded scores inside DECIMAL sums and
-    sum-normalization over the bounded score frames (brands: 25 rows;
-    users: one partial-agg pass) — the oracle replays the whole
+    sum-normalization over the bounded score frames (brands: a
+    whole-frame window over 25 rows; users: a partial-agg pass and a
+    broadcast total) — the oracle replays the whole
     trajectory.  Scale: cost is O(edges) per half-step, state is one
     score per node, exactly pagerank's shape."""
     ui = _ui_brand_cached(spark, sf_dir)
@@ -8030,23 +8032,23 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("s")
             )
         )
-        at = ar.agg(
-            F.sum(F.col("s").cast("decimal(28,9)"))
-            .cast("double")
-            .alias("tot")
-        )
-        # lineage break: each broadcast-total build is its own job and
-        # would otherwise re-execute every earlier iteration's chain
-        # from the scan (O(iters^2) shuffles); checkpointed score
-        # frames keep the whole trajectory O(iters).
-        a = (
-            ar.crossJoin(F.broadcast(at))
-            .select(
-                "b",
-                F.round(F.col("s") / F.col("tot"), 9).alias("a"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        # brands are bounded (25 p_brand values), so their total is a
+        # whole-frame window on one task instead of a separate total
+        # job; users are not, so their half-step below keeps the
+        # partial aggregate.  Lineage break: each broadcast build is
+        # its own job and would otherwise re-execute every earlier
+        # iteration's chain from the scan (O(iters^2) shuffles);
+        # checkpointed score frames keep the trajectory O(iters).
+        a = ar.select(
+            "b",
+            F.round(
+                F.col("s")
+                / F.sum(F.col("s").cast("decimal(28,9)"))
+                .over(Window.partitionBy())
+                .cast("double"),
+                9,
+            ).alias("a"),
+        ).localCheckpoint(eager=False)
         hr = (
             ui.join(F.broadcast(a), "b")
             .groupBy("u")

@@ -47,7 +47,7 @@ from clv_data_pipeline_spark.operators.multimodal import (
     sample_frames,
 )
 from clv_data_pipeline_spark.registry import query
-from clv_data_pipeline_spark.sources.io import load_table
+from clv_data_pipeline_spark.sources.io import load_table, read_parquet
 
 #: DuckDB twin of the Spark tokenizer (normalize_text + split on space)
 #: — defined up top because both the BPE-training oracle and the
@@ -472,9 +472,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch_tables,
     )
 
-    raw_schema = spark.read.parquet(
-        f"{sf_dir}/documents.parquet"
-    ).schema
+    raw_schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")

@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from clv_data_pipeline_spark.operators.sessions import session_stats
 from clv_data_pipeline_spark.registry import query
-from clv_data_pipeline_spark.sources.io import load_table
+from clv_data_pipeline_spark.sources.io import load_table, read_parquet
 
 
 def _dec_sum(col: F.Column, scale: str = "decimal(25,6)") -> F.Column:
@@ -606,7 +606,7 @@ def q_stream_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = read_parquet(spark, path).schema
     # the streaming file source requires a directory: list the SF dir
     # and glob-filter to the events file
     stream = (
@@ -684,7 +684,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = read_parquet(spark, path).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -746,7 +746,7 @@ def q_stream_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = read_parquet(spark, path).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -808,7 +808,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = read_parquet(spark, path).schema
     ts_is_bigint = (
         dict((f.name, f.dataType.simpleString()) for f in raw_schema).get(
             "ts"

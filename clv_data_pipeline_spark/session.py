@@ -10,6 +10,12 @@ The reference pipeline delegated execution to BigQuery and pandas
   partitioning is data-dependent; let the runtime re-plan.
 - Arrow on: every driver <-> executor pandas crossing (the model-fit
   barrier, pandas UDF scoring) moves columnar batches, not pickled rows.
+- A 1000-entry generated-class cache: Spark's default of 100 is below
+  the ~135 classes one round of q_hits, q_ridge and q_scd2_stream
+  generates, so with it every warm round evicted and recompiled 80-95
+  of them (Janino, then the JIT compiled them again).  The cache is a
+  static conf: it must be set before the session's first query, which
+  ``get_spark`` does.
 """
 
 from __future__ import annotations
@@ -37,6 +43,9 @@ DEFAULT_CONF: dict[str, str] = {
     # and convert at the source (sources/io.py) like DuckDB does (ns
     # truncated to micros).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Generated-class cache: the build-heavy query mix has a working
+    # set of ~135 classes, above the default 100 (see the docstring).
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

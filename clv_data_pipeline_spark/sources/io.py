@@ -9,9 +9,11 @@ append / overwrite / create-if-missing dispositions map to save modes.
 
 Scale notes: staging writes are partitioned by load date so the daily
 full-refresh feature build prunes to the partitions it needs instead of
-re-listing 100 TB of history.  CSV readers take an explicit schema;
-``load_table`` infers each testdata table's schema from its parquet
-footers, which costs one small Spark job per table.
+re-listing 100 TB of history.  CSV readers take an explicit schema.
+Parquet reads go through ``read_parquet``: Spark infers a parquet
+schema with one small job that reads a footer, so the first read of a
+file pays that job and every later read of the unchanged file passes
+the stored schema and runs none.
 """
 
 from __future__ import annotations
@@ -55,6 +57,47 @@ def normalize_timestamps(df: DataFrame, name: str | None = None) -> DataFrame:
     return df
 
 
+#: Reader confs that change the schema Spark infers from a parquet
+#: footer; each is part of a stored schema's key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+#: Inferred schemas as JSON (immutable, unlike a StructType), one per
+#: file version and reader-conf set read in this process.
+_SCHEMAS: dict[tuple, str] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Scan a parquet file or dataset, inferring its schema only once.
+
+    The first read of ``path`` infers the schema (one Spark job); later
+    reads pass the stored schema to ``spark.read.schema`` and run no
+    job.  The stored schema is keyed on the path, its ``st_mtime_ns``
+    and size, and the reader confs in ``_SCHEMA_CONFS``, so a rewritten
+    file or a changed conf infers again.  A path ``os.stat`` cannot see
+    (an object-store URI) infers on every read.
+    """
+    import json
+
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size,
+           *(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    stored = _SCHEMAS.get(key)
+    if stored is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema.json()
+        return df
+    schema = T.StructType.fromJson(json.loads(stored))
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver testdata parquet table (columnar, prunable),
     with timestamp encodings normalized (see normalize_timestamps)."""
@@ -77,7 +120,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 stacklevel=2,
             )
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     return normalize_timestamps(df, name)
 
 
@@ -248,7 +291,9 @@ def materialize_temp(
     exactly what a production pipeline stores at these branch points
     (a features table, a signature index), just at a managed path
     instead of a tmpdir.  Lifecycle: the OS/container reaps the
-    tempdir; nothing stays resident in the Spark session.
+    tempdir; nothing stays resident in the Spark session.  The scan
+    runs no schema-inference job: it reads with the schema of the
+    frame just written, or (keyed) through ``read_parquet``.
 
     ``key`` opts into DERIVED-ARTIFACT semantics: a deterministic
     content key (e.g. source path + mtime) maps to a stable path, and a
@@ -265,7 +310,7 @@ def materialize_temp(
     if key is None:
         path = tempfile.mkdtemp(prefix=prefix) + "/data"
         df.write.parquet(path)
-        return spark.read.parquet(path)
+        return spark.read.schema(df.schema).parquet(path)
 
     path = artifact_path(prefix, key)
     root = os.path.dirname(path)
@@ -276,7 +321,7 @@ def materialize_temp(
             os.rename(stage, path)
         except OSError:
             shutil.rmtree(stage, ignore_errors=True)  # concurrent winner
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def artifact_path(prefix: str, key: str) -> str:

@@ -14,6 +14,23 @@ SF_SMOKE = os.path.join(TESTDATA, "sf0.001")
 SF_ORACLE = os.path.join(TESTDATA, "sf0.01")
 
 
+def jobs_during(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-during-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     # local[8] (round 13): the suite must finish inside the driver's

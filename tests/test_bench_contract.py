@@ -65,3 +65,26 @@ def test_bench_local_snapshot_carries_full_per_query_dict():
     with open(path) as f:
         rec = json.load(f)
     assert set(bench.HEADLINE) <= set(rec["queries"])
+
+
+def test_summary_line_records_session_config_within_budget(spark):
+    """The printed line carries the resolved session config, and with
+    the full HEADLINE (its 10 longest names the slowest) it stays
+    inside its byte budget."""
+    config = bench.session_config(spark)
+    assert config["spark.sql.codegen.cache.maxEntries"] == "1000"
+    assert {"spark.master", "spark.driver.memory", "gc",
+            "spark.sql.shuffle.partitions"} <= set(config)
+    timings = {n: round(100 + len(n) + 0.123, 3) for n in bench.HEADLINE}
+    calib = {"jvm": 0.123, "shuffle": 0.456, "python": 0.789}
+    out = {
+        "metric": "headline_queries_total_runtime",
+        "value": 12345.678, "unit": "sec", "queries": timings, "sf": 0.1,
+        "session": config, "artifact_warmup_sec": 123.456,
+        "calib_start": calib, "calib_end": calib,
+        "comparable_total": 12345.678, "comparable_n": len(timings),
+        **{f"comparable_r{r}_total": 1234.567 for r in (3, 4, 5, 6)},
+    }
+    summary = bench.summarize(out)
+    assert summary["session"] == config and "queries" not in summary
+    assert len(json.dumps(summary)) <= bench.SUMMARY_MAX_BYTES

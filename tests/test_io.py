@@ -12,6 +12,7 @@ from clv_data_pipeline_spark.sources.io import (
     table_columns,
     write_csv,
 )
+from tests.conftest import jobs_during
 
 
 def test_csv_write_read_roundtrip_with_schema(spark, tmp_path):
@@ -256,3 +257,57 @@ def test_materialize_temp_keyed_reuses_artifact(spark, tmp_path):
     assert os.path.dirname(out4.inputFiles()[0]) != os.path.dirname(path1)
     local_dir = os.path.dirname(path1).removeprefix("file:")
     assert glob.glob(os.path.join(local_dir, "*.parquet"))
+
+
+def test_load_table_infers_each_file_schema_once(spark, tmp_path):
+    """A second load_table of an unchanged file runs no Spark job; a
+    rewritten file, or a changed reader conf, infers again."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from clv_data_pipeline_spark.sources.io import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1, 2], "b": [b"x", b"y"]}), path)
+    first, jobs = jobs_during(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    assert jobs == 1 and first.dtypes == [("id", "bigint"), ("b", "binary")]
+    again, jobs = jobs_during(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    assert jobs == 0 and again.schema == first.schema
+    assert sorted(r["id"] for r in again.collect()) == [1, 2]
+
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        as_string = load_table(spark, str(tmp_path), "t")
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert dict(as_string.dtypes)["b"] == "string"
+
+    pq.write_table(pa.table({"id": [3], "extra": ["z"]}), path)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    rewritten = load_table(spark, str(tmp_path), "t")
+    assert rewritten.dtypes == [("id", "bigint"), ("extra", "string")]
+    assert [tuple(r) for r in rewritten.collect()] == [(3, "z")]
+
+
+def test_materialize_temp_reads_back_without_inference(spark, tmp_path):
+    """A keyed reuse of a stored artifact runs no Spark job, and the
+    unkeyed read-back has the written frame's columns and types."""
+    from pyspark.sql import functions as F
+
+    from clv_data_pipeline_spark.sources.io import materialize_temp
+
+    df = spark.range(10).withColumn("v", F.col("id").cast("decimal(12,2)"))
+    key = f"test-reuse-{tmp_path.name}"
+    built = materialize_temp(df, "test_reuse_", key=key)
+    reused, jobs = jobs_during(
+        spark, lambda: materialize_temp(df, "test_reuse_", key=key)
+    )
+    assert jobs == 0
+    assert reused.schema == built.schema and reused.count() == 10
+
+    back = materialize_temp(df, "test_unkeyed_")
+    assert back.dtypes == df.dtypes
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
