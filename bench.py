@@ -5,7 +5,7 @@ compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "sf": ..., "session": {resolved config}, "slowest": {name: sec}, ...};
 the full per-query dict {name: sec} for every headline query is
 written to BENCH_LOCAL.json (+ the per-round BENCH_LOCAL_r{N}.json
-snapshot) because the driver keeps only a ~2 KB stdout tail, which a
+snapshot) because a caller may keep only a ~2 KB stdout tail, which a
 229-entry dict cannot fit (VERDICT r12 item 2a).  Set
 SPARK_GRAFT_BENCH_STDOUT=full to also print the full record as a
 first line.  The timed query set itself is append-only across rounds
@@ -411,8 +411,8 @@ def _calibrate(spark) -> dict[str, float]:
     return out
 
 
-#: Byte budget of the printed summary line: the driver keeps a ~2 KB
-#: stdout tail, which must also hold the line's neighbours.
+#: Byte budget of the printed summary line: a caller that keeps only a
+#: ~2 KB stdout tail must find the whole line, and its neighbours, in it.
 SUMMARY_MAX_BYTES = 1500
 
 
