@@ -17,9 +17,13 @@ re-expression:
   Hardie 2013) formulas, penalized like the reference
   (penalizer_coef=0.1, dags/clv_models.py:62,65).
 - **Predict** (M2): the BG/NBD conditional-expected-purchases formula
-  needs the Gauss hypergeometric 2F1, which Spark lacks — an
-  Arrow-vectorized pandas UDF with the fitted params captured in the
-  closure (4 floats broadcast with the task, map-only, no shuffle).
+  needs the Gauss hypergeometric 2F1, which Spark lacks, and depends on
+  (frequency, recency, T) only — the same triples the fit collected.
+  ``score_customers`` evaluates it with numpy on the driver once per
+  distinct triple (a day has a handful), ships the table as an
+  Arrow-built LocalRelation and broadcast-joins it back to the
+  customers: no Python worker runs.  ``expected_purchases_udf`` keeps
+  the Arrow pandas-UDF form for queries that score arbitrary inputs.
 - **Gamma-Gamma profit** (M4) is a closed-form rational expression —
   pure JVM-side Column arithmetic, no UDF.
 - **CLV assembly** (M5): clv = E[purchases 365d] * E[avg value] * 0.99,
@@ -36,6 +40,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from clv_data_pipeline_spark.functions.optimize import nelder_mead
 from clv_data_pipeline_spark.functions.special import hyp2f1, lgamma
@@ -282,8 +287,8 @@ def expected_purchases_np(
     T: np.ndarray,
 ) -> np.ndarray:
     """BG/NBD conditional expected purchases in the next ``t`` days
-    (Fader-Hardie-Lee 2005 eq. (10)) — numpy core shared by the pandas
-    UDF and the driver-side tests.
+    (Fader-Hardie-Lee 2005 eq. (10)) — numpy core shared by
+    ``score_customers``' driver-side table and the pandas UDF.
     """
     r, alpha, a, b = params.r, params.alpha, params.a, params.b
     z = t / (alpha + T + t)
@@ -388,6 +393,30 @@ def expected_avg_value_col(
     return (F.lit(1.0) - weight) * population_mean + weight * m
 
 
+def _expected_purchases_table(
+    returning: DataFrame,
+    bg: BetaGeoParams,
+    triples: pd.DataFrame,
+    horizons: dict[str, float],
+) -> DataFrame:
+    """One row per distinct (frequency, recency, t) triple: the triple
+    as ``_frequency``, ``_recency``, ``_t`` (typed like ``returning``'s
+    columns) and one expected-purchases column per ``horizons`` entry,
+    evaluated with numpy on the driver.  ``createDataFrame`` turns the
+    pandas frame into a LocalRelation through Arrow, so neither the
+    table nor its join runs a Python worker."""
+    keys = triples[_RFT_KEYS].reset_index(drop=True)
+    x, t_x, T = (keys[k].to_numpy(dtype=np.float64) for k in _RFT_KEYS)
+    table = keys.rename(columns={k: f"_{k}" for k in _RFT_KEYS})
+    for name, horizon in horizons.items():
+        table[name] = expected_purchases_np(bg, horizon, x, t_x, T)
+    schema = StructType(
+        [StructField(f"_{k}", returning.schema[k].dataType) for k in _RFT_KEYS]
+        + [StructField(name, DoubleType()) for name in horizons]
+    )
+    return returning.sparkSession.createDataFrame(table, schema)
+
+
 def score_customers(
     returning: DataFrame,
     bg: BetaGeoParams,
@@ -395,42 +424,43 @@ def score_customers(
     predict_horizon: float = PREDICT_HORIZON_DAYS,
     clv_horizon: float = CLV_HORIZON_DAYS,
     discount: float = DISCOUNT,
+    triples: pd.DataFrame | None = None,
 ) -> DataFrame:
     """M2+M4+M5+M6: full scoring (reference dags/clv_models.py:70-80).
 
     predicted_purchases = E[X(30d)]; clv = E[X(365d)] * E[avg value] *
     0.99, assembled manually like the reference; then the quality fixes.
-    One map-only stage: two pandas-UDF columns + native arithmetic.
+    The BG/NBD predictions come from a driver-side table with one row per
+    distinct (frequency, recency, t) triple, broadcast-joined back on
+    null-safe equality; Gamma-Gamma, CLV and the flags are native Column
+    arithmetic.  ``triples`` holds those distinct triples (the BG/NBD
+    statistics of ``fit_statistics``, whose extra columns are ignored);
+    when None they are collected from ``returning`` in one job.
     """
-    p30 = expected_purchases_udf(bg, predict_horizon)
-    p365 = expected_purchases_udf(bg, clv_horizon)
+    if triples is None:
+        triples = returning.select(*_RFT_KEYS).distinct().toPandas()
+    table = _expected_purchases_table(
+        returning,
+        bg,
+        triples,
+        {"_purchases_predict": predict_horizon, "_purchases_clv": clv_horizon},
+    )
+    on = [F.col(k).eqNullSafe(F.col(f"_{k}")) for k in _RFT_KEYS]
     scored = (
-        returning.withColumn(
-            "predicted_purchases",
-            p30(
-                F.col("frequency").cast("double"),
-                F.col("recency").cast("double"),
-                F.col("t").cast("double"),
-            ),
-        )
-        .withColumn(
-            "predicted_avg_value", expected_avg_value_col(gg)
-        )
-        .withColumn(
-            "_purchases_clv_horizon",
-            p365(
-                F.col("frequency").cast("double"),
-                F.col("recency").cast("double"),
-                F.col("t").cast("double"),
-            ),
+        returning.join(F.broadcast(table), on, "left")
+        .select(
+            *returning.columns,
+            F.col("_purchases_predict").alias("predicted_purchases"),
+            expected_avg_value_col(gg).alias("predicted_avg_value"),
+            "_purchases_clv",
         )
         .withColumn(
             "clv",
-            F.col("_purchases_clv_horizon")
+            F.col("_purchases_clv")
             * F.col("predicted_avg_value")
             * F.lit(discount),
         )
-        .drop("_purchases_clv_horizon")
+        .drop("_purchases_clv")
     )
     return apply_data_quality_fixes(scored, value_col="clv")
 
@@ -455,19 +485,7 @@ def run_clv_logic(features: DataFrame) -> DataFrame:
         raise ValueError("Dataframe is empty")
     bg = fit_bgnbd(bg_stats)
     gg = fit_gamma_gamma(gg_stats)
-    return score_customers(returning, bg, gg)
-
-
-def predictions_projection(scored: DataFrame) -> DataFrame:
-    """P1: the 6-column output projection (reference dags/clv_models.py:93)."""
-    return scored.select(
-        "customer_id",
-        "predicted_purchases",
-        "predicted_avg_value",
-        "clv",
-        "negatif_clv_flag",
-        "outliners_flag",
-    )
+    return score_customers(returning, bg, gg, triples=bg_stats)
 
 
 # --- Pareto/NBD (Schmittlein-Morrison-Colombo 1987) ----------------------

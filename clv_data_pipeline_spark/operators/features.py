@@ -20,12 +20,14 @@ Semantic fine points faithfully preserved (SURVEY.md §2.3):
 - ``T`` depends on CURRENT_DATE() in the reference — parameterized here
   as ``asof`` for deterministic testing, defaulting to current_date().
 
-Execution shape: one hash aggregate.  Catalyst plans it as partial
-(map-side) + final aggregation keyed on the customer column; the
-COUNT(DISTINCT DATE(ts)) rides the same shuffle via a per-(customer,
-date) expand.  No joins, no windows, no UDFs — at 100 TB this is a
-single shuffle of ~(n_customers x n_active_days) partial rows, far
-smaller than the input scan.
+Execution shape: one aggregate, one shuffle.  Catalyst plans it as
+partial (map-side) + final aggregation keyed on the customer column;
+the distinct-day count is ``size(collect_set(DATE(ts)))``, a per-group
+set that merges like any other partial aggregate.  COUNT(DISTINCT
+DATE(ts)) beside the other aggregates would plan an Expand and a second
+shuffle.  No joins, no windows, no UDFs — at 100 TB this is a single
+shuffle of ~n_customers partial rows per map task (each carrying its
+customers' active days), far smaller than the input scan.
 """
 
 from __future__ import annotations
@@ -82,7 +84,9 @@ def rfm_features(
         .cast("long")
         .alias("recency"),
         F.datediff(asof_col, F.to_date(F.min(ts))).cast("long").alias("T"),
-        (F.count_distinct(F.to_date(ts)) - F.lit(1)).alias("frequency"),
+        (F.size(F.collect_set(F.to_date(ts))) - F.lit(1))
+        .cast("long")
+        .alias("frequency"),
         monetary,
         F.min(ts).alias("first_purchase"),
         F.max(ts).alias("last_purchase"),

@@ -41,13 +41,3 @@ def apply_data_quality_fixes(
     target = clipped_col or value_col
     return out.withColumn(target, F.greatest(v, F.lit(0.0)))
 
-
-def flag_counts(df: DataFrame) -> tuple[int, int]:
-    """SUM of the 0/1 flags for the log lines (reference
-    dags/clv_models.py:27,33).  One tiny 2-column aggregate.
-    """
-    row = df.agg(
-        F.sum("negatif_clv_flag").alias("n"),
-        F.sum("outliners_flag").alias("o"),
-    ).first()
-    return int(row["n"] or 0), int(row["o"] or 0)

@@ -21,8 +21,14 @@ others, each because the driver needs its answer or it is an output:
 - ``run_clv_logic``'s one fit collect, the sufficient statistics of
   both models for the driver-side MLE (its empty guard runs a job only
   when the fit finds nothing to fit);
+- the broadcast of the scoring table: expected purchases per distinct
+  (frequency, recency, t) triple of that collect, computed with numpy
+  on the driver;
 - the predictions write: its ``observe()`` count is the output row
   count.
+
+No task of the day runs Python on an executor, so no Python worker
+starts.
 
 Every table is read with a known schema (the written frame's, for the
 features), so no read runs a schema-inference job.  With adaptive
@@ -54,7 +60,6 @@ from clv_data_pipeline_spark.operators.validate import (
     observed_features,
     run_validation_checks,
 )
-from clv_data_pipeline_spark.registry import ensure_worker_imports
 from clv_data_pipeline_spark.schemas import REGISTRY_SCHEMA, STAGING_SCHEMA
 from clv_data_pipeline_spark.simulate import simulate_daily_batch
 
@@ -124,8 +129,6 @@ def run_pipeline(
     predictions_path = os.path.join(base_dir, "predicted_clv")
     registry_path = os.path.join(base_dir, "master_users")
     run_date = str(run_date)
-    # the scoring pandas UDF imports this package on the Python workers
-    ensure_worker_imports(spark)
 
     # Task 0 — ID registry (reference simulate_data.py:23-95)
     if max_existing_id is None:

@@ -31,6 +31,31 @@ def jobs_during(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def plans_during(spark, fn, window=500):
+    """Run ``fn``; return its result and the final physical plan text of
+    every SQL execution it started, read from the SQL status store
+    (which the session keeps with or without the UI).  ``window`` bounds
+    how many of the store's latest executions are searched."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def latest():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n = store.executionsCount()
+        seq = store.executionsList(max(n - window, 0), window)
+        return [seq.apply(i) for i in range(seq.size())]
+
+    before = max((e.executionId() for e in latest()), default=-1)
+    out = fn()
+    plans = [
+        e.physicalPlanDescription()
+        for e in latest()
+        if e.executionId() > before
+    ]
+    assert len(plans) < window, "raise window: executions may be missing"
+    return out, plans
+
+
 @pytest.fixture(scope="session")
 def spark():
     # local[8] (round 13): the suite must finish inside the driver's

@@ -185,11 +185,57 @@ def test_score_customers_end_to_end(spark):
     out = score_customers(df, bg, gg).toPandas().set_index("customer_id")
     assert out.loc[1, "predicted_purchases"] > 0
     assert out.loc[1, "clv"] >= 0
-    # pandas-UDF path must agree with the numpy core
+    # the driver-side table runs the numpy core itself: exact agreement
     e = expected_purchases_np(
         bg, 30.0, np.array([3.0]), np.array([10.0]), np.array([40.0])
     )[0]
-    assert abs(out.loc[1, "predicted_purchases"] - e) < 1e-9
+    assert out.loc[1, "predicted_purchases"] == e
+
+
+def test_score_customers_standalone_repeated_triples(spark):
+    """A standalone caller (no fit statistics passed) collects the
+    distinct triples itself; customers sharing a triple, including one
+    with a NULL recency, each get their triple's prediction, and every
+    row survives the join."""
+    bg = BetaGeoParams(r=0.24, alpha=4.41, a=0.79, b=2.43)
+    gg = GammaGammaParams(p=6.0, q=4.0, v=15.0)
+    rows = [
+        (1, 10, 40, 3, 55.0),
+        (2, 10, 40, 3, 70.0),
+        (3, 5, 40, 1, 20.0),
+        (4, 10, 40, 3, 55.0),
+        (5, None, 40, 3, 30.0),
+        (6, None, 40, 3, 31.0),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "customer_id long, recency long, t long, frequency long, "
+        "monetary double",
+    )
+    out = score_customers(df, bg, gg)
+    assert out.columns == [
+        *df.columns, "predicted_purchases", "predicted_avg_value", "clv",
+        "negatif_clv_flag", "outliners_flag",
+    ]
+    pdf = out.toPandas().set_index("customer_id").sort_index()
+    assert list(pdf.index) == [1, 2, 3, 4, 5, 6]
+    for t_x, x, ids in [(10.0, 3.0, [1, 2, 4]), (5.0, 1.0, [3])]:
+        want = expected_purchases_np(
+            bg, 30.0, np.array([x]), np.array([t_x]), np.array([40.0])
+        )[0]
+        assert (pdf.loc[ids, "predicted_purchases"] == want).all()
+    # a NULL key matches only the NULL triple's row, whose numpy
+    # prediction is NaN and arrives as NULL, like the pandas UDF's
+    assert pdf.loc[[5, 6], "predicted_purchases"].isna().all()
+    assert (pdf.loc[[5, 6], "clv"] == 0.0).all()
+    want_clv = (
+        expected_purchases_np(
+            bg, 365.0, np.array([3.0]), np.array([10.0]), np.array([40.0])
+        )[0]
+        * pdf.loc[2, "predicted_avg_value"]
+        * 0.99
+    )
+    assert pdf.loc[2, "clv"] == want_clv
 
 
 def test_pareto_nbd_parameter_recovery(spark):

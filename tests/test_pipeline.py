@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from clv_data_pipeline_spark.operators.clv import run_clv_logic
 from clv_data_pipeline_spark.plans.pipeline import run_pipeline
 from clv_data_pipeline_spark.simulate import simulate_daily_batch
 
@@ -181,14 +182,49 @@ def test_observed_firewall_metrics_parity_on_dirty_data(spark, tmp_path):
         )
 
 
-def test_pipeline_ships_package_to_workers(spark, tmp_path, monkeypatch):
-    """run_pipeline ships the package to the Python workers itself, so
-    the scoring pandas UDF imports it whatever the caller's cwd."""
-    sc = spark.sparkContext
-    monkeypatch.setattr(sc, "_clv_pkg_shipped", False, raising=False)
-    res = run_pipeline(spark, str(tmp_path), run_date="2026-01-01", seed=1)
+#: plan nodes that need a Python worker: Python UDF evaluation, and the
+#: scan of an RDD built from Python rows
+PYTHON_WORKER_NODES = ("ArrowEvalPython", "BatchEvalPython", "ExistingRDD")
+
+
+def _assert_no_python_worker_plans(plans):
+    for plan in plans:
+        for node in PYTHON_WORKER_NODES:
+            assert node not in plan, plan
+
+
+def test_scoring_plans_run_no_python(spark, tmp_path):
+    """Scoring evaluates the BG/NBD predictions on the driver: neither
+    run_clv_logic's plans nor any plan of a scoring pipeline day (its
+    predictions write included) holds a Python UDF node or an RDD built
+    from Python data, so no Python worker starts."""
+    from tests.conftest import plans_during
+    from tests.test_clv_logic import _fit_features
+
+    model_in = _fit_features(spark).selectExpr(
+        "customer_id", "recency", "t", "frequency", "monetary",
+        "current_timestamp() AS first_purchase",
+        "current_timestamp() AS last_purchase",
+    )
+    rows, plans = plans_during(
+        spark, lambda: run_clv_logic(model_in).collect()
+    )
+    assert len(rows) == 600
+    _assert_no_python_worker_plans(plans)
+    assert any("LocalTableScan" in p and "BroadcastHashJoin" in p for p in plans)
+
+    base = str(tmp_path)
+    try:
+        run_pipeline(spark, base, run_date="2026-01-01", seed=1)
+    except ValueError as exc:  # day 1: no returning customers
+        assert str(exc).startswith("No customers")
+    res, plans = plans_during(
+        spark,
+        lambda: run_pipeline(spark, base, run_date="2026-01-02", seed=2),
+    )
     assert res.prediction_rows > 0
-    assert sc._clv_pkg_shipped is True
+    assert any(res.predictions_path in p for p in plans)
+    _assert_no_python_worker_plans(plans)
 
 
 def test_pipeline_unreadable_registry_raises(spark, tmp_path):
