@@ -308,19 +308,15 @@ ARTIFACT_WARMUP = (
     "q_item_cf_incremental", "q_ann_pq_incremental",
 )
 
-#: Round-13 (VERDICT r12 item 7): the warmup pass is untimed but it is
-#: real driver wall-clock (~45 s sequential), and its 24 queries are
-#: mutually independent jobs — exactly guide §2.6's "overlap
-#: independent jobs" case, so the pass runs them from a small thread
-#: pool (one thread per lane; Spark's FIFO scheduler back-fills each
-#: job's straggler tail with the next lane's tasks).  The lanes
-#: PARTITION ARTIFACT_WARMUP (pinned by tests/test_bench_contract.py):
-#: queries that share a derived artifact stay in ONE lane so no two
-#: threads race to build the same key (materialize_temp's staging
-#: rename makes such a race safe but wasteful).  The warmed list is
-#: unchanged — same 24 queries, same artifacts, only scheduled
-#: concurrently.  SPARK_GRAFT_BENCH_WARM_LANES=1 restores the
-#: sequential pass.
+#: The untimed warmup pass is real driver wall-clock (~45 s when run
+#: one query at a time), and its 24 queries are mutually independent
+#: jobs, so the pass runs them from a small thread pool: one thread per
+#: lane, and Spark's FIFO scheduler back-fills each job's straggler
+#: tail with the next lane's tasks.  The lanes PARTITION
+#: ARTIFACT_WARMUP (pinned by tests/test_bench_contract.py): queries
+#: that share a derived artifact stay in ONE lane so no two threads
+#: race to build the same key (materialize_temp's staging rename makes
+#: such a race safe but wasteful).
 WARMUP_LANES = (
     # ALS model + CLV lattice fit + PCA basis + one-off signatures
     ("q_als_recommend", "q_als_eval", "q_pareto_nbd", "q_clv_scores",
@@ -340,25 +336,18 @@ WARMUP_LANES = (
 def warm_artifacts(spark, queries, sf_dir: str) -> float:
     """Run the untimed artifact-warmup pass (see ARTIFACT_WARMUP /
     WARMUP_LANES); returns elapsed seconds."""
+    from concurrent.futures import ThreadPoolExecutor
+
     t0 = time.perf_counter()
-    lanes = WARMUP_LANES
-    if os.environ.get("SPARK_GRAFT_BENCH_WARM_LANES") == "1":
-        lanes = (ARTIFACT_WARMUP,)
 
     def _lane(names) -> None:
         for name in names:
             if name in queries:
                 queries[name](spark, sf_dir).count()
 
-    if len(lanes) == 1:
-        _lane(lanes[0])
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(lanes)) as pool:
-            # list() propagates the first exception, like the
-            # sequential loop did
-            list(pool.map(_lane, lanes))
+    with ThreadPoolExecutor(max_workers=len(WARMUP_LANES)) as pool:
+        # list() propagates the first exception a lane raised
+        list(pool.map(_lane, WARMUP_LANES))
     spark.catalog.clearCache()
     return round(time.perf_counter() - t0, 3)
 

@@ -63,7 +63,9 @@ def hyp2f1(
 
     Direct series summation; all four arguments broadcast.  Inputs from
     the BG/NBD formula keep z in [0, ~0.95] so <= a few hundred terms
-    suffice at rtol=1e-12.
+    suffice at rtol=1e-12.  Each element stops adding terms on its own
+    test, so its value does not depend on which elements share the
+    call.
     """
     a, b, c, z = np.broadcast_arrays(
         np.asarray(a, dtype=np.float64),

@@ -19,11 +19,10 @@ re-expression:
 - **Predict** (M2): the BG/NBD conditional-expected-purchases formula
   needs the Gauss hypergeometric 2F1, which Spark lacks, and depends on
   (frequency, recency, T) only — the same triples the fit collected.
-  ``score_customers`` evaluates it with numpy on the driver once per
-  distinct triple (a day has a handful), ships the table as an
-  Arrow-built LocalRelation and broadcast-joins it back to the
-  customers: no Python worker runs.  ``expected_purchases_udf`` keeps
-  the Arrow pandas-UDF form for queries that score arbitrary inputs.
+  ``join_expected_purchases`` evaluates it (or the Pareto/NBD twin)
+  with numpy on the driver once per distinct triple (a pipeline day
+  has a handful), ships the table as an Arrow-built LocalRelation and
+  broadcast-joins it back to the customers: no Python worker runs.
 - **Gamma-Gamma profit** (M4) is a closed-form rational expression —
   pure JVM-side Column arithmetic, no UDF.
 - **CLV assembly** (M5): clv = E[purchases 365d] * E[avg value] * 0.99,
@@ -33,13 +32,13 @@ re-expression:
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from clv_data_pipeline_spark.functions.optimize import nelder_mead
@@ -287,8 +286,8 @@ def expected_purchases_np(
     T: np.ndarray,
 ) -> np.ndarray:
     """BG/NBD conditional expected purchases in the next ``t`` days
-    (Fader-Hardie-Lee 2005 eq. (10)) — numpy core shared by
-    ``score_customers``' driver-side table and the pandas UDF.
+    (Fader-Hardie-Lee 2005 eq. (10)), vectorized with numpy — the
+    kernel of ``join_expected_purchases``' driver-side table.
     """
     r, alpha, a, b = params.r, params.alpha, params.a, params.b
     z = t / (alpha + T + t)
@@ -300,47 +299,6 @@ def expected_purchases_np(
         (alpha + T) / (alpha + t_x)
     ) ** (r + x)
     return numerator / denominator
-
-
-def expected_purchases_udf(params: BetaGeoParams, t: float):
-    """M2 as an Arrow-vectorized pandas UDF.  The fitted params (4
-    floats) ride the closure; execution is map-only over (frequency,
-    recency, T) batches — no shuffle, no driver involvement.
-    """
-
-    @pandas_udf("double")
-    def _udf(x: pd.Series, t_x: pd.Series, T: pd.Series) -> pd.Series:
-        out = expected_purchases_np(
-            params,
-            t,
-            x.to_numpy(dtype=np.float64),
-            t_x.to_numpy(dtype=np.float64),
-            T.to_numpy(dtype=np.float64),
-        )
-        return pd.Series(out)
-
-    return _udf
-
-
-def pnbd_expected_purchases_udf(params: "ParetoNBDParams", t: float):
-    """Pareto/NBD conditional expected purchases as an Arrow-vectorized
-    pandas UDF — the Pareto/NBD twin of ``expected_purchases_udf``.
-    The frozen 4-param model rides the closure; execution is map-only
-    over (frequency, recency, T) batches.
-    """
-
-    @pandas_udf("double")
-    def _udf(x: pd.Series, t_x: pd.Series, T: pd.Series) -> pd.Series:
-        out = pnbd_expected_purchases_np(
-            params,
-            t,
-            x.to_numpy(dtype=np.float64),
-            t_x.to_numpy(dtype=np.float64),
-            T.to_numpy(dtype=np.float64),
-        )
-        return pd.Series(out)
-
-    return _udf
 
 
 def prob_alive_col(
@@ -394,27 +352,48 @@ def expected_avg_value_col(
 
 
 def _expected_purchases_table(
-    returning: DataFrame,
-    bg: BetaGeoParams,
+    df: DataFrame,
     triples: pd.DataFrame,
-    horizons: dict[str, float],
+    columns: dict[str, tuple[Callable[..., np.ndarray], object, float]],
 ) -> DataFrame:
     """One row per distinct (frequency, recency, t) triple: the triple
-    as ``_frequency``, ``_recency``, ``_t`` (typed like ``returning``'s
-    columns) and one expected-purchases column per ``horizons`` entry,
-    evaluated with numpy on the driver.  ``createDataFrame`` turns the
+    as ``_frequency``, ``_recency``, ``_t`` (typed like ``df``'s
+    columns) and one double column per ``columns`` entry.  Each entry
+    names its numpy kernel, the kernel's params and the horizon in
+    days — ``(expected_purchases_np, BetaGeoParams, t)`` or
+    ``(pnbd_expected_purchases_np, ParetoNBDParams, t)`` — evaluated
+    on the driver over the triples.  ``createDataFrame`` turns the
     pandas frame into a LocalRelation through Arrow, so neither the
     table nor its join runs a Python worker."""
     keys = triples[_RFT_KEYS].reset_index(drop=True)
     x, t_x, T = (keys[k].to_numpy(dtype=np.float64) for k in _RFT_KEYS)
     table = keys.rename(columns={k: f"_{k}" for k in _RFT_KEYS})
-    for name, horizon in horizons.items():
-        table[name] = expected_purchases_np(bg, horizon, x, t_x, T)
+    for name, (kernel, params, horizon) in columns.items():
+        table[name] = kernel(params, horizon, x, t_x, T)
     schema = StructType(
-        [StructField(f"_{k}", returning.schema[k].dataType) for k in _RFT_KEYS]
-        + [StructField(name, DoubleType()) for name in horizons]
+        [StructField(f"_{k}", df.schema[k].dataType) for k in _RFT_KEYS]
+        + [StructField(name, DoubleType()) for name in columns]
     )
-    return returning.sparkSession.createDataFrame(table, schema)
+    return df.sparkSession.createDataFrame(table, schema)
+
+
+def join_expected_purchases(
+    df: DataFrame,
+    columns: dict[str, tuple[Callable[..., np.ndarray], object, float]],
+    triples: pd.DataFrame | None = None,
+) -> DataFrame:
+    """``df`` (with frequency, recency, t) left-joined to its
+    ``_expected_purchases_table`` on null-safe equality of the triple:
+    every row gains the ``columns`` predictions (and the table's
+    ``_``-prefixed keys).  The table is broadcast.  ``triples`` holds
+    the distinct triples when the caller already has them (extra
+    columns are ignored); when None they are collected from ``df`` in
+    one job."""
+    if triples is None:
+        triples = df.select(*_RFT_KEYS).distinct().toPandas()
+    table = _expected_purchases_table(df, triples, columns)
+    on = [F.col(k).eqNullSafe(F.col(f"_{k}")) for k in _RFT_KEYS]
+    return df.join(F.broadcast(table), on, "left")
 
 
 def score_customers(
@@ -437,17 +416,15 @@ def score_customers(
     statistics of ``fit_statistics``, whose extra columns are ignored);
     when None they are collected from ``returning`` in one job.
     """
-    if triples is None:
-        triples = returning.select(*_RFT_KEYS).distinct().toPandas()
-    table = _expected_purchases_table(
-        returning,
-        bg,
-        triples,
-        {"_purchases_predict": predict_horizon, "_purchases_clv": clv_horizon},
-    )
-    on = [F.col(k).eqNullSafe(F.col(f"_{k}")) for k in _RFT_KEYS]
     scored = (
-        returning.join(F.broadcast(table), on, "left")
+        join_expected_purchases(
+            returning,
+            {
+                "_purchases_predict": (expected_purchases_np, bg, predict_horizon),
+                "_purchases_clv": (expected_purchases_np, bg, clv_horizon),
+            },
+            triples,
+        )
         .select(
             *returning.columns,
             F.col("_purchases_predict").alias("predicted_purchases"),

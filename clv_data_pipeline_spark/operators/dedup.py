@@ -84,26 +84,7 @@ def substring_duplicate_windows(
     n_windows, dup_windows, dup_ratio, substring_dup``.
     """
     grams = _substring_grams(df, text_col, id_col, window)
-    keepers = grams.groupBy("_g").agg(F.min(id_col).alias("_keeper"))
-    return (
-        grams.join(keepers, "_g")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").cast("long").alias("n_windows"),
-            F.sum(
-                (F.col(id_col) > F.col("_keeper")).cast("long")
-            ).alias("dup_windows"),
-        )
-        .select(
-            id_col,
-            "n_windows",
-            "dup_windows",
-            F.round(
-                F.col("dup_windows") / F.col("n_windows"), 6
-            ).alias("dup_ratio"),
-            (F.col("dup_windows") > 0).alias("substring_dup"),
-        )
-    )
+    return _window_dup_ratio(grams, id_col)
 
 
 def substring_duplicate_char_windows(
@@ -160,6 +141,14 @@ def substring_duplicate_char_windows(
             ).alias("_g"),
         )
     )
+    return _window_dup_ratio(grams, id_col)
+
+
+def _window_dup_ratio(grams: DataFrame, id_col: str) -> DataFrame:
+    """Per doc of ``grams`` (id, _g): ``n_windows``, ``dup_windows`` (its
+    grams that also occur in a smaller-id doc), ``dup_ratio`` and
+    ``substring_dup``.  One shuffle on the gram hash elects each gram's
+    keeper (minimum owning id); one re-join and per-doc aggregate."""
     keepers = grams.groupBy("_g").agg(F.min(id_col).alias("_keeper"))
     return (
         grams.join(keepers, "_g")

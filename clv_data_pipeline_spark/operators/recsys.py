@@ -616,20 +616,26 @@ def item_cf_recommend(
             .filter(F.col("rn_u") <= max_per_user)
             .drop("rn_u")
         )
-    cnt = ui.groupBy("b").agg(F.count("*").cast("double").alias("n"))
-    a, c = ui.alias("a"), ui.alias("c")
-    co = (
-        a.join(
-            c,
-            (F.col("a.u") == F.col("c.u"))
-            & (F.col("a.b") != F.col("c.b")),
+    co, cnt = item_cf_base_state(ui)
+    sim = _cosine_sim(co, cnt)
+    if top_k is not None:
+        wi = Window.partitionBy("i").orderBy(F.desc("s"), "j")
+        sim = (
+            sim.withColumn("rn_i", F.row_number().over(wi))
+            .filter(F.col("rn_i") <= top_k)
+            .drop("rn_i")
         )
-        .groupBy(F.col("a.b").alias("i"), F.col("c.b").alias("j"))
-        .agg(F.count("*").cast("double").alias("co"))
-    )
+    sim_side = F.broadcast(sim) if broadcast_sim else sim
+    return _recommend_unseen(ui, sim, sim_side)
+
+
+def _cosine_sim(co: DataFrame, cnt: DataFrame) -> DataFrame:
+    """(i, j, s): item cosine co(i, j) / sqrt(n_i * n_j) from the
+    co-occurrence counts ``co`` (i, j, co) and item counts ``cnt``
+    (b, n), rounded to 9 dp; the item counts broadcast."""
     ni = cnt.select(F.col("b").alias("i"), F.col("n").alias("n_i"))
     nj = cnt.select(F.col("b").alias("j"), F.col("n").alias("n_j"))
-    sim = (
+    return (
         co.join(F.broadcast(ni), "i")
         .join(F.broadcast(nj), "j")
         .select(
@@ -640,14 +646,15 @@ def item_cf_recommend(
             ).alias("s"),
         )
     )
-    if top_k is not None:
-        wi = Window.partitionBy("i").orderBy(F.desc("s"), "j")
-        sim = (
-            sim.withColumn("rn_i", F.row_number().over(wi))
-            .filter(F.col("rn_i") <= top_k)
-            .drop("rn_i")
-        )
-    sim_side = F.broadcast(sim) if broadcast_sim else sim
+
+
+def _recommend_unseen(
+    ui: DataFrame, sim: DataFrame, sim_side: DataFrame
+) -> DataFrame:
+    """Top-1 item per user of ``ui`` (u, b) that the user does not
+    hold: (customer_id, rec_brand, score), score the DECIMAL sum of
+    ``sim`` over the user's items.  ``sim_side`` is ``sim`` as the
+    scoring join should see it (broadcast or not)."""
     scores = (
         ui.join(sim_side, ui["b"] == sim["i"])
         .groupBy("u", F.col("j").alias("rb"))
@@ -778,41 +785,5 @@ def item_cf_incremental(
         .groupBy("b")
         .agg(F.sum("n").alias("n"))
     )
-    ni = cnt.select(F.col("b").alias("i"), F.col("n").alias("n_i"))
-    nj = cnt.select(F.col("b").alias("j"), F.col("n").alias("n_j"))
-    sim = (
-        co.join(F.broadcast(ni), "i")
-        .join(F.broadcast(nj), "j")
-        .select(
-            "i",
-            "j",
-            F.round(
-                F.col("co") / F.sqrt(F.col("n_i") * F.col("n_j")), 9
-            ).alias("s"),
-        )
-    )
-    scores = (
-        full_u.join(F.broadcast(sim), full_u["b"] == sim["i"])
-        .groupBy("u", F.col("j").alias("rb"))
-        .agg(
-            F.sum(F.col("s").cast("decimal(18,9)"))
-            .cast("double")
-            .alias("score")
-        )
-    )
-    unseen = scores.join(
-        full_u,
-        (scores["u"] == full_u["u"]) & (scores["rb"] == full_u["b"]),
-        "left_anti",
-    )
-    best = unseen.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("u").orderBy(F.desc("score"), "rb")
-        ),
-    ).filter(F.col("rn") == 1)
-    return best.select(
-        F.col("u").alias("customer_id"),
-        F.col("rb").alias("rec_brand"),
-        "score",
-    )
+    sim = _cosine_sim(co, cnt)
+    return _recommend_unseen(full_u, sim, F.broadcast(sim))

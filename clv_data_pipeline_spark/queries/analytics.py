@@ -15,13 +15,13 @@ same governance contract as the corpus split/mix queries.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from clv_data_pipeline_spark.functions.text import normalize_text
 from clv_data_pipeline_spark.registry import query
-from clv_data_pipeline_spark.sources.io import load_table, read_parquet
+from clv_data_pipeline_spark.sources.io import load_table
 
 
 @query(
@@ -182,12 +182,10 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     (term); N is a 1-row broadcast; ranking windows over the already
     doc-partitioned score frame.  Scores round to 6 places BEFORE
     ranking so ordering (and the oracle hash) is engine-stable."""
+    from clv_data_pipeline_spark.queries.mlprep import _term_freq
+
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("term"),
-    ).filter(F.col("term") != "")
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    tf = _term_freq(docs)
     df = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     scored = (
@@ -2441,30 +2439,7 @@ def q_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("v")
     )
     reps = u.withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(99))))
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"),
-                    F.lit("|"),
-                    F.col("b").cast("string"),
-                ).cast("binary")
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    p = (h + F.lit(0.5)) / F.lit(4294967296.0)
-    mult = (
-        F.when(p < 0.367879441, 0)
-        .when(p < 0.735758882, 1)
-        .when(p < 0.919698603, 2)
-        .when(p < 0.981011843, 3)
-        .when(p < 0.996340153, 4)
-        .otherwise(5)
-    )
+    mult = _poisson1_mult("user_id", "|")
     m = reps.select("b", mult.alias("mult"), "v")
     means = (
         m.groupBy("b")
@@ -2482,6 +2457,37 @@ def q_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.percentile("rep_mean", 0.025), 6).alias("ci_lo"),
         F.round(F.percentile("rep_mean", 0.5), 6).alias("ci_mid"),
         F.round(F.percentile("rep_mean", 0.975), 6).alias("ci_hi"),
+    )
+
+
+def _poisson1_mult(key: str, sep: str) -> Column:
+    """Bootstrap replicate ``b``'s Poisson(1) multiplicity for the row
+    keyed ``key``: md5("<key><sep><b>") read as a uniform in (0, 1),
+    inverted through the Poisson(1) CDF (capped at 5).  A map-side
+    column expression, replayed by the bootstrap oracles."""
+    h = F.conv(
+        F.substring(
+            F.md5(
+                F.concat(
+                    F.col(key).cast("string"),
+                    F.lit(sep),
+                    F.col("b").cast("string"),
+                ).cast("binary")
+            ),
+            1,
+            8,
+        ),
+        16,
+        10,
+    ).cast("long")
+    p = (h + F.lit(0.5)) / F.lit(4294967296.0)
+    return (
+        F.when(p < 0.367879441, 0)
+        .when(p < 0.735758882, 1)
+        .when(p < 0.919698603, 2)
+        .when(p < 0.981011843, 3)
+        .when(p < 0.996340153, 4)
+        .otherwise(5)
     )
 
 
@@ -2949,30 +2955,7 @@ def q_grouped_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps = ev.select(
         "user_id", F.col("value").cast("decimal(18,4)").alias("v")
     ).withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(99))))
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("user_id").cast("string"),
-                    F.lit("#"),
-                    F.col("b").cast("string"),
-                ).cast("binary")
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    p = (h + F.lit(0.5)) / F.lit(4294967296.0)
-    mult = (
-        F.when(p < 0.367879441, 0)
-        .when(p < 0.735758882, 1)
-        .when(p < 0.919698603, 2)
-        .when(p < 0.981011843, 3)
-        .when(p < 0.996340153, 4)
-        .otherwise(5)
-    )
+    mult = _poisson1_mult("user_id", "#")
     means = (
         reps.select("b", mult.alias("mult"), "v")
         .groupBy("b")
@@ -5066,26 +5049,7 @@ def q_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("p2"),
     )
     u = u.localCheckpoint()
-    m1 = u.filter(F.col("p1") > 0).agg(
-        F.round(F.percentile("p1", 0.5), 6).alias("m1")
-    )
-    m2 = u.filter(F.col("p2") > 0).agg(
-        F.round(F.percentile("p2", 0.5), 6).alias("m2")
-    )
-    tagged = (
-        u.crossJoin(F.broadcast(m1))
-        .crossJoin(F.broadcast(m2))
-        .select(
-            F.when(F.col("p1") == 0, "none")
-            .when(F.col("p1") > F.col("m1"), "high")
-            .otherwise("low")
-            .alias("from_segment"),
-            F.when(F.col("p2") == 0, "none")
-            .when(F.col("p2") > F.col("m2"), "high")
-            .otherwise("low")
-            .alias("to_segment"),
-        )
-    )
+    tagged = _migration_tags(u)
     m = tagged.groupBy("from_segment", "to_segment").agg(
         F.count("*").cast("long").alias("n_users")
     )
@@ -5100,6 +5064,34 @@ def q_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             6,
         ).alias("row_share"),
+    )
+
+
+def _migration_tags(u: DataFrame, *carry: str) -> DataFrame:
+    """(from_segment, to_segment, *carry) per user of ``u``: each
+    half's purchase count (p1, p2) tagged none / high / low, split at
+    that half's exact median over its active users (a broadcast
+    1-row scalar)."""
+    m1 = u.filter(F.col("p1") > 0).agg(
+        F.round(F.percentile("p1", 0.5), 6).alias("m1")
+    )
+    m2 = u.filter(F.col("p2") > 0).agg(
+        F.round(F.percentile("p2", 0.5), 6).alias("m2")
+    )
+    return (
+        u.crossJoin(F.broadcast(m1))
+        .crossJoin(F.broadcast(m2))
+        .select(
+            F.when(F.col("p1") == 0, "none")
+            .when(F.col("p1") > F.col("m1"), "high")
+            .otherwise("low")
+            .alias("from_segment"),
+            F.when(F.col("p2") == 0, "none")
+            .when(F.col("p2") > F.col("m2"), "high")
+            .otherwise("low")
+            .alias("to_segment"),
+            *carry,
+        )
     )
 
 
@@ -5549,28 +5541,7 @@ def q_threshold_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep is a bins x bins containment join on that BOUNDED frame
     (distinct integer scores, never users^2), and all metrics are
     ratios of integers — bit-deterministic everywhere."""
-    ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.sum(
-            F.when(
-                (F.col("event_type") == "purchase")
-                & (F.col("ts") < F.lit("2024-01-16")),
-                1,
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("score"),
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase")
-                & (F.col("ts") >= F.lit("2024-01-16"))
-                & (F.col("value") >= 150),
-                1,
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("label"),
-    )
+    u = _purchase_score_label(spark, sf_dir, "label")
     bins = u.groupBy("score").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("label").cast("long").alias("pos"),
@@ -5658,6 +5629,37 @@ _EMD_ORACLE = f"""
     """
 
 
+def _purchase_score_label(
+    spark: SparkSession, sf_dir: str, label: str
+) -> DataFrame:
+    """(user_id, score, ``label``) per user: score counts first-half
+    (< 2024-01-16) purchases, the label is 1 iff the user made a
+    HIGH-VALUE (>= 150) second-half purchase — leak-free, the score
+    window ends where the label window starts."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy("user_id").agg(
+        F.sum(
+            F.when(
+                (F.col("event_type") == "purchase")
+                & (F.col("ts") < F.lit("2024-01-16")),
+                1,
+            ).otherwise(0)
+        )
+        .cast("long")
+        .alias("score"),
+        F.max(
+            F.when(
+                (F.col("event_type") == "purchase")
+                & (F.col("ts") >= F.lit("2024-01-16"))
+                & (F.col("value") >= 150),
+                1,
+            ).otherwise(0)
+        )
+        .cast("long")
+        .alias(label),
+    )
+
+
 @query("q_wasserstein", oracle=_EMD_ORACLE)
 def q_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-D Wasserstein (earth mover's) distance between each event
@@ -5675,8 +5677,14 @@ def q_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the CDFs are exact ratios), per-bin terms round to 9 dp before
     the DECIMAL sum.  Bin-boundary quantization biases EMD by at most
     one bin width — the bound a monitoring threshold absorbs."""
-    ev = load_table(spark, sf_dir, "events")
-    b = ev.groupBy(
+    return _emd_finish(_emd_histogram(load_table(spark, sf_dir, "events")))
+
+
+def _emd_histogram(events: DataFrame) -> DataFrame:
+    """Per (event_type, value bin): the first-half (c1) and second-half
+    (c2) event counts — the mergeable state behind the EMD/KS finish,
+    identical over a batch frame or a stream."""
+    return events.groupBy(
         "event_type",
         F.floor(F.col("value") / F.lit(_EMD_BIN).cast("double"))
         .cast("long")
@@ -5695,6 +5703,12 @@ def q_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("c2"),
     )
+
+
+def _emd_finish(b: DataFrame) -> DataFrame:
+    """(event_type, n_bins, emd, ks_stat) from an ``_emd_histogram``
+    frame: per-type CDFs by cumulative window, then the DECIMAL-summed
+    EMD and the KS maximum of |CDF1 - CDF2|."""
     t = b.groupBy("event_type").agg(
         F.sum("c1").alias("n1"), F.sum("c2").alias("n2")
     )
@@ -6065,76 +6079,13 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     In production the period split is a sliding reference-vs-current
     window and the finish runs per trigger; availableNow + a fixed
     cut keeps the parity proof deterministic here."""
-    from clv_data_pipeline_spark.streaming.ingest import drain_to_memory
+    from clv_data_pipeline_spark.streaming.ingest import (
+        drain_to_memory,
+        table_file_stream,
+    )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if dict(
-        (f.name, f.dataType.simpleString()) for f in raw_schema
-    ).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    hist = (
-        stream.groupBy(
-            "event_type",
-            F.floor(
-                F.col("value") / F.lit(_EMD_BIN).cast("double")
-            )
-            .cast("long")
-            .alias("bin"),
-        )
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("ts") < F.lit("2024-01-16"), 1
-                ).otherwise(0)
-            )
-            .cast("double")
-            .alias("c1"),
-            F.sum(
-                F.when(
-                    F.col("ts") >= F.lit("2024-01-16"), 1
-                ).otherwise(0)
-            )
-            .cast("double")
-            .alias("c2"),
-        )
-    )
-    b = drain_to_memory(hist, "complete")
-    t = b.groupBy(F.col("event_type").alias("et")).agg(
-        F.sum("c1").alias("n1"), F.sum("c2").alias("n2")
-    )
-    t = t.withColumnRenamed("et", "event_type")
-    wc = (
-        Window.partitionBy("event_type")
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cdf = b.join(t, "event_type").select(
-        "event_type",
-        "bin",
-        (F.sum("c1").over(wc) / F.col("n1")).alias("f1"),
-        (F.sum("c2").over(wc) / F.col("n2")).alias("f2"),
-    )
-    diff = F.abs(F.col("f1") - F.col("f2"))
-    return cdf.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_bins"),
-        F.round(
-            F.sum(
-                F.round(
-                    diff * F.lit(_EMD_BIN).cast("double"), 9
-                ).cast("decimal(18,9)")
-            ).cast("double"),
-            6,
-        ).alias("emd"),
-        F.round(F.max(diff), 6).alias("ks_stat"),
-    )
+    hist = _emd_histogram(table_file_stream(spark, sf_dir, "events"))
+    return _emd_finish(drain_to_memory(hist, "complete"))
 
 
 @query(
@@ -8195,28 +8146,7 @@ def q_markov_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(0).cast("decimal(18,4)"))
         ).alias("r2"),
     ).localCheckpoint()
-    m1 = u.filter(F.col("p1") > 0).agg(
-        F.round(F.percentile("p1", 0.5), 6).alias("m1")
-    )
-    m2 = u.filter(F.col("p2") > 0).agg(
-        F.round(F.percentile("p2", 0.5), 6).alias("m2")
-    )
-    tagged = (
-        u.crossJoin(F.broadcast(m1))
-        .crossJoin(F.broadcast(m2))
-        .select(
-            F.when(F.col("p1") == 0, "none")
-            .when(F.col("p1") > F.col("m1"), "high")
-            .otherwise("low")
-            .alias("from_segment"),
-            F.when(F.col("p2") == 0, "none")
-            .when(F.col("p2") > F.col("m2"), "high")
-            .otherwise("low")
-            .alias("to_segment"),
-            "r2",
-        )
-        .localCheckpoint()
-    )
+    tagged = _migration_tags(u, "r2").localCheckpoint()
     wfrom = Window.partitionBy("from_segment")
     p_rows = (
         tagged.groupBy("from_segment", "to_segment")

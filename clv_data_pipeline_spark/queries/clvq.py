@@ -23,13 +23,15 @@ from clv_data_pipeline_spark.operators.clv import (
     GammaGammaParams,
     ParetoNBDParams,
     expected_avg_value_col,
-    expected_purchases_udf,
-    pnbd_expected_purchases_udf,
+    expected_purchases_np,
+    join_expected_purchases,
+    pnbd_expected_purchases_np,
 )
 from clv_data_pipeline_spark.operators.features import (
     normalize_for_model,
     rfm_features,
 )
+from clv_data_pipeline_spark.operators.quality import apply_data_quality_fixes
 from clv_data_pipeline_spark.queries.core import _RFM_ORACLE_BODY
 from clv_data_pipeline_spark.registry import ASOF, query
 from clv_data_pipeline_spark.sources.io import load_table
@@ -182,7 +184,9 @@ def q_prob_alive(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_predicted_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M2: BG/NBD conditional expected purchases (30d) with fixed params
-    via the Arrow-vectorized pandas UDF (reference dags/clv_models.py:70).
+    (reference dags/clv_models.py:70), evaluated with numpy on the
+    driver once per distinct (frequency, recency, t) triple and
+    broadcast-joined back (operators/clv.join_expected_purchases).
 
     Graduated from rows-only in round 8: the Gauss hypergeometric is a
     plain convergent series (functions/special.hyp2f1 — term-ratio
@@ -192,20 +196,14 @@ def q_predicted_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     (verified: 150/150 customers identical to the last bit at sf0.01).
     The surrounding closed form is bit-deterministic too; only
     POWER(x, y) is libm-implementation-specific, so both sides round
-    the final expectation at 12 dp.  A hash match proves the pandas-UDF
+    the final expectation at 12 dp.  A hash match proves the driver-side
     2F1 path end-to-end against an independent engine."""
-    f = _features(spark, sf_dir)
-    p30 = expected_purchases_udf(_BG, 30.0)
+    f = join_expected_purchases(
+        _features(spark, sf_dir), {"p30": (expected_purchases_np, _BG, 30.0)}
+    )
     return f.select(
         "customer_id",
-        F.round(
-            p30(
-                F.col("frequency").cast("double"),
-                F.col("recency").cast("double"),
-                F.col("t").cast("double"),
-            ),
-            12,
-        ).alias("predicted_purchases"),
+        F.round("p30", 12).alias("predicted_purchases"),
     )
 
 
@@ -957,9 +955,11 @@ def q_clv_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: two corpus-sized aggregations (calibration RFM +
     holdout counts, both partial-aggregable) -> one hash join on
-    customer_id -> map-only Arrow scoring with the 4-float models in
-    the closures -> one exact-integer aggregate to a single row.  No
-    driver collect of per-customer data."""
+    customer_id -> a broadcast join to both models' predictions,
+    evaluated on the driver once per distinct (frequency, recency, t)
+    triple -> one exact-integer aggregate to a single row.  No driver
+    collect of per-customer data; the triple collect is bounded by
+    distinct triples, not customers."""
     ev = load_table(spark, sf_dir, "events")
     cut = F.lit("2024-01-16 00:00:00").cast("timestamp")
     hold_end = F.lit("2024-01-30 00:00:00").cast("timestamp")
@@ -973,7 +973,7 @@ def q_clv_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         "customer_id",
         F.col("frequency").cast("double").alias("frequency"),
         F.col("recency").cast("double").alias("recency"),
-        F.col("T").cast("double").alias("T"),
+        F.col("T").cast("double").alias("t"),
     )
     actual = (
         ev.filter((F.col("ts") > cut) & (F.col("ts") <= hold_end))
@@ -985,13 +985,16 @@ def q_clv_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = f.join(actual, "customer_id", "left").na.fill(
         {"actual_n": 0.0}
     )
-    p_bg = expected_purchases_udf(_BG_CMP, 14.0)
-    p_pn = pnbd_expected_purchases_udf(_PN, 14.0)
-    x, t_x, T = F.col("frequency"), F.col("recency"), F.col("T")
-    scored = joined.select(
+    scored = join_expected_purchases(
+        joined,
+        {
+            "p_bg": (expected_purchases_np, _BG_CMP, 14.0),
+            "p_pn": (pnbd_expected_purchases_np, _PN, 14.0),
+        },
+    ).select(
         "actual_n",
-        F.round(p_bg(x, t_x, T), 9).alias("pred_bg"),
-        F.round(p_pn(x, t_x, T), 9).alias("pred_pn"),
+        F.round("p_bg", 9).alias("pred_bg"),
+        F.round("p_pn", 9).alias("pred_pn"),
     )
 
     def _sums(pred: str) -> list:
@@ -1379,9 +1382,11 @@ def q_clv_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     grains — (x, t_x, T) triples for BG/NBD, (frequency, cents) pairs
     for Gamma-Gamma, thousands of rows for millions of customers —
     81/27-row broadcast design-grid crosses (plan-lint whitelisted),
-    one Arrow LL pass each, a 1-row argmax pull, then map-only scoring
-    with the 7 winning floats in the closures.  No per-customer driver
-    collect anywhere."""
+    one Arrow LL pass each, a 1-row argmax pull, then scoring: the
+    BG/NBD predictions evaluated on the driver once per distinct
+    (frequency, recency, t) triple and broadcast-joined back, the
+    Gamma-Gamma value, CLV and quality fixes as Column arithmetic.  No
+    per-customer driver collect anywhere."""
     from clv_data_pipeline_spark.sources.io import (
         materialize_temp,
         source_key,
@@ -1471,33 +1476,28 @@ def q_clv_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     gg = GammaGammaParams(
         float(win["p"]), float(win["q"]), float(win["v"])
     )
-    p30 = expected_purchases_udf(bg, 30.0)
-    p365 = expected_purchases_udf(bg, 365.0)
-    x = F.col("frequency").cast("double")
-    t_x = F.col("recency").cast("double")
-    T = F.col("t").cast("double")
-    scored = returning.select(
+    scored = join_expected_purchases(
+        returning,
+        {
+            "p30": (expected_purchases_np, bg, 30.0),
+            "p365": (expected_purchases_np, bg, 365.0),
+        },
+    ).select(
         "customer_id",
-        F.round(p30(x, t_x, T), 9).alias("predicted_purchases"),
+        F.round("p30", 9).alias("predicted_purchases"),
         F.round(expected_avg_value_col(gg), 9).alias(
             "predicted_avg_value"
         ),
         F.round(
-            p365(x, t_x, T) * expected_avg_value_col(gg) * F.lit(0.99),
-            9,
+            F.col("p365") * expected_avg_value_col(gg) * F.lit(0.99), 9
         ).alias("clv_r"),
     )
-    return scored.select(
+    fixed = apply_data_quality_fixes(scored, "clv_r", clipped_col="clv")
+    return fixed.select(
         "customer_id",
         "predicted_purchases",
         "predicted_avg_value",
-        F.greatest(F.col("clv_r"), F.lit(0.0)).alias("clv"),
-        F.when(F.col("clv_r") < 0, F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("negatif_clv_flag"),
-        F.when(F.col("clv_r") > 1_000_000.0, F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("outliners_flag"),
+        "clv",
+        F.col("negatif_clv_flag").cast("long"),
+        F.col("outliners_flag").cast("long"),
     )

@@ -19,7 +19,7 @@ from clv_data_pipeline_spark.operators.features import (
 )
 from clv_data_pipeline_spark.operators.quality import apply_data_quality_fixes
 from clv_data_pipeline_spark.registry import ASOF, query
-from clv_data_pipeline_spark.sources.io import load_table
+from clv_data_pipeline_spark.sources.io import load_table, scratch_dir
 
 
 def _events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,12 +448,10 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared schema, never inferSchema.  Oracle-checked against the
     source table: text transit must round-trip every value exactly
     (Double.toString -> parse is the identity on doubles)."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     c = load_table(spark, sf_dir, "customer")
-    path = tempfile.mkdtemp(prefix="csv_roundtrip_") + "/customer_csv"
+    path = scratch_dir("csv_roundtrip_") + "/customer_csv"
     c.write.mode("overwrite").option("header", True).csv(path)
     schema = T.StructType(
         [
@@ -479,12 +477,10 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     its schema (inference over JSON is a full extra pass at scale) and
     round-trips types exactly — pinned by the oracle against the source
     table."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     n = load_table(spark, sf_dir, "nation")
-    path = tempfile.mkdtemp(prefix="jsonl_roundtrip_") + "/nation_jsonl"
+    path = scratch_dir("jsonl_roundtrip_") + "/nation_jsonl"
     n.write.mode("overwrite").json(path)
     schema = T.StructType(
         [
@@ -516,14 +512,12 @@ def q_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match proves the rewrite is content-preserving; the
     ``compacted`` flag carries the file-count assertion (64 -> <=4)
     through the driver check instead of only through pytest."""
-    import tempfile
-
     from clv_data_pipeline_spark.sources.io import compact_parquet
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "value"
     )
-    path = tempfile.mkdtemp(prefix="small_files_") + "/events_small"
+    path = scratch_dir("small_files_") + "/events_small"
     ev.repartition(64).write.parquet(path)
     before, after = compact_parquet(spark, path, target_files=4)
     return (
@@ -619,10 +613,8 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and JSONL, free from the JVM (columnar, predicate-pushdown capable
     like parquet).  Types round-trip exactly, no inference — pinned by
     the oracle against the source table."""
-    import tempfile
-
     n = load_table(spark, sf_dir, "nation")
-    path = tempfile.mkdtemp(prefix="orc_roundtrip_") + "/nation_orc"
+    path = scratch_dir("orc_roundtrip_") + "/nation_orc"
     n.write.mode("overwrite").orc(path)
     return spark.read.orc(path)
 
@@ -689,10 +681,8 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     state pins the merged schema explicitly so planning cost does not
     grow with file count — documented here, exercised with the option
     on."""
-    import tempfile
-
     n = load_table(spark, sf_dir, "nation")
-    path = tempfile.mkdtemp(prefix="schema_evo_") + "/nation_evo"
+    path = scratch_dir("schema_evo_") + "/nation_evo"
     n.write.mode("overwrite").parquet(path + "/batch=1")
     n.withColumn("n_name_upper", F.upper("n_name")).write.mode(
         "overwrite"
@@ -732,8 +722,6 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated nothing.  Hash sharding keeps shard sizes balanced and
     assignment stable under re-runs; partitioned write means each
     shard lands as its own directory for independent consumption."""
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars"
     )
@@ -742,7 +730,7 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ascii(F.substring(h, 1, 1)) * 31 + F.ascii(F.substring(h, 2, 1)),
         F.lit(8),
     ).cast("long")
-    path = tempfile.mkdtemp(prefix="shards_") + "/documents_sharded"
+    path = scratch_dir("shards_") + "/documents_sharded"
     d.withColumn("shard", shard).write.partitionBy("shard").parquet(path)
     back = spark.read.parquet(path)
     return back.groupBy(F.col("shard").cast("long").alias("shard")).agg(

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clv_data_pipeline_spark.registry import query
-from clv_data_pipeline_spark.sources.io import load_table
+from clv_data_pipeline_spark.sources.io import load_table, scratch_dir
 
 
 @query(
@@ -949,8 +949,6 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (oracle = the plain join).  Exchange-freedom is pinned by
     tests/test_plans.py.  The bucket count (8 here) is the knob that
     must divide executor parallelism at scale."""
-    import tempfile
-
     from clv_data_pipeline_spark.sources.io import write_bucketed
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -959,7 +957,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
-    base = tempfile.mkdtemp(prefix="bucketed_join_")
+    base = scratch_dir("bucketed_join_")
     write_bucketed(
         o, "q_bucketed_orders", "o_custkey", num_buckets=8,
         sort_col="o_custkey", path=base + "/orders",
@@ -1647,15 +1645,13 @@ def q_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_multimodal_meta's layout) for columnar pruning.  The filename
     carries the record key, the standard object-store convention."""
     import os
-    import tempfile
-
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 10)
         .select(F.col("doc_id").cast("long").alias("doc_id"), "text")
         .collect()
     )
-    root = tempfile.mkdtemp(prefix="q_binary_ingest_")
+    root = scratch_dir("q_binary_ingest_")
     for r in d:
         with open(os.path.join(root, f"{r['doc_id']:04d}.bin"), "wb") as f:
             f.write(r["text"].encode("utf-8"))
@@ -1801,32 +1797,14 @@ def q_lift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     window), and decile = (rank-1)*10 div n + 1 is pure integer math
     written identically on both sides; everything after lives on the
     10-row decile frame, so all ratios are bit-deterministic."""
-    ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.sum(
-            F.when(
-                (F.col("event_type") == "purchase")
-                & (F.col("ts") < F.lit("2024-01-16")),
-                1,
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("score"),
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase")
-                & (F.col("ts") >= F.lit("2024-01-16"))
-                & (F.col("value") >= 150),
-                1,
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("response"),
-    )
     from clv_data_pipeline_spark.operators.ids import (
         distributed_row_number,
     )
+    from clv_data_pipeline_spark.queries.analytics import (
+        _purchase_score_label,
+    )
 
+    u = _purchase_score_label(spark, sf_dir, "response")
     ranked = distributed_row_number(
         u.withColumn("neg", -F.col("score")).withColumn(
             "h", F.md5(F.col("user_id").cast("string"))

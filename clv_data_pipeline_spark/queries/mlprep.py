@@ -83,17 +83,40 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc length, with the 1-row corpus stats (N, avgdl) broadcast.
     avgdl accumulates as exact DECIMAL then divides once; scores round
     to 6 BEFORE ranking so ordering is engine-stable."""
-    docs = load_table(spark, sf_dir, "documents")
+    tf_dl, df, corpus = _bm25_stats(load_table(spark, sf_dir, "documents"))
+    scored = (
+        tf_dl.join(F.broadcast(df), "term")
+        .crossJoin(F.broadcast(corpus))
+        .select("doc_id", "term", F.round(_bm25_term(), 6).alias("bm25"))
+    )
+    w = Window.partitionBy("doc_id").orderBy(F.desc("bm25"), "term")
+    return (
+        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= 3)
+        .select(F.col("doc_id").cast("long"), "term", "bm25", "rnk")
+    )
+
+
+def _term_freq(docs: DataFrame) -> DataFrame:
+    """(doc_id, term, tf): each doc's count of every non-empty term of
+    its normalized, space-split text — one (doc, term) partial-agg
+    shuffle."""
     toks = docs.select(
         "doc_id",
         F.explode(F.split(normalize_text(F.col("text")), " ")).alias("term"),
     ).filter(F.col("term") != "")
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    return toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+
+
+def _bm25_stats(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """BM25's inputs over ``docs``: (doc_id, term, tf, dl), the per-term
+    document frequency (term, df) and the 1-row corpus stats (n_docs,
+    avgdl; avgdl summed as DECIMAL, divided once)."""
+    tf = _term_freq(docs)
     # doc length as a window over the TF frame, not a separate
     # aggregate-plus-join: the one exchange onto doc_id then serves the
-    # length window AND (because the broadcast joins below preserve
-    # partitioning) the final rank window — 3 exchanges total instead
-    # of the naive 9
+    # length window AND (because the broadcast joins downstream
+    # preserve partitioning) a later doc-keyed window
     tf_dl = tf.withColumn(
         "dl", F.sum("tf").over(Window.partitionBy("doc_id"))
     )
@@ -105,12 +128,18 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count("*")
         ).alias("avgdl"),
     )
+    return tf_dl, df, corpus
+
+
+def _bm25_term():
+    """Okapi BM25 weight of one (doc, term) row joined to its df and
+    the corpus stats (k1 = _BM25_K1, b = _BM25_B)."""
     idf = F.log(
         1
         + (F.col("n_docs").cast("double") - F.col("df") + 0.5)
         / (F.col("df") + 0.5)
     )
-    score = (
+    return (
         idf
         * (F.col("tf") * (_BM25_K1 + 1.0))
         / (
@@ -118,17 +147,6 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             + _BM25_K1
             * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
         )
-    )
-    scored = (
-        tf_dl.join(F.broadcast(df), "term")
-        .crossJoin(F.broadcast(corpus))
-        .select("doc_id", "term", F.round(score, 6).alias("bm25"))
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("bm25"), "term")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 3)
-        .select(F.col("doc_id").cast("long"), "term", "bm25", "rnk")
     )
 
 
@@ -161,12 +179,7 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     The only float sum (tf*log2(tf)) rounds each term to 9 places and
     accumulates as exact DECIMAL, so the result is independent of
     partitioning/accumulation order."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("term"),
-    ).filter(F.col("term") != "")
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    tf = _term_freq(load_table(spark, sf_dir, "documents"))
     parts = tf.groupBy("doc_id").agg(
         F.sum("tf").alias("n_tokens"),
         F.sum(
@@ -1061,12 +1074,7 @@ def q_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution rounds to 9 places and accumulates as exact DECIMAL;
     ppl exponentiates the already-rounded avg_nll so both engines
     exponentiate the identical double."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("term"),
-    ).filter(F.col("term") != "")
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    tf = _term_freq(load_table(spark, sf_dir, "documents"))
     lm = tf.groupBy("term").agg(F.sum("tf").alias("n_t"))
     corpus = lm.agg(F.sum("n_t").alias("n_total"))
     nll_term = F.round(
@@ -1099,6 +1107,18 @@ _PCA_QS = 10_000   # fixed-point quantization scale for components
 _PCA_FP = 4096     # fixed-point scale for the iterate / matrix rescale
 _PCA_ITERS = 32    # fixed power-iteration step count (NOT to convergence)
 _PCA_K = 4         # components extracted by the deflating fit
+
+
+def _pca_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, q): each embedding quantized to longs, q = ROUND(x *
+    _PCA_QS) JVM-side (HALF_UP, as the DuckDB oracles replay)."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform(
+            F.col("embedding").cast("array<double>"),
+            lambda x: F.round(x * _PCA_QS, 0).cast("long"),
+        ).alias("q"),
+    )
 
 
 def _pca_int_stats(emb) -> tuple[int, list[int], list[list[int]]]:
@@ -1449,13 +1469,7 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d, K = _PCA_DIM, _PCA_K
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.round(x * _PCA_QS, 0).cast("long"),
-        ).alias("q"),
-    )
+    emb = _pca_quantized(spark, sf_dir)
 
     def _fit() -> "np.ndarray":
         n, s, G = _pca_int_stats(emb)
@@ -1658,13 +1672,7 @@ def q_pca_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds to ~9e10 vectors; n*(q.v) <= n * 2.6e9 holds to n ~ 3.5e9 —
     past either, swap the sums to DECIMAL exactly as q_ridge does."""
     d = _PCA_DIM
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.round(x * _PCA_QS, 0).cast("long"),
-        ).alias("q"),
-    )
+    emb = _pca_quantized(spark, sf_dir)
     n, s, G = _pca_int_stats(emb)
     # exact big-int centering, rescale, and fixed-step iteration on the
     # bounded d^2 frame (Python ints are arbitrary precision, mirroring
@@ -1920,13 +1928,7 @@ def q_pca_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d, K = _PCA_DIM, _PCA_K
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.round(x * _PCA_QS, 0).cast("long"),
-        ).alias("q"),
-    )
+    emb = _pca_quantized(spark, sf_dir)
     cut_row = emb.agg(
         F.max("vec_id").alias("mx"), F.count("*").alias("n")
     ).collect()[0]
@@ -2208,16 +2210,7 @@ def q_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     of score range)."""
     from pyspark.sql.window import Window as W
 
-    from clv_data_pipeline_spark.queries.textops import q_quality_score
-
-    q = q_quality_score(spark, sf_dir)
-    e = q_token_entropy(spark, sf_dir).select("doc_id", "entropy")
-    pts = q.join(e, "doc_id").select(
-        F.least(
-            F.floor(F.col("quality") * 100).cast("long"), F.lit(99)
-        ).alias("bin"),
-        F.when(F.col("entropy") >= 4.4, 1).otherwise(0).alias("pos"),
-    )
+    pts = _quality_points(spark, sf_dir, 100)
     bins = pts.groupBy("bin").agg(
         F.sum("pos").cast("long").alias("n_pos"),
         (F.count("*") - F.sum("pos")).cast("long").alias("n_neg"),
@@ -2253,6 +2246,27 @@ def q_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("tpr", 6).alias("tpr"),
         F.round("fpr", 6).alias("fpr"),
         F.round(F.sum("tri").over(wall), 6).alias("auc"),
+    )
+
+
+def _quality_points(
+    spark: SparkSession, sf_dir: str, n_bins: int, *extra
+) -> DataFrame:
+    """(bin, *extra, pos) per document: its q_quality_score folded into
+    one of ``n_bins`` equal-width bins, and pos = 1 iff its token
+    entropy (q_token_entropy) is >= 4.4 — the labelled score both
+    AUC-style and calibration evaluations bin."""
+    from clv_data_pipeline_spark.queries.textops import q_quality_score
+
+    q = q_quality_score(spark, sf_dir)
+    e = q_token_entropy(spark, sf_dir).select("doc_id", "entropy")
+    return q.join(e, "doc_id").select(
+        F.least(
+            F.floor(F.col("quality") * n_bins).cast("long"),
+            F.lit(n_bins - 1),
+        ).alias("bin"),
+        *extra,
+        F.when(F.col("entropy") >= 4.4, 1).otherwise(0).alias("pos"),
     )
 
 
@@ -2566,9 +2580,18 @@ def _nb_scored(
         toks.alias("toks"),
         pref.alias("pref"),
     )
-    train = docs.filter(F.col("pref") < train_below)
-    test = docs.filter(F.col("pref") >= "cc")
+    return _nb_fit_score(
+        docs.filter(F.col("pref") < train_below),
+        docs.filter(F.col("pref") >= "cc"),
+    )
 
+
+def _nb_fit_score(train: DataFrame, test: DataFrame) -> DataFrame:
+    """Fit multinomial Naive Bayes on ``train`` (doc_id, lang, toks) and
+    score every ``test`` doc against every class: (cls, doc_id,
+    true_lang, s, lp0, score).  Log-probs are Laplace-smoothed, rounded
+    to 9 dp and summed as DECIMAL, so scores are order-free; the model
+    tables (classes x vocab) broadcast into the test-token frame."""
     ttok = train.select("lang", F.explode("toks").alias("tok"))
     cc = ttok.groupBy("lang", "tok").agg(F.count("*").alias("c"))
     ct = ttok.groupBy("lang").agg(F.count("*").alias("tot"))
@@ -2885,6 +2908,50 @@ def _nb_remap_tok(df: DataFrame, vocab) -> DataFrame:
     )
 
 
+def _nb_capped_counts(
+    spark: SparkSession, tokens: DataFrame, key: str
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """Count ``tokens`` (key, lang, tok) at the (key, lang, tok) grain
+    under the vocabulary cap: returns ``(agg_tok, stat_tok, vocab)``.
+
+    ``agg_tok`` is the ONE full-grain aggregate, persisted (the caller
+    unpersists it after its pull): the cap probe sums ITS counts over
+    (key x lang) instead of re-exploding the corpus.  ``stat_tok`` is
+    ``agg_tok`` with tokens outside ``vocab`` folded into ``_NB_UNK``
+    and re-summed at the bounded aggregate grain; when the vocabulary
+    fits the cap, ``vocab`` is None and ``stat_tok`` is ``agg_tok``
+    (identical counts either way, so hashes are unchanged)."""
+    agg_tok = (
+        tokens.groupBy(key, "lang", "tok")
+        .agg(F.count("*").alias("c"))
+        .persist()
+    )
+    vocab = _nb_capped_vocab(
+        spark, agg_tok.groupBy("tok").agg(F.sum("c").alias("c"))
+    )
+    if vocab is None:
+        return agg_tok, agg_tok, None
+    stat_tok = (
+        _nb_remap_tok(agg_tok, vocab)
+        .groupBy(key, "lang", "tok")
+        .agg(F.sum("c").alias("c"))
+    )
+    return agg_tok, stat_tok, vocab
+
+
+def _nb_heldout_tokens(docs: DataFrame, vocab) -> DataFrame:
+    """(doc_id, true_lang, tok) of the fixed >= 'cc' held-out docs,
+    tokens outside ``vocab`` folded into ``_NB_UNK``."""
+    return _nb_remap_tok(
+        docs.filter(F.col("pref") >= "cc").select(
+            "doc_id",
+            F.col("lang").alias("true_lang"),
+            F.explode("toks").alias("tok"),
+        ),
+        vocab,
+    )
+
+
 def _nb_vocab_ctes(train_src: str, extra_cols: str = "") -> str:
     """Shared oracle CTE pair mirroring the vocabulary cap: vocab_top
     = the same (COUNT DESC, tok ASC) top-K, rtok = the remapped token
@@ -2993,45 +3060,13 @@ def _bm25_shortlist(
     """(query_id, doc_id, score, rnk) — BM25 top-``top`` per fixed
     query; the q_bm25_retrieval kernel, shared with the reranker's
     shortlist stage."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("term"),
-    ).filter(F.col("term") != "")
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    # doc length via window over the tf frame — reuses the doc_id
-    # exchange instead of aggregate+join (same trick as q_bm25)
-    tf_dl = tf.withColumn(
-        "dl", F.sum("tf").over(Window.partitionBy("doc_id"))
-    )
-    df = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    corpus = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).agg(
-        F.count("*").alias("n_docs"),
-        (
-            F.sum(F.col("dl").cast("decimal(18,0)")).cast("double")
-            / F.count("*")
-        ).alias("avgdl"),
-    )
+    tf_dl, df, corpus = _bm25_stats(load_table(spark, sf_dir, "documents"))
     qt = spark.createDataFrame(
         _RETRIEVAL_QUERIES, "query_id long, qtext string"
     ).select(
         "query_id", F.explode(F.split("qtext", " ")).alias("term")
     )
-    idf = F.log(
-        1
-        + (F.col("n_docs").cast("double") - F.col("df") + 0.5)
-        / (F.col("df") + 0.5)
-    )
-    per_term = F.round(
-        idf
-        * (F.col("tf") * (_BM25_K1 + 1.0))
-        / (
-            F.col("tf")
-            + _BM25_K1
-            * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-        ),
-        6,
-    ).cast("decimal(18,6)")
+    per_term = F.round(_bm25_term(), 6).cast("decimal(18,6)")
     scored = (
         tf_dl.join(F.broadcast(qt), "term")
         .join(F.broadcast(df), "term")
@@ -3635,16 +3670,11 @@ def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline number is engine- and partitioning-exact."""
     from pyspark.sql.window import Window as W
 
-    from clv_data_pipeline_spark.queries.textops import q_quality_score
-
-    q = q_quality_score(spark, sf_dir)
-    e = q_token_entropy(spark, sf_dir).select("doc_id", "entropy")
-    pts = q.join(e, "doc_id").select(
-        F.least(
-            F.floor(F.col("quality") * 10).cast("long"), F.lit(9)
-        ).alias("bin"),
+    pts = _quality_points(
+        spark,
+        sf_dir,
+        10,
         F.col("quality").cast("decimal(18,6)").alias("score"),
-        F.when(F.col("entropy") >= 4.4, 1).otherwise(0).alias("pos"),
     )
     bins = pts.groupBy("bin").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -4617,44 +4647,13 @@ def q_bootstrap_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows."""
     from pyspark.sql.window import Window as W
 
-    from clv_data_pipeline_spark.queries.textops import q_quality_score
+    from clv_data_pipeline_spark.queries.analytics import _poisson1_mult
 
-    q = q_quality_score(spark, sf_dir)
-    e = q_token_entropy(spark, sf_dir).select("doc_id", "entropy")
-    pts = q.join(e, "doc_id").select(
-        "doc_id",
-        F.least(
-            F.floor(F.col("quality") * 100).cast("long"), F.lit(99)
-        ).alias("bin"),
-        F.when(F.col("entropy") >= 4.4, 1).otherwise(0).alias("pos"),
-    )
+    pts = _quality_points(spark, sf_dir, 100, "doc_id")
     reps = pts.withColumn(
         "b", F.explode(F.sequence(F.lit(0), F.lit(49)))
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("doc_id").cast("string"),
-                    F.lit("|"),
-                    F.col("b").cast("string"),
-                ).cast("binary")
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    p = (h + F.lit(0.5)) / F.lit(4294967296.0)
-    mult = (
-        F.when(p < 0.367879441, 0)
-        .when(p < 0.735758882, 1)
-        .when(p < 0.919698603, 2)
-        .when(p < 0.981011843, 3)
-        .when(p < 0.996340153, 4)
-        .otherwise(5)
-    )
+    mult = _poisson1_mult("doc_id", "|")
     bins = (
         reps.select("b", "bin", "pos", mult.alias("mult"))
         .groupBy("b", "bin")
@@ -5445,16 +5444,7 @@ def q_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_quality_classifier."""
     from pyspark.sql.window import Window as W
 
-    from clv_data_pipeline_spark.queries.textops import q_quality_score
-
-    q = q_quality_score(spark, sf_dir)
-    e = q_token_entropy(spark, sf_dir).select("doc_id", "entropy")
-    pts = q.join(e, "doc_id").select(
-        F.least(
-            F.floor(F.col("quality") * 100).cast("long"), F.lit(99)
-        ).alias("bin"),
-        F.when(F.col("entropy") >= 4.4, 1).otherwise(0).alias("pos"),
-    )
+    pts = _quality_points(spark, sf_dir, 100)
     bins = pts.groupBy("bin").agg(
         F.sum("pos").cast("long").alias("p"),
         (F.count("*") - F.sum("pos")).cast("long").alias("n"),
@@ -6083,62 +6073,8 @@ def q_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
 
     def fold_scores(train, test):
-        ttok = train.select("lang", F.explode("toks").alias("tok"))
-        cc = ttok.groupBy("lang", "tok").agg(F.count("*").alias("c"))
-        ct = ttok.groupBy("lang").agg(F.count("*").alias("tot"))
-        v = ttok.agg(F.countDistinct("tok").alias("vsz"))
-        ntr = train.agg(F.count("*").alias("n_train"))
-        dec = "decimal(20,9)"
-        pri = (
-            train.groupBy("lang")
-            .agg(F.count("*").alias("nd"))
-            .crossJoin(F.broadcast(ntr))
-            .select(
-                F.col("lang").alias("cls"),
-                F.round(F.log(F.col("nd") * 1.0 / F.col("n_train")), 9)
-                .cast(dec)
-                .alias("lp0"),
-            )
-        )
-        lp = (
-            cc.join(ct, "lang")
-            .crossJoin(F.broadcast(v))
-            .select(
-                F.col("lang").alias("cls"),
-                "tok",
-                F.round(
-                    F.log(
-                        (F.col("c") + F.lit(1.0))
-                        / (F.col("tot") + F.col("vsz"))
-                    ),
-                    9,
-                )
-                .cast(dec)
-                .alias("lp"),
-            )
-        )
-        oov = ct.crossJoin(F.broadcast(v)).select(
-            F.col("lang").alias("cls"),
-            F.round(
-                F.log(F.lit(1.0) / (F.col("tot") + F.col("vsz"))), 9
-            )
-            .cast(dec)
-            .alias("lpo"),
-        )
-        ttest = test.select(
-            "doc_id",
-            F.col("lang").alias("true_lang"),
-            F.explode("toks").alias("tok"),
-        )
-        scored = (
-            ttest.crossJoin(F.broadcast(oov))
-            .join(F.broadcast(lp), ["tok", "cls"], "left")
-            .groupBy("doc_id", "true_lang", "cls")
-            .agg(F.sum(F.coalesce(F.col("lp"), F.col("lpo"))).alias("s"))
-        )
-        return scored.join(F.broadcast(pri), "cls").select(
-            "doc_id", "true_lang", "cls",
-            (F.col("s") + F.col("lp0")).alias("score"),
+        return _nb_fit_score(train, test).select(
+            "doc_id", "true_lang", "cls", "score"
         )
 
     even = docs.filter(F.col("doc_id") % 2 == 0)
@@ -8197,34 +8133,8 @@ def q_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pull at (bands x classes x (cap+1)); no-op when vocab fits
     train = docs.filter(F.col("band").isNotNull())
     ttok = train.select("band", "lang", F.explode("toks").alias("tok"))
-    # ONE full-grain aggregate, persisted: the cap probe sums ITS
-    # counts over (band x lang) instead of re-exploding the corpus
-    # (identical counts, hashes unchanged; refold skipped when the
-    # vocab fits)
-    agg_tok = (
-        ttok.groupBy("band", "lang", "tok")
-        .agg(F.count("*").alias("c"))
-        .persist()
-    )
-    vocab = _nb_capped_vocab(
-        spark, agg_tok.groupBy("tok").agg(F.sum("c").alias("c"))
-    )
-    if vocab is not None:
-        stat_tok = (
-            _nb_remap_tok(agg_tok, vocab)
-            .groupBy("band", "lang", "tok")
-            .agg(F.sum("c").alias("c"))
-        )
-    else:
-        stat_tok = agg_tok
-    ttest = _nb_remap_tok(
-        docs.filter(F.col("pref") >= "cc").select(
-            "doc_id",
-            F.col("lang").alias("true_lang"),
-            F.explode("toks").alias("tok"),
-        ),
-        vocab,
-    )
+    agg_tok, stat_tok, vocab = _nb_capped_counts(spark, ttok, "band")
+    ttest = _nb_heldout_tokens(docs, vocab)
     stat_rows = (
         stat_tok.unionByName(
             train.groupBy("band", "lang")
@@ -8560,35 +8470,8 @@ def q_data_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     # skipped) whenever the corpus vocabulary fits the cap
     train = docs.filter(F.col("pref") < "cc")
     ttok = train.select("grp", "lang", F.explode("toks").alias("tok"))
-    # ONE full-grain aggregate, persisted: the vocabulary-cap probe
-    # derives its counts from THIS frame (sum over grp x lang) instead
-    # of re-exploding the corpus, and the remap-and-refold runs at the
-    # bounded aggregate grain (skipped entirely when the vocab fits —
-    # the counts are identical either way, so hashes are unchanged)
-    agg_tok = (
-        ttok.groupBy("grp", "lang", "tok")
-        .agg(F.count("*").alias("c"))
-        .persist()
-    )
-    vocab = _nb_capped_vocab(
-        spark, agg_tok.groupBy("tok").agg(F.sum("c").alias("c"))
-    )
-    if vocab is not None:
-        stat_tok = (
-            _nb_remap_tok(agg_tok, vocab)
-            .groupBy("grp", "lang", "tok")
-            .agg(F.sum("c").alias("c"))
-        )
-    else:
-        stat_tok = agg_tok
-    ttest = _nb_remap_tok(
-        docs.filter(F.col("pref") >= "cc").select(
-            "doc_id",
-            F.col("lang").alias("true_lang"),
-            F.explode("toks").alias("tok"),
-        ),
-        vocab,
-    )
+    agg_tok, stat_tok, vocab = _nb_capped_counts(spark, ttok, "grp")
+    ttest = _nb_heldout_tokens(docs, vocab)
     # ONE tokenized train explode, aggregated ONCE to the additive
     # (grp, lang, tok) sufficient-statistic grain (VERDICT r10 item 3);
     # the train-doc counts and the per-group distinct-source meta ride
@@ -8748,26 +8631,7 @@ def q_cross_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rtok_raw = docs.select(
         "doc_id", "fold", "lang", F.explode("toks").alias("tok")
     )
-    # ONE full-grain aggregate, persisted: the cap probe sums ITS
-    # counts over (fold x lang) instead of re-exploding the corpus;
-    # remap-and-refold runs at the bounded aggregate grain, skipped
-    # when the vocab fits (identical counts, hashes unchanged)
-    agg_tok = (
-        rtok_raw.groupBy("fold", "lang", "tok")
-        .agg(F.count("*").alias("c"))
-        .persist()
-    )
-    vocab = _nb_capped_vocab(
-        spark, agg_tok.groupBy("tok").agg(F.sum("c").alias("c"))
-    )
-    if vocab is not None:
-        stat_tok = (
-            _nb_remap_tok(agg_tok, vocab)
-            .groupBy("fold", "lang", "tok")
-            .agg(F.sum("c").alias("c"))
-        )
-    else:
-        stat_tok = agg_tok
+    agg_tok, stat_tok, vocab = _nb_capped_counts(spark, rtok_raw, "fold")
     rtok = _nb_remap_tok(rtok_raw, vocab)
     gcc = {
         (r["fold"], r["lang"], r["tok"]): int(r["c"])

@@ -194,48 +194,7 @@ def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    dims = emb.select("vec_id", F.posexplode("e").alias("i", "x"))
-    w = spark.range(18 * 64).select(
-        (F.col("id") / 64).cast("long").alias("p"),
-        (F.col("id") % 64).alias("i"),
-        (
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                (F.col("id") / 64)
-                                .cast("long")
-                                .cast("string"),
-                                F.lit("|"),
-                                (F.col("id") % 64).cast("string"),
-                                F.lit("|srp"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                + F.lit(0.5)
-            )
-            / F.lit(4294967296.0)
-            * 2
-            - 1
-        ).alias("w"),
-    )
-    dots = (
-        dims.join(F.broadcast(w), "i")
-        .groupBy("vec_id", "p")
-        .agg(
-            F.sum(
-                F.round(F.col("x") * F.col("w") * 1e9, 0).cast("long")
-            )
-            .cast("long")
-            .alias("dot")
-        )
-    )
+    dots = _direction_dots(spark, emb, 18, "p", "srp")
     sig = (
         dots.groupBy(
             "vec_id", F.floor(F.col("p") / 6).alias("band")
@@ -259,25 +218,91 @@ def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("band"),
         F.col("bv"),
     )
-    # Round 13 (VERDICT r12 item 6): the band self-join was the one
-    # SMJ left in the AQE-final plan — both sides the audit slice's
-    # (vec, band) signatures, bounded at any SF, so broadcast the
-    # build side explicitly.
+    # both sides are the audit slice's (vec, band) signatures, bounded
+    # at any SF, so broadcast the build side explicitly: AQE otherwise
+    # plans this self-join as a sort-merge join.
     cand = (
         a.join(F.broadcast(b), ["band", "bv"])
         .filter(F.col("vec_id") != F.col("neighbor_id"))
         .select("vec_id", "neighbor_id")
         .distinct()
     )
-    # Candidate scoring stays one row per PAIR (vectors ride as
-    # arrays; zip_with/aggregate fold nano-unit LONG products —
-    # exact integers, so summation order is irrelevant and the
-    # grouped formulation in the oracle computes the identical value;
-    # longs through codegen are ~3.5x faster than DECIMAL folds, the
-    # q_ridge / q_word_vectors micro-unit lesson).  Overflow guard by
-    # construction: 64 terms x |x*y|<=~1 x 1e9 stays < 2^37.  An
-    # exploded per-dimension join here would multiply candidate rows
-    # by dim.
+    return _top1_by_cosine(cand, emb)
+
+
+def _direction_dots(
+    spark: SparkSession, emb: DataFrame, n_dirs: int, key: str, salt: str
+) -> DataFrame:
+    """(vec_id, ``key``, dot): each (vec_id, e) vector's dot product with
+    ``n_dirs`` pseudo-random directions, indexed by ``key``.  Weight
+    (d, i) is md5("<d>|<i>|<salt>") read as a uniform in (-1, 1), so
+    the oracle replays every direction; products sum as nano-unit
+    longs, exact in any order.  The 64 x ``n_dirs`` weight frame
+    broadcasts into one skinny exploded shuffle."""
+    dims = emb.select("vec_id", F.posexplode("e").alias("i", "x"))
+    w = spark.range(n_dirs * 64).select(
+        (F.col("id") / 64).cast("long").alias(key),
+        (F.col("id") % 64).alias("i"),
+        (
+            (
+                F.conv(
+                    F.substring(
+                        F.md5(
+                            F.concat(
+                                (F.col("id") / 64)
+                                .cast("long")
+                                .cast("string"),
+                                F.lit("|"),
+                                (F.col("id") % 64).cast("string"),
+                                F.lit("|" + salt),
+                            )
+                        ),
+                        1,
+                        8,
+                    ),
+                    16,
+                    10,
+                ).cast("long")
+                + F.lit(0.5)
+            )
+            / F.lit(4294967296.0)
+            * 2
+            - 1
+        ).alias("w"),
+    )
+    return (
+        dims.join(F.broadcast(w), "i")
+        .groupBy("vec_id", key)
+        .agg(
+            F.sum(
+                F.round(F.col("x") * F.col("w") * 1e9, 0).cast("long")
+            )
+            .cast("long")
+            .alias("dot")
+        )
+    )
+
+
+def _top1_by_cosine(
+    pairs: DataFrame, emb: DataFrame, *keep: str
+) -> DataFrame:
+    """Each ``vec_id``'s most cosine-similar ``neighbor_id`` among
+    ``pairs``: (vec_id, neighbor_id, *keep, sim, rank = 1), ties to the
+    smaller neighbor.  ``emb`` is the (vec_id, e) audit slice; both
+    of its sides broadcast, which its fixed size keeps scale-safe.
+
+    Scoring stays one row per PAIR (vectors ride as arrays;
+    zip_with/aggregate fold nano-unit LONG products — exact integers,
+    so summation order is irrelevant and the grouped formulation in
+    the oracle computes the identical value; longs through codegen are
+    ~3.5x faster than DECIMAL folds, the q_ridge / q_word_vectors
+    micro-unit lesson).  Overflow guard by construction: 64 terms x
+    |x*y|<=~1 x 1e9 stays < 2^37.  An exploded per-dimension join here
+    would multiply candidate rows by dim.  Norms are computed inline
+    per side (same fold, bit-identical value) instead of a norms frame
+    + self-join, whose output had no size estimate and pushed the
+    scoring joins to sort-merge at runtime."""
+
     def _lsum(arr):
         return F.aggregate(
             arr, F.lit(0).cast("long"), lambda acc, x: acc + x
@@ -289,11 +314,6 @@ def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq = lambda col: F.transform(  # noqa: E731
         col, lambda a: F.round(a * a * 1e9, 0).cast("long")
     )
-    # Round 13 (VERDICT r12 item 6): norms inline per side (same fold,
-    # bit-identical value) instead of a norms frame + self-join — the
-    # join output had no size estimate, pushing the scoring joins to
-    # SMJ at runtime; the twin's 500-vector audit slice makes the
-    # broadcast build sides constant at any SF.
     va = emb.select(
         F.col("vec_id"),
         F.col("e").alias("ea"),
@@ -305,14 +325,14 @@ def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lsum(sq("e")).alias("nb"),
     )
     sims = (
-        cand.join(F.broadcast(va), "vec_id")
+        pairs.join(F.broadcast(va), "vec_id")
         .join(F.broadcast(vb), "neighbor_id")
         .select(
             "vec_id",
             "neighbor_id",
+            *keep,
             F.round(
-                _lsum(prod) / F.sqrt(F.col("na") * F.col("nb")),
-                6,
+                _lsum(prod) / F.sqrt(F.col("na") * F.col("nb")), 6
             ).alias("sim"),
         )
     )
@@ -444,48 +464,7 @@ def q_ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    dims = emb.select("vec_id", F.posexplode("e").alias("i", "x"))
-    w = spark.range(16 * 64).select(
-        (F.col("id") / 64).cast("long").alias("c"),
-        (F.col("id") % 64).alias("i"),
-        (
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                (F.col("id") / 64)
-                                .cast("long")
-                                .cast("string"),
-                                F.lit("|"),
-                                (F.col("id") % 64).cast("string"),
-                                F.lit("|ivf"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                + F.lit(0.5)
-            )
-            / F.lit(4294967296.0)
-            * 2
-            - 1
-        ).alias("w"),
-    )
-    cdots = (
-        dims.join(F.broadcast(w), "i")
-        .groupBy("vec_id", "c")
-        .agg(
-            F.sum(
-                F.round(F.col("x") * F.col("w") * 1e9, 0).cast("long")
-            )
-            .cast("long")
-            .alias("dot")
-        )
-    )
+    cdots = _direction_dots(spark, emb, 16, "c", "ivf")
     rc = cdots.withColumn(
         "rn",
         F.row_number().over(
@@ -498,65 +477,15 @@ def q_ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = rc.filter(F.col("rn") <= 4).select(
         "vec_id", F.col("c").alias("cell")
     )
-    # Round 13 (VERDICT r12 item 6): the AQE-final plan ran three
-    # SortMergeJoins on audit-slice-bounded frames (assign: 500 rows;
-    # va/vb: the 500-vector slice with inline norms) — broadcast them
-    # explicitly.  The twin's fixed-size slice makes every build side
-    # constant at any SF, so the hints are scale-safe by construction.
+    # assign holds one row per audit-slice vector (500), so it
+    # broadcasts at any SF: AQE otherwise plans a sort-merge join.
     cand = (
         probes.join(F.broadcast(assign), "cell")
         .filter(F.col("vec_id") != F.col("neighbor_id"))
         .select("vec_id", "neighbor_id")
     )
 
-    def _lsum(arr):
-        return F.aggregate(
-            arr, F.lit(0).cast("long"), lambda acc, x: acc + x
-        ).cast("double")
-
-    prod = F.zip_with(
-        "ea", "eb", lambda a, b: F.round(a * b * 1e9, 0).cast("long")
-    )
-    sq = lambda col: F.transform(  # noqa: E731
-        col, lambda a: F.round(a * a * 1e9, 0).cast("long")
-    )
-    # norms computed INLINE per side (same fold, bit-identical value)
-    # instead of a separate norms frame + self-join: the join output
-    # had no size estimate, which is what pushed the scoring joins to
-    # SMJ in the first place — and two joins disappear outright.
-    va = emb.select(
-        F.col("vec_id"),
-        F.col("e").alias("ea"),
-        _lsum(sq("e")).alias("na"),
-    )
-    vb = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("eb"),
-        _lsum(sq("e")).alias("nb"),
-    )
-    sims = (
-        cand.join(F.broadcast(va), "vec_id")
-        .join(F.broadcast(vb), "neighbor_id")
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round(
-                _lsum(prod) / F.sqrt(F.col("na") * F.col("nb")),
-                6,
-            ).alias("sim"),
-        )
-    )
-    ranked = sims.withColumn(
-        "rank",
-        F.row_number()
-        .over(
-            Window.partitionBy("vec_id").orderBy(
-                F.desc("sim"), "neighbor_id"
-            )
-        )
-        .cast("long"),
-    )
-    return ranked.filter(F.col("rank") <= 1)
+    return _top1_by_cosine(cand, emb)
 
 
 @query("q_ann_pq")  # rows-only: approximate, codebook-specific
@@ -767,9 +696,8 @@ def q_ann_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("k").alias("dk"),
         "dist",
     )
-    # Round 13 (VERDICT r12 item 6): the ADC probe-code join was the
-    # one SMJ left in the AQE-final plan — codes is the audit slice's
-    # (vec, m, code) table, bounded at any SF, so broadcast it.
+    # codes is the audit slice's (vec, m, code) table, bounded at any
+    # SF, so broadcast it: AQE otherwise plans a sort-merge join.
     adc = (
         dtab.join(
             F.broadcast(codes),
@@ -792,53 +720,7 @@ def q_ann_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "neighbor_id", "adc")
     )
 
-    def _lsum(arr):
-        return F.aggregate(
-            arr, F.lit(0).cast("long"), lambda acc, x: acc + x
-        ).cast("double")
-
-    prod = F.zip_with(
-        "ea", "eb", lambda a, b: F.round(a * b * 1e9, 0).cast("long")
-    )
-    sq = lambda col: F.transform(  # noqa: E731
-        col, lambda a: F.round(a * a * 1e9, 0).cast("long")
-    )
-    # Round 13 (VERDICT r12 item 6): norms inline per side (same fold,
-    # bit-identical value) + explicit broadcasts of the audit-slice
-    # vector sides — see q_ann_ivf_portable for the SMJ evidence.
-    va = emb.select(
-        F.col("vec_id"),
-        F.col("e").alias("ea"),
-        _lsum(sq("e")).alias("na"),
-    )
-    vb = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("eb"),
-        _lsum(sq("e")).alias("nb"),
-    )
-    sims = (
-        short.join(F.broadcast(va), "vec_id")
-        .join(F.broadcast(vb), "neighbor_id")
-        .select(
-            "vec_id",
-            "neighbor_id",
-            "adc",
-            F.round(
-                _lsum(prod) / F.sqrt(F.col("na") * F.col("nb")), 6
-            ).alias("sim"),
-        )
-    )
-    ranked = sims.withColumn(
-        "rank",
-        F.row_number()
-        .over(
-            Window.partitionBy("vec_id").orderBy(
-                F.desc("sim"), "neighbor_id"
-            )
-        )
-        .cast("long"),
-    )
-    return ranked.filter(F.col("rank") <= 1)
+    return _top1_by_cosine(short, emb, "adc")
 
 
 @query("q_ann_ivf_pq")  # rows-only: approximate, quantizer+codebook-specific

@@ -659,6 +659,22 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     else materializes, so the change feed, not the table, is what
     flows downstream.  At 100 TB add a per-row content hash column at
     write time and compare hashes instead of N columns."""
+    _, feed = _orders_change_feed(spark, sf_dir)
+    return feed.select(
+        "o_orderkey",
+        "change_type",
+        "old_status",
+        F.col("o_orderstatus").alias("new_status"),
+    )
+
+
+def _orders_change_feed(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The derived "old" orders snapshot and its change feed against
+    the current table: one row per inserted, deleted or updated key
+    with ``change_type``, the old ``old_status`` and the new image
+    (``o_orderstatus``, ``o_totalprice``; NULL for a delete)."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -680,7 +696,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         | (F.col("o.o_orderstatus") != F.col("n.o_orderstatus"))
         | (F.col("o.o_totalprice") != F.col("n.o_totalprice"))
     )
-    return j.filter(changed).select(
+    return old, j.filter(changed).select(
         F.coalesce(F.col("o.o_orderkey"), F.col("n.o_orderkey")).alias(
             "o_orderkey"
         ),
@@ -689,7 +705,8 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("update")
         .alias("change_type"),
         F.col("o.o_orderstatus").alias("old_status"),
-        F.col("n.o_orderstatus").alias("new_status"),
+        F.col("n.o_orderstatus").alias("o_orderstatus"),
+        F.col("n.o_totalprice").alias("o_totalprice"),
     )
 
 
@@ -710,38 +727,7 @@ def q_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bucket-persisted, q_bucketed_join's contract) + a union with
     the feed, which is delta-sized; nothing rescans or rewrites
     unchanged data except the anti-join probe."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    old = o.filter(F.col("o_orderkey") % 10 != 0).select(
-        "o_orderkey",
-        F.when(F.col("o_orderkey") % 7 == 0, F.lit("P"))
-        .otherwise(F.col("o_orderstatus"))
-        .alias("o_orderstatus"),
-        "o_totalprice",
-    )
-    j = old.alias("o").join(
-        o.alias("n"),
-        F.col("o.o_orderkey") == F.col("n.o_orderkey"),
-        "full",
-    )
-    changed = (
-        F.col("o.o_orderkey").isNull()
-        | F.col("n.o_orderkey").isNull()
-        | (F.col("o.o_orderstatus") != F.col("n.o_orderstatus"))
-        | (F.col("o.o_totalprice") != F.col("n.o_totalprice"))
-    )
-    feed = j.filter(changed).select(
-        F.coalesce(F.col("o.o_orderkey"), F.col("n.o_orderkey")).alias(
-            "o_orderkey"
-        ),
-        F.when(F.col("o.o_orderkey").isNull(), "insert")
-        .when(F.col("n.o_orderkey").isNull(), "delete")
-        .otherwise("update")
-        .alias("change_type"),
-        F.col("n.o_orderstatus").alias("o_orderstatus"),
-        F.col("n.o_totalprice").alias("o_totalprice"),
-    )
+    old, feed = _orders_change_feed(spark, sf_dir)
     touched = feed.select("o_orderkey")
     survivors = old.join(touched, "o_orderkey", "left_anti")
     images = feed.filter(F.col("change_type") != "delete").select(

@@ -47,7 +47,7 @@ from clv_data_pipeline_spark.operators.multimodal import (
     sample_frames,
 )
 from clv_data_pipeline_spark.registry import query
-from clv_data_pipeline_spark.sources.io import load_table, read_parquet
+from clv_data_pipeline_spark.sources.io import load_table
 
 #: DuckDB twin of the Spark tokenizer (normalize_text + split on space)
 #: — defined up top because both the BPE-training oracle and the
@@ -470,14 +470,10 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_admission_sink,
         drain,
         scratch_tables,
+        table_file_stream,
     )
 
-    raw_schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    stream = table_file_stream(spark, sf_dir, "documents")
     with scratch_tables(
         spark, "stream_dedup_idx", "stream_dedup_adm"
     ) as (index_table, admitted_table):

@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from clv_data_pipeline_spark.operators.sessions import session_stats
 from clv_data_pipeline_spark.registry import query
-from clv_data_pipeline_spark.sources.io import load_table, read_parquet
+from clv_data_pipeline_spark.sources.io import load_table
 
 
 def _dec_sum(col: F.Column, scale: str = "decimal(25,6)") -> F.Column:
@@ -600,26 +600,14 @@ def q_stream_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     completed windows.  (No count-distinct: distinct aggregation is
     unsupported in streaming; the HLL variant lives in streaming/.)
     """
-    import os
-
-    from clv_data_pipeline_spark.streaming.ingest import drain_to_memory
-
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = read_parquet(spark, path).schema
-    # the streaming file source requires a directory: list the SF dir
-    # and glob-filter to the events file
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    from clv_data_pipeline_spark.streaming.ingest import (
+        drain_to_memory,
+        table_file_stream,
     )
-    if dict((f.name, f.dataType.simpleString()) for f in raw_schema).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
+
     agg = (
-        stream.groupBy(F.window("ts", "1 day").alias("w"))
+        table_file_stream(spark, sf_dir, "events")
+        .groupBy(F.window("ts", "1 day").alias("w"))
         .agg(
             F.count("*").alias("n_events"),
             F.round(
@@ -678,26 +666,14 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete output mode: with availableNow there is no unbounded
     state concern; the production path adds a watermark and append
     mode (streaming/ingest.py streaming_sessions)."""
-    import os
-
-    from clv_data_pipeline_spark.streaming.ingest import drain_to_memory
-
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = read_parquet(spark, path).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    from clv_data_pipeline_spark.streaming.ingest import (
+        drain_to_memory,
+        table_file_stream,
     )
-    if dict(
-        (f.name, f.dataType.simpleString()) for f in raw_schema
-    ).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
+
     sess = (
-        stream.groupBy(
+        table_file_stream(spark, sf_dir, "events")
+        .groupBy(
             "user_id", F.session_window("ts", "30 minutes").alias("sw")
         )
         .agg(F.count("*").alias("n_events"))
@@ -739,26 +715,15 @@ def q_stream_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE754 division on both engines.  Multiple triggers emit multiple
     snapshots per user in update mode; the final state row per user is
     selected by max n_events (snapshots are monotone)."""
-    import os
-
-    from clv_data_pipeline_spark.streaming.ingest import drain_to_memory
+    from clv_data_pipeline_spark.streaming.ingest import (
+        drain_to_memory,
+        table_file_stream,
+    )
     from clv_data_pipeline_spark.streaming.stateful import running_user_stats
 
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = read_parquet(spark, path).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    cents = table_file_stream(spark, sf_dir, "events").withColumn(
+        "value", F.round(F.col("value") * 100)
     )
-    if dict(
-        (f.name, f.dataType.simpleString()) for f in raw_schema
-    ).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    cents = stream.withColumn("value", F.round(F.col("value") * 100))
     snap = running_user_stats(cents)
     out = drain_to_memory(snap, "update")
     w = Window.partitionBy("user_id").orderBy(
@@ -799,32 +764,14 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set must hash-match the DuckDB batch self-join — streaming
     and batch attribution agree exactly.
     """
-    import os
-
     from clv_data_pipeline_spark.streaming.ingest import (
         drain_to_memory,
         ensure_event_time,
-    )
-
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = read_parquet(spark, path).schema
-    ts_is_bigint = (
-        dict((f.name, f.dataType.simpleString()) for f in raw_schema).get(
-            "ts"
-        )
-        == "bigint"
+        table_file_stream,
     )
 
     def _events_stream():
-        s = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        if ts_is_bigint:
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return ensure_event_time(s)
+        return ensure_event_time(table_file_stream(spark, sf_dir, "events"))
 
     views = (
         _events_stream()

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import functools
 import os
-import tempfile
 import zipfile
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -44,13 +43,16 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     on a real cluster this is also exactly how the package would reach
     executors without a wheel deploy.
     """
+    from clv_data_pipeline_spark.sources.io import scratch_dir
+
     sc = spark.sparkContext
     if getattr(sc, "_clv_pkg_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    fd, zpath = tempfile.mkstemp(prefix="clv_data_pipeline_spark_", suffix=".zip")
-    os.close(fd)
+    zpath = os.path.join(
+        scratch_dir("worker_imports_"), "clv_data_pipeline_spark.zip"
+    )
     with zipfile.ZipFile(zpath, "w") as zf:
         for dirpath, _dirs, files in os.walk(pkg_dir):
             for f in sorted(files):

@@ -18,7 +18,10 @@ the stored schema and runs none.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -274,6 +277,25 @@ def spread_partitions(df: DataFrame) -> DataFrame:
     """
     p = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(p) if df.rdd.getNumPartitions() < p else df
+
+
+#: This process's scratch root under TMPDIR, made on first use.
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new empty directory for files that live as long as this
+    process, such as the data behind a lazy DataFrame a query returns.
+
+    Every such directory sits under one root in ``TMPDIR``, made on
+    the first call; an ``atexit`` hook removes the root with all it
+    holds when the process exits.
+    """
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="clv_scratch_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
 def materialize_temp(

@@ -17,7 +17,8 @@ Every streaming run in the engine goes through the helpers here:
   returns the landed rows;
 - :func:`replay_arrivals` replays ordered slices as one trigger each
   (the replay contract is in its docstring);
-- :func:`scratch_tables` names the per-call state tables a sink writes.
+- :func:`scratch_tables` names the per-call state tables a sink writes;
+- :func:`table_file_stream` streams one testdata parquet table.
 
 Cleanup guarantees, on success and on error alike: a scratch
 checkpoint or arrival directory is removed before the helper returns;
@@ -34,6 +35,7 @@ watermarked tumbling-window counts and session windows
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 import uuid
@@ -46,6 +48,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from clv_data_pipeline_spark.schemas import TRANSACTIONS_SCHEMA
+from clv_data_pipeline_spark.sources.io import read_parquet
 
 #: Seconds a streaming run may take before it is stopped and raises.
 AWAIT_TIMEOUT_S = 300
@@ -64,6 +67,29 @@ def ensure_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
         df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return df
+
+
+def table_file_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Stream the testdata table ``<sf_dir>/<table>.parquet`` through
+    the file source, with the schema ``read_parquet`` infers for it.
+
+    The file source reads directories only, so it lists ``sf_dir`` and
+    keeps ``<table>.parquet`` by glob.  ``events.ts`` stored as
+    TIMESTAMP(NANOS) arrives as epoch-nanos bigint (``nanosAsLong``, as
+    in ``load_table``) and is truncated to micros.  No other column is
+    retyped: an NTZ event time stays NTZ, so a watermarking caller
+    applies :func:`ensure_event_time` itself.
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    stream = (
+        spark.readStream.schema(read_parquet(spark, path).schema)
+        .option("pathGlobFilter", f"{table}.parquet")
+        .parquet(sf_dir)
+    )
+    if table == "events" and dict(stream.dtypes).get("ts") == "bigint":
+        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return stream
 
 
 def _replay_anti_join(batch: DataFrame, stored: DataFrame, key: str) -> DataFrame:

@@ -311,3 +311,30 @@ def test_materialize_temp_reads_back_without_inference(spark, tmp_path):
     back = materialize_temp(df, "test_unkeyed_")
     assert back.dtypes == df.dtypes
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_scratch_dir_root_is_removed_at_exit(tmp_path):
+    """Scratch directories live under one per-process root that an
+    atexit hook removes: a process that wrote into one leaves its
+    TMPDIR empty."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    code = (
+        "import os\n"
+        "from clv_data_pipeline_spark.sources.io import scratch_dir\n"
+        "for prefix in ('a_', 'b_'):\n"
+        "    d = scratch_dir(prefix)\n"
+        "    open(os.path.join(d, 'f'), 'w').write('x')\n"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=pathlib.Path(__file__).resolve().parents[1],
+        env={**os.environ, "TMPDIR": str(tmpdir)},
+        check=True,
+    )
+    assert list(tmpdir.iterdir()) == []

@@ -33,6 +33,21 @@ def test_hyp2f1_binomial_identity():
     assert np.allclose(ours, ref, rtol=1e-10)
 
 
+def test_hyp2f1_value_does_not_depend_on_the_batch():
+    # scoring evaluates 2F1 over whichever triples share a call (one
+    # row per distinct triple), so each element must stop on its own:
+    # a fast-converging neighbour may not cut a slow one short, nor a
+    # slow one add terms to a converged one
+    a = np.array([0.25, 3.5, 40.25, 1.0])
+    b = np.array([2.5, 5.5, 42.5, 1.0])
+    c = np.array([2.25, 8.0, 81.75, 2.0])
+    z = np.array([0.01, 0.5, 0.95, 0.9])
+    batch = hyp2f1(a, b, c, z)
+    one_by_one = [hyp2f1(a[i], b[i], c[i], z[i]) for i in range(len(z))]
+    assert batch.tolist() == [float(v) for v in one_by_one]
+    assert hyp2f1(a[::-1], b[::-1], c[::-1], z[::-1]).tolist() == batch.tolist()[::-1]
+
+
 def test_nelder_mead_quadratic():
     target = np.array([1.5, -2.0, 0.25])
     f = lambda p: float(np.sum((p - target) ** 2))  # noqa: E731

@@ -191,3 +191,23 @@ def test_queries_run_streams_only_through_the_ingest_helpers():
         if token in path.read_text()
     ]
     assert offenders == []
+
+
+def test_queries_open_sources_and_scratch_only_through_the_helpers():
+    """A stream source (streaming/ingest.table_file_stream) and a
+    scratch directory (sources/io.scratch_dir) each have one helper; a
+    query that builds its own copies a reader conf, a schema probe or
+    a temp dir nothing removes."""
+    pkg = pathlib.Path(registry.__file__).parent
+    offenders = [
+        f"{path.name}: {token}"
+        for path in sorted((pkg / "queries").glob("*.py"))
+        for token in (
+            "readStream.schema(",
+            "pathGlobFilter",
+            "spark.conf.set(",
+            "tempfile.mkdtemp",
+        )
+        if token in path.read_text()
+    ]
+    assert offenders == []
