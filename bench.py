@@ -6,10 +6,8 @@ compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 the full per-query dict {name: sec} for every headline query is
 written to BENCH_LOCAL.json (+ the per-round BENCH_LOCAL_r{N}.json
 snapshot) because a caller may keep only a ~2 KB stdout tail, which a
-229-entry dict cannot fit (VERDICT r12 item 2a).  Set
-SPARK_GRAFT_BENCH_STDOUT=full to also print the full record as a
-first line.  The timed query set itself is append-only across rounds
-(HEADLINE below).
+229-entry dict cannot fit.  The timed query set itself is append-only
+across rounds (HEADLINE below).
 
 Queries execute via count() — full plan execution without collect
 transfer.  The set covers every workload family: the flagship RFM agg,
@@ -292,7 +290,7 @@ COMPARABLE_R6 = tuple(HEADLINE[:169])
 #: Without this, a reps=1 run (the driver) charges the whole base-state
 #: build to whichever query touches the artifact first (BENCH_r07
 #: recorded q_item_cf_incremental at 6.8 s; its Δ-maintenance is
-#: sub-second).  Disable with SPARK_GRAFT_BENCH_WARM_ARTIFACTS=0.
+#: sub-second).
 ARTIFACT_WARMUP = (
     "q_als_recommend", "q_als_eval", "q_pca_project",
     # round 11: the Pareto/NBD lattice-fit artifact and the LSH
@@ -482,9 +480,7 @@ def main() -> None:
     # One untimed pass over the artifact-building queries at the BENCH
     # scale factor, so stored-model/index queries measure the warm
     # (production) path — see ARTIFACT_WARMUP.
-    warm_sec = 0.0
-    if os.environ.get("SPARK_GRAFT_BENCH_WARM_ARTIFACTS", "1") != "0":
-        warm_sec = warm_artifacts(spark, queries, sf_dir)
+    warm_sec = warm_artifacts(spark, queries, sf_dir)
     timings: dict[str, float] = {}
     for i, name in enumerate(HEADLINE):
         best = float("inf")
@@ -547,24 +543,13 @@ def main() -> None:
             out[key] = round(sum(timings[n] for n in names), 3)
     if regressions:
         out["regressions"] = regressions
-    # The driver records only a ~2 KB TAIL of stdout and parses the
-    # final JSON line.  Through round 12 the full per-query record was
-    # printed FIRST and the compact summary LAST; the giant first line
-    # (~6 KB — it cannot fit any tail window that must also hold the
-    # summary) made the driver's own per-query diff come back empty
-    # two rounds running (PERF_r12: n_common 0, *_bench_ok false).
-    # VERDICT r12 item 2a therefore slims stdout to ONE compact JSON
-    # line — totals + frozen-subset comparables + the slowest-K
-    # queries — always inside the capture window, always parseable.
-    # The FULL per-query dict is not dropped: it persists to
-    # BENCH_LOCAL.json and the per-round BENCH_LOCAL_r{N}.json
-    # snapshot (both committed), which is where every cross-round
-    # per-query baseline has been read from since round 7 anyway.
-    # SPARK_GRAFT_BENCH_STDOUT=full restores the old two-line form.
-    summary = summarize(out)
-    if os.environ.get("SPARK_GRAFT_BENCH_STDOUT") == "full":
-        print(json.dumps(out), flush=True)
-    print(json.dumps(summary), flush=True)
+    # A caller may keep only a ~2 KB tail of stdout and parse its last
+    # JSON line, which the full per-query dict (~6 KB) cannot share
+    # with the summary.  So stdout carries ONE compact line — totals,
+    # frozen-subset comparables and the slowest-K queries — and the
+    # full per-query dict persists to BENCH_LOCAL.json and the
+    # per-round BENCH_LOCAL_r{N}.json snapshot.
+    print(json.dumps(summarize(out)), flush=True)
     try:
         here = os.path.dirname(os.path.abspath(__file__))
         with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as f:

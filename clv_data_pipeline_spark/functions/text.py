@@ -116,10 +116,36 @@ def quality_score(text: Column) -> Column:
     return F.round(length_ok * punct_pen * digit_pen * mwl_ok, 6)
 
 
+#: DuckDB twin of :func:`quality_score` over the ``text`` column.
+QUALITY_SCORE_SQL = r"""ROUND(
+             LEAST(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
+             * GREATEST(0.0, 1.0 -
+                 (CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE)
+                  / GREATEST(length(text), 1)) * 5.0)
+             * GREATEST(0.0, 1.0 -
+                 (CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
+                  / GREATEST(length(text), 1)) * 5.0)
+             * (CASE WHEN (CAST(length(trim(text)) AS DOUBLE)
+                           / GREATEST(len(regexp_extract_all(trim(text), '\S+', 0)), 1))
+                          BETWEEN 3.0 AND 12.0
+                     THEN 1.0 ELSE 0.5 END),
+           6)"""
+
+
 def normalize_text(text: Column) -> Column:
     """Canonical form for fingerprinting: lowercase, collapse runs of
     whitespace, trim."""
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+
+
+#: DuckDB twin of :func:`normalize_text` over the ``text`` column.
+NORMALIZE_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+
+#: DuckDB twins of ``split(normalize_text(text), " ")``, the token
+#: list of the ``text`` column: one splits with ``string_split_regex``,
+#: the other with ``string_split``; both give the same tokens.
+TOKENIZE_SQL = f"string_split_regex({NORMALIZE_SQL}, ' ')"
+SPLIT_TOKENS_SQL = f"string_split( {NORMALIZE_SQL}, ' ')"
 
 
 def fingerprint(text: Column) -> Column:
@@ -127,6 +153,10 @@ def fingerprint(text: Column) -> Column:
     normalized text.  Engine-portable (DuckDB md5 produces the same
     hex), unlike xxhash64/murmur which are engine-specific."""
     return F.md5(normalize_text(text).cast("binary"))
+
+
+#: DuckDB twin of :func:`fingerprint` over the ``text`` column.
+FINGERPRINT_SQL = f"md5({NORMALIZE_SQL})"
 
 
 # PII patterns kept to the regex subset Java (Spark) and RE2 (DuckDB,

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clv_data_pipeline_spark.functions.stats import md5_uniform
 from clv_data_pipeline_spark.functions.text import fingerprint, normalize_text
 
 # Mersenne prime 2^31-1 as the universal-hash modulus: with 31-bit
@@ -1222,20 +1223,11 @@ def weighted_minhash_signatures(
     ex = tf.withColumn(
         "k", F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1)))
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("token"), F.lit("|"), F.col("k").cast("string")
-                ).cast("binary")
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    u = (h + F.lit(0.5)) / F.lit(4294967296.0)
+    u = md5_uniform(
+        F.concat(
+            F.col("token"), F.lit("|"), F.col("k").cast("string")
+        ).cast("binary")
+    )
     score = -F.log(u) / F.col("tf")
     sig = ex.groupBy(id_col, "k").agg(
         F.min(

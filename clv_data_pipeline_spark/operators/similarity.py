@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from clv_data_pipeline_spark.functions.stats import md5_uniform, md5_uniform_sql
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a_i*b_i via zip_with + aggregate (double precision)."""
@@ -62,28 +64,14 @@ def portable_cell_assign(
         (F.col("id") / dim).cast("long").alias("c"),
         (F.col("id") % dim).alias("i"),
         (
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                (F.col("id") / dim)
-                                .cast("long")
-                                .cast("string"),
-                                F.lit("|"),
-                                (F.col("id") % dim).cast("string"),
-                                F.lit(salt),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                + F.lit(0.5)
+            md5_uniform(
+                F.concat(
+                    (F.col("id") / dim).cast("long").cast("string"),
+                    F.lit("|"),
+                    (F.col("id") % dim).cast("string"),
+                    F.lit(salt),
+                )
             )
-            / F.lit(4294967296.0)
             * 2
             - 1
         ).alias("w"),
@@ -109,6 +97,36 @@ def portable_cell_assign(
         .filter(F.col("rn") == 1)
         .select("vec_id", F.col("c").alias("cell"))
     )
+
+
+def portable_cell_assign_sql(n_cells: int, salt: str, max_id: int) -> str:
+    """DuckDB twin of :func:`portable_cell_assign` over the embeddings
+    with vec_id < ``max_id``: the ``dims`` (vec_id, i, x) and ``assign``
+    (vec_id, cell) CTEs."""
+    w = md5_uniform_sql(f"c || '|' || d || '{salt}'")
+    return f"""dims AS (
+        SELECT vec_id,
+               CAST(unnest(range(len(embedding))) AS BIGINT) AS i,
+               CAST(unnest(embedding) AS DOUBLE) AS x
+        FROM embeddings WHERE vec_id < {max_id}),
+    w AS (
+        SELECT c, d AS i,
+               {w} * 2 - 1 AS w
+        FROM (SELECT unnest(range({n_cells})) AS c),
+             (SELECT unnest(range(64)) AS d)),
+    cdots AS (
+        SELECT dm.vec_id, w.c,
+               CAST(SUM(CAST(ROUND(dm.x * w.w * 1000000000.0, 0)
+                             AS BIGINT)) AS BIGINT) AS dot
+        FROM dims dm JOIN w ON w.i = dm.i
+        GROUP BY dm.vec_id, w.c),
+    assign AS (
+        SELECT vec_id, c AS cell
+        FROM (SELECT vec_id, c,
+                     ROW_NUMBER() OVER (PARTITION BY vec_id
+                                        ORDER BY dot DESC, c) AS rn
+              FROM cdots)
+        WHERE rn = 1)"""
 
 
 def int_cosine_sim(

@@ -34,6 +34,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clv_data_pipeline_spark.functions.stats import (
+    md5_uniform,
+    md5_uniform_sql,
+)
 from clv_data_pipeline_spark.registry import query
 from clv_data_pipeline_spark.sources.io import load_table
 
@@ -867,9 +871,9 @@ def _walk_oracle(steps: int = _WALK_STEPS) -> str:
         FROM {prev} w JOIN cdf c
           ON c.src = w.node
          AND CAST(c.cum AS DOUBLE) >=
-             ((('0x' || substr(md5(w.start || '|'
-                || CAST(w.wid AS VARCHAR) || '|{t}'), 1, 8))::BIGINT
-               + 0.5) / 4294967296.0) * c.tot
+             ({md5_uniform_sql(
+                 f"w.start || '|' || CAST(w.wid AS VARCHAR) || '|{t}'")})
+             * c.tot
         GROUP BY w.start, w.wid)""")
         prev = f"wk{t}"
     union = "\n    UNION ALL ".join(
@@ -956,23 +960,14 @@ def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ]
     for t in range(1, _WALK_STEPS + 1):
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("start"),
-                        F.lit("|"),
-                        F.col("wid").cast("string"),
-                        F.lit(f"|{t}"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        u = (h + F.lit(0.5)) / F.lit(4294967296.0)
+        u = md5_uniform(
+            F.concat(
+                F.col("start"),
+                F.lit("|"),
+                F.col("wid").cast("string"),
+                F.lit(f"|{t}"),
+            )
+        )
         cur = (
             cur.join(
                 F.broadcast(cdf), F.col("node") == F.col("src")

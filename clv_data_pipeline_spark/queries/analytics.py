@@ -19,7 +19,19 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from clv_data_pipeline_spark.functions.text import normalize_text
+from clv_data_pipeline_spark.functions.stats import (
+    md5_bits,
+    md5_bits_sql,
+    md5_uniform,
+    md5_uniform_sql,
+    poisson1_quantile,
+    poisson1_quantile_sql,
+)
+from clv_data_pipeline_spark.functions.text import (
+    SPLIT_TOKENS_SQL,
+    TOKENIZE_SQL,
+    normalize_text,
+)
 from clv_data_pipeline_spark.registry import query
 from clv_data_pipeline_spark.sources.io import load_table
 
@@ -144,17 +156,11 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOKENIZE_SQL = (
-    "string_split_regex(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),"
-    " ' ')"
-)
-
-
 @query(
     "q_tfidf_top_terms",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, unnest({_TOKENIZE_SQL}) AS term FROM documents),
+        SELECT doc_id, unnest({TOKENIZE_SQL}) AS term FROM documents),
     tf AS (
         SELECT doc_id, term, COUNT(*) AS tf
         FROM toks WHERE term <> '' GROUP BY doc_id, term),
@@ -313,7 +319,7 @@ def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_bigram_counts",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, {_TOKENIZE_SQL} AS ts FROM documents),
+        SELECT doc_id, {TOKENIZE_SQL} AS ts FROM documents),
     bigrams AS (
         SELECT doc_id,
                unnest(list_transform(
@@ -549,14 +555,27 @@ def _pagerank_oracle(iters: int = 10, damping: float = 0.85) -> str:
     """
 
 
-@query(
-    "q_tree_paths",
-    oracle="""
-    WITH RECURSIVE edges AS (
+def _heap_edges(docs: DataFrame) -> DataFrame:
+    """(node, parent): the binary-heap taxonomy over documents —
+    parent = (doc_id - 1) // 2, root 0 with a NULL parent."""
+    return docs.select(
+        F.col("doc_id").cast("long").alias("node"),
+        F.when(F.col("doc_id") == 0, F.lit(None).cast("long"))
+        .otherwise(F.floor((F.col("doc_id") - 1) / 2).cast("long"))
+        .alias("parent"),
+    )
+
+
+#: DuckDB twin of :func:`_heap_edges` (an ``edges`` CTE).
+_HEAP_EDGES_SQL = """edges AS (
         SELECT CAST(doc_id AS BIGINT) AS node,
                CASE WHEN doc_id = 0 THEN NULL
                     ELSE CAST((doc_id - 1) // 2 AS BIGINT) END AS parent
-        FROM documents),
+        FROM documents)"""
+
+#: ... plus ``walk`` (node, cur, depth, path): every ancestor of each
+#: node with its root-ward path string.  Needs ``WITH RECURSIVE``.
+_HEAP_PATH_WALK_SQL = f"""{_HEAP_EDGES_SQL},
     walk AS (
         SELECT node, node AS cur, CAST(0 AS BIGINT) AS depth,
                CAST(node AS VARCHAR) AS path
@@ -565,7 +584,13 @@ def _pagerank_oracle(iters: int = 10, damping: float = 0.85) -> str:
         SELECT w.node, e.parent, w.depth + 1,
                CAST(e.parent AS VARCHAR) || '/' || w.path
         FROM walk w JOIN edges e ON w.cur = e.node
-        WHERE e.parent IS NOT NULL)
+        WHERE e.parent IS NOT NULL)"""
+
+
+@query(
+    "q_tree_paths",
+    oracle=f"""
+    WITH RECURSIVE {_HEAP_PATH_WALK_SQL}
     SELECT node AS doc_id,
            CAST(MAX(depth) AS BIGINT) AS depth,
            CAST(0 AS BIGINT) AS root,
@@ -594,12 +619,7 @@ def q_tree_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clv_data_pipeline_spark.operators.graph import ancestor_paths
 
     docs = load_table(spark, sf_dir, "documents")
-    edges = docs.select(
-        F.col("doc_id").cast("long").alias("node"),
-        F.when(F.col("doc_id") == 0, F.lit(None).cast("long"))
-        .otherwise(F.floor((F.col("doc_id") - 1) / 2).cast("long"))
-        .alias("parent"),
-    )
+    edges = _heap_edges(docs)
     # bounded metadata barrier: one count to size the unroll depth
     depth = int(math.ceil(math.log2(docs.count() + 1))) + 1
     return ancestor_paths(edges, max_depth=depth).select(
@@ -609,12 +629,8 @@ def q_tree_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tree_depth_doubling",
-    oracle="""
-    WITH RECURSIVE edges AS (
-        SELECT CAST(doc_id AS BIGINT) AS node,
-               CASE WHEN doc_id = 0 THEN NULL
-                    ELSE CAST((doc_id - 1) // 2 AS BIGINT) END AS parent
-        FROM documents),
+    oracle=f"""
+    WITH RECURSIVE {_HEAP_EDGES_SQL},
     walk AS (
         SELECT node, node AS cur, CAST(0 AS BIGINT) AS depth FROM edges
         UNION ALL
@@ -639,12 +655,7 @@ def q_tree_depth_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    edges = docs.select(
-        F.col("doc_id").cast("long").alias("node"),
-        F.when(F.col("doc_id") == 0, F.lit(None).cast("long"))
-        .otherwise(F.floor((F.col("doc_id") - 1) / 2).cast("long"))
-        .alias("parent"),
-    )
+    edges = _heap_edges(docs)
     return ancestor_depths_doubling(edges, rounds=5).select(
         F.col("node").alias("doc_id"), "depth", "root"
     )
@@ -930,9 +941,21 @@ def q_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_python_datasource",
-    oracle="""
+def _pyds_totals(txns: DataFrame) -> DataFrame:
+    """Per-customer txn count, DECIMAL-summed amount and first day of
+    ``clv_synthetic`` rows."""
+    return txns.groupBy("customer_id").agg(
+        F.count("*").cast("long").alias("n_txns"),
+        F.round(
+            F.sum(F.col("amount").cast("decimal(18,4)")).cast("double"), 2
+        ).alias("total_amount"),
+        F.min("day_offset").cast("long").alias("first_day"),
+    )
+
+
+#: DuckDB twin of :func:`_pyds_totals` over 2,000 ``clv_synthetic`` rows,
+#: regenerated with the source's integer arithmetic.
+_PYDS_TOTALS_ORACLE = """
     WITH gen AS (
         SELECT i AS txn_id,
                (i * 1103515245 + 12345) % 2147483647 AS h
@@ -949,7 +972,12 @@ def q_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS total_amount,
            CAST(MIN(day_offset) AS BIGINT) AS first_day
     FROM rows_ GROUP BY customer_id
-    """,
+    """
+
+
+@query(
+    "q_python_datasource",
+    oracle=_PYDS_TOTALS_ORACLE,
 )
 def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom CONNECTOR coverage (Spark 4 Python DataSource API): scan
@@ -967,13 +995,7 @@ def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("partitions", 8)
         .load()
     )
-    return txns.groupBy("customer_id").agg(
-        F.count("*").cast("long").alias("n_txns"),
-        F.round(
-            F.sum(F.col("amount").cast("decimal(18,4)")).cast("double"), 2
-        ).alias("total_amount"),
-        F.min("day_offset").cast("long").alias("first_day"),
-    )
+    return _pyds_totals(txns)
 
 
 @query(
@@ -1621,24 +1643,7 @@ def q_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_pyds",
-    oracle="""
-    WITH gen AS (
-        SELECT i AS txn_id,
-               (i * 1103515245 + 12345) % 2147483647 AS h
-        FROM (SELECT unnest(generate_series(0, 1999)) AS i)),
-    rows_ AS (
-        SELECT txn_id,
-               h % 200 AS customer_id,
-               (h % 99000) / 100.0 + 1.0 AS amount,
-               h % 30 AS day_offset
-        FROM gen)
-    SELECT CAST(customer_id AS BIGINT) AS customer_id,
-           CAST(COUNT(*) AS BIGINT) AS n_txns,
-           ROUND(CAST(SUM(CAST(amount AS DECIMAL(18,4))) AS DOUBLE), 2)
-               AS total_amount,
-           CAST(MIN(day_offset) AS BIGINT) AS first_day
-    FROM rows_ GROUP BY customer_id
-    """,
+    oracle=_PYDS_TOTALS_ORACLE,
 )
 def q_stream_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom STREAMING connector coverage (Spark 4 streaming Python
@@ -1659,13 +1664,7 @@ def q_stream_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("partitions", 8)
         .load()
     )
-    return drain_to_memory(stream, "append").groupBy("customer_id").agg(
-        F.count("*").cast("long").alias("n_txns"),
-        F.round(
-            F.sum(F.col("amount").cast("decimal(18,4)")).cast("double"), 2
-        ).alias("total_amount"),
-        F.min("day_offset").cast("long").alias("first_day"),
-    )
+    return _pyds_totals(drain_to_memory(stream, "append"))
 
 
 @query(
@@ -1812,8 +1811,7 @@ _DP_EPS = 0.5  # per-release epsilon; sensitivity-1 counts
         FROM events GROUP BY event_type),
     u AS (
         SELECT event_type, exact_n,
-               (('0x' || substr(md5(event_type || '|dp'), 1, 8))::BIGINT
-                + 0.5) / 4294967296.0 AS u
+               {md5_uniform_sql("event_type || '|dp'")} AS u
         FROM c)
     SELECT event_type, exact_n,
            ROUND(exact_n + CASE WHEN u < 0.5
@@ -1845,16 +1843,9 @@ def q_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     result."""
     ev = load_table(spark, sf_dir, "events")
     c = ev.groupBy("event_type").agg(F.count("*").alias("exact_n"))
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("event_type"), F.lit("|dp")).cast("binary")),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    u = (h + F.lit(0.5)) / F.lit(4294967296.0)
+    u = md5_uniform(
+        F.concat(F.col("event_type"), F.lit("|dp")).cast("binary")
+    )
     noise = F.when(
         u < 0.5, F.log(2.0 * u) / _DP_EPS
     ).otherwise(-F.log(2.0 * (1.0 - u)) / _DP_EPS)
@@ -2031,11 +2022,10 @@ def q_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_pmi",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               string_split(
-                   trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')
+               {SPLIT_TOKENS_SQL}
                    AS ws
         FROM documents),
     uni AS (
@@ -2379,26 +2369,49 @@ def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_bootstrap",
-    oracle="""
-    WITH u AS (
-        SELECT user_id,
-               CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS v
-        FROM events WHERE event_type = 'purchase' GROUP BY user_id),
-    reps AS (
-        SELECT u.user_id, u.v, r.b,
-               (('0x' || substr(md5(CAST(u.user_id AS VARCHAR) || '|'
-                    || CAST(r.b AS VARCHAR)), 1, 8))::BIGINT + 0.5)
-                   / 4294967296.0 AS p
-        FROM u CROSS JOIN (SELECT unnest(range(100)) AS b) r),
-    m AS (
+def _poisson1_mult(key: str, sep: str) -> Column:
+    """Bootstrap replicate ``b``'s Poisson(1) multiplicity for the row
+    keyed ``key``: md5("<key><sep><b>") read as a uniform in (0, 1),
+    inverted through the Poisson(1) CDF (capped at 5).  A map-side
+    column expression, replayed by the bootstrap oracles."""
+    p = md5_uniform(
+        F.concat(
+            F.col(key).cast("string"), F.lit(sep), F.col("b").cast("string")
+        ).cast("binary")
+    )
+    return poisson1_quantile(p)
+
+
+def _replicate_mean_ci(reps: DataFrame, mult: Column) -> DataFrame:
+    """Poisson-bootstrap CI of the mean of ``v`` over (b, v) replicate
+    rows weighted by ``mult``: the replicate means (rounded products
+    summed as DECIMAL, divided once) and their 2.5/50/97.5
+    percentiles."""
+    means = (
+        reps.select("b", mult.alias("mult"), "v")
+        .groupBy("b")
+        .agg(
+            F.sum(
+                F.round(F.col("mult") * F.col("v"), 6).cast("decimal(28,6)")
+            ).alias("_s"),
+            F.sum("mult").alias("_n"),
+        )
+        .filter(F.col("_n") > 0)
+        .select((F.col("_s").cast("double") / F.col("_n")).alias("rep_mean"))
+    )
+    return means.agg(
+        F.count("*").cast("long").alias("n_replicates"),
+        F.round(F.percentile("rep_mean", 0.025), 6).alias("ci_lo"),
+        F.round(F.percentile("rep_mean", 0.5), 6).alias("ci_mid"),
+        F.round(F.percentile("rep_mean", 0.975), 6).alias("ci_hi"),
+    )
+
+
+#: DuckDB twin of :func:`_replicate_mean_ci` over a ``reps`` (b, p, v)
+#: CTE whose ``p`` is the replicate's md5 uniform.
+_REPLICATE_MEAN_CI_SQL = f"""m AS (
         SELECT b,
-               CASE WHEN p < 0.367879441 THEN 0
-                    WHEN p < 0.735758882 THEN 1
-                    WHEN p < 0.919698603 THEN 2
-                    WHEN p < 0.981011843 THEN 3
-                    WHEN p < 0.996340153 THEN 4 ELSE 5 END AS mult,
+               {poisson1_quantile_sql("p")} AS mult,
                v
         FROM reps),
     means AS (
@@ -2413,7 +2426,23 @@ def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS ci_mid,
            ROUND(CAST(quantile_cont(rep_mean, 0.975) AS DOUBLE), 6)
                AS ci_hi
-    FROM means
+    FROM means"""
+
+
+@query(
+    "q_bootstrap",
+    oracle=f"""
+    WITH u AS (
+        SELECT user_id,
+               CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS v
+        FROM events WHERE event_type = 'purchase' GROUP BY user_id),
+    reps AS (
+        SELECT u.user_id, u.v, r.b,
+               {md5_uniform_sql(
+                   "CAST(u.user_id AS VARCHAR) || '|' || CAST(r.b AS VARCHAR)"
+               )} AS p
+        FROM u CROSS JOIN (SELECT unnest(range(100)) AS b) r),
+    {_REPLICATE_MEAN_CI_SQL}
     """,
 )
 def q_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2439,56 +2468,7 @@ def q_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("v")
     )
     reps = u.withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(99))))
-    mult = _poisson1_mult("user_id", "|")
-    m = reps.select("b", mult.alias("mult"), "v")
-    means = (
-        m.groupBy("b")
-        .agg(
-            F.sum(
-                F.round(F.col("mult") * F.col("v"), 6).cast("decimal(28,6)")
-            ).alias("_s"),
-            F.sum("mult").alias("_n"),
-        )
-        .filter(F.col("_n") > 0)
-        .select((F.col("_s").cast("double") / F.col("_n")).alias("rep_mean"))
-    )
-    return means.agg(
-        F.count("*").cast("long").alias("n_replicates"),
-        F.round(F.percentile("rep_mean", 0.025), 6).alias("ci_lo"),
-        F.round(F.percentile("rep_mean", 0.5), 6).alias("ci_mid"),
-        F.round(F.percentile("rep_mean", 0.975), 6).alias("ci_hi"),
-    )
-
-
-def _poisson1_mult(key: str, sep: str) -> Column:
-    """Bootstrap replicate ``b``'s Poisson(1) multiplicity for the row
-    keyed ``key``: md5("<key><sep><b>") read as a uniform in (0, 1),
-    inverted through the Poisson(1) CDF (capped at 5).  A map-side
-    column expression, replayed by the bootstrap oracles."""
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col(key).cast("string"),
-                    F.lit(sep),
-                    F.col("b").cast("string"),
-                ).cast("binary")
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    p = (h + F.lit(0.5)) / F.lit(4294967296.0)
-    return (
-        F.when(p < 0.367879441, 0)
-        .when(p < 0.735758882, 1)
-        .when(p < 0.919698603, 2)
-        .when(p < 0.981011843, 3)
-        .when(p < 0.996340153, 4)
-        .otherwise(5)
-    )
+    return _replicate_mean_ci(reps, _poisson1_mult("user_id", "|"))
 
 
 @query(
@@ -2633,21 +2613,8 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_recursive_cte",
-    oracle="""
-    WITH RECURSIVE edges AS (
-        SELECT CAST(doc_id AS BIGINT) AS node,
-               CASE WHEN doc_id = 0 THEN NULL
-                    ELSE CAST((doc_id - 1) // 2 AS BIGINT) END AS parent
-        FROM documents),
-    walk AS (
-        SELECT node, node AS cur, CAST(0 AS BIGINT) AS depth,
-               CAST(node AS VARCHAR) AS path
-        FROM edges
-        UNION ALL
-        SELECT w.node, e.parent, w.depth + 1,
-               CAST(e.parent AS VARCHAR) || '/' || w.path
-        FROM walk w JOIN edges e ON w.cur = e.node
-        WHERE e.parent IS NOT NULL)
+    oracle=f"""
+    WITH RECURSIVE {_HEAP_PATH_WALK_SQL}
     SELECT node AS doc_id,
            CAST(MAX(depth) AS BIGINT) AS depth,
            arg_max(path, depth) AS path
@@ -2903,38 +2870,17 @@ def q_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_grouped_bootstrap",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT user_id, CAST(value AS DECIMAL(18,4)) AS v
         FROM events WHERE event_type = 'purchase'),
     reps AS (
         SELECT ev.user_id, ev.v, r.b,
-               (('0x' || substr(md5(CAST(ev.user_id AS VARCHAR) || '#'
-                    || CAST(r.b AS VARCHAR)), 1, 8))::BIGINT + 0.5)
-                   / 4294967296.0 AS p
+               {md5_uniform_sql(
+                   "CAST(ev.user_id AS VARCHAR) || '#' || CAST(r.b AS VARCHAR)"
+               )} AS p
         FROM ev CROSS JOIN (SELECT unnest(range(100)) AS b) r),
-    m AS (
-        SELECT b,
-               CASE WHEN p < 0.367879441 THEN 0
-                    WHEN p < 0.735758882 THEN 1
-                    WHEN p < 0.919698603 THEN 2
-                    WHEN p < 0.981011843 THEN 3
-                    WHEN p < 0.996340153 THEN 4 ELSE 5 END AS mult,
-               v
-        FROM reps),
-    means AS (
-        SELECT b,
-               CAST(SUM(CAST(ROUND(mult * v, 6) AS DECIMAL(28,6)))
-                    AS DOUBLE) / SUM(mult) AS rep_mean
-        FROM m GROUP BY b HAVING SUM(mult) > 0)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_replicates,
-           ROUND(CAST(quantile_cont(rep_mean, 0.025) AS DOUBLE), 6)
-               AS ci_lo,
-           ROUND(CAST(quantile_cont(rep_mean, 0.5) AS DOUBLE), 6)
-               AS ci_mid,
-           ROUND(CAST(quantile_cont(rep_mean, 0.975) AS DOUBLE), 6)
-               AS ci_hi
-    FROM means
+    {_REPLICATE_MEAN_CI_SQL}
     """,
 )
 def q_grouped_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2955,27 +2901,7 @@ def q_grouped_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps = ev.select(
         "user_id", F.col("value").cast("decimal(18,4)").alias("v")
     ).withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(99))))
-    mult = _poisson1_mult("user_id", "#")
-    means = (
-        reps.select("b", mult.alias("mult"), "v")
-        .groupBy("b")
-        .agg(
-            F.sum(
-                F.round(F.col("mult") * F.col("v"), 6).cast("decimal(28,6)")
-            ).alias("_s"),
-            F.sum("mult").alias("_n"),
-        )
-        .filter(F.col("_n") > 0)
-        .select(
-            (F.col("_s").cast("double") / F.col("_n")).alias("rep_mean")
-        )
-    )
-    return means.agg(
-        F.count("*").cast("long").alias("n_replicates"),
-        F.round(F.percentile("rep_mean", 0.025), 6).alias("ci_lo"),
-        F.round(F.percentile("rep_mean", 0.5), 6).alias("ci_mid"),
-        F.round(F.percentile("rep_mean", 0.975), 6).alias("ci_hi"),
-    )
+    return _replicate_mean_ci(reps, _poisson1_mult("user_id", "#"))
 
 
 def _bradley_terry_oracle(iters: int = 5) -> str:
@@ -3226,16 +3152,14 @@ _DPQ_BIN = 0.25
 
 @query(
     "q_dp_histogram",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs
         FROM documents GROUP BY lang, source),
     h AS (
         SELECT lang, source, n_docs,
-               ('0x' || substr(md5(lang || '|' || source || '|dp'),
-                               1, 8))::BIGINT AS h1,
-               ('0x' || substr(md5(lang || '|' || source || '|dp'),
-                               9, 8))::BIGINT AS h2
+               {md5_bits_sql("lang || '|' || source || '|dp'", 1)} AS h1,
+               {md5_bits_sql("lang || '|' || source || '|dp'", 9)} AS h2
         FROM c),
     noised AS (
         SELECT lang, source, n_docs,
@@ -3274,15 +3198,15 @@ def q_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = d.groupBy("lang", "source").agg(
         F.count("*").cast("long").alias("n_docs")
     )
-    seed = F.md5(
-        F.concat(F.col("lang"), F.lit("|"), F.col("source"), F.lit("|dp"))
+    seed = F.concat(
+        F.col("lang"), F.lit("|"), F.col("source"), F.lit("|dp")
     )
     h = c.select(
         "lang",
         "source",
         "n_docs",
-        F.conv(F.substring(seed, 1, 8), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(seed, 9, 8), 16, 10).cast("long").alias("h2"),
+        md5_bits(seed, 1).alias("h1"),
+        md5_bits(seed, 9).alias("h2"),
     )
     tz = "least(bit_count(({0} & -{0}) - 1), 32)"
     noised = h.select(
@@ -3324,10 +3248,9 @@ def q_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT q, bin, c, n,
                ROUND(CAST({_DPQ_EPS} AS DOUBLE)
                        * (-ABS(c - q * n)) / 2
-                     - ln(-ln((CAST(CAST('0x' ||
-                         substr(md5(CAST(q AS VARCHAR) || '|'
-                                    || CAST(bin AS VARCHAR)), 1, 8)
-                         AS BIGINT) AS DOUBLE) + 0.5) / 4294967296.0)),
+                     - ln(-ln((CAST({md5_bits_sql(
+                         "CAST(q AS VARCHAR) || '|' || CAST(bin AS VARCHAR)"
+                     )} AS DOUBLE) + 0.5) / 4294967296.0)),
                      9) AS score
         FROM qs CROSS JOIN cum),
     pick AS (
@@ -3386,22 +3309,11 @@ def q_dp_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.array(F.lit(0.5), F.lit(0.9))).alias("q")
     )
     j = qs.crossJoin(cum)
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("q").cast("string"),
-                    F.lit("|"),
-                    F.col("bin").cast("string"),
-                ).cast("binary")
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    u = (h + F.lit(0.5)) / F.lit(4294967296.0)
+    u = md5_uniform(
+        F.concat(
+            F.col("q").cast("string"), F.lit("|"), F.col("bin").cast("string")
+        ).cast("binary")
+    )
     score = F.round(
         F.lit(_DPQ_EPS)
         * (-F.abs(F.col("c") - F.col("q") * F.col("n")))
@@ -5097,7 +5009,7 @@ def _migration_tags(u: DataFrame, *carry: str) -> DataFrame:
 
 @query(
     "q_price_elasticity",
-    oracle="""
+    oracle=f"""
     WITH raw AS (
         SELECT p.p_brand AS brand,
                ROUND(ln(l.l_extendedprice / l.l_quantity), 9) AS x,
@@ -5106,8 +5018,7 @@ def _migration_tags(u: DataFrame, *carry: str) -> DataFrame:
         WHERE l.l_quantity > 0 AND l.l_extendedprice > 0),
     obs AS (
         SELECT brand, x,
-               CASE WHEN ('0x' || substr(md5(brand), 1, 8))::BIGINT
-                         % 2 = 0
+               CASE WHEN {md5_bits_sql("brand")} % 2 = 0
                     THEN ROUND(y0 - 1.5 * x, 9) ELSE y0 END AS y
         FROM raw),
     s AS (
@@ -5166,16 +5077,12 @@ def q_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # planted demand response: md5-even brands get y -= 1.5x, giving
     # them a true elasticity near -1.5.  TPC-H's l_extendedprice is
     # quantity * retailprice, so the raw slope is ~0 for every brand
-    # and elastic_flag was constant-False (round-8 degeneracy audit).
+    # and elastic_flag would be constant-False.
     obs = obs.select(
         "brand",
         "x",
         F.when(
-            F.conv(F.substring(F.md5("brand"), 1, 8), 16, 10).cast(
-                "long"
-            )
-            % 2
-            == 0,
+            md5_bits(F.col("brand")) % 2 == 0,
             F.round(F.col("y0") - F.lit(1.5) * F.col("x"), 9),
         )
         .otherwise(F.col("y0"))

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clv_data_pipeline_spark.functions.stats import md5_bits, md5_bits_sql
 from clv_data_pipeline_spark.registry import query
 from clv_data_pipeline_spark.sources.io import load_table, scratch_dir
 
@@ -1243,12 +1244,12 @@ def q_prefix_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_late_events",
-    oracle="""
+    oracle=f"""
     WITH j AS (
         SELECT event_id, ts, epoch_us(ts) AS us,
                epoch_us(ts)
-               + (('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8))
-                  ::BIGINT % 7200) * 1000000 AS arr
+               + ({md5_bits_sql("CAST(event_id AS VARCHAR)")} % 7200)
+                 * 1000000 AS arr
         FROM events),
     t AS (
         SELECT event_id, ts, us,
@@ -1287,14 +1288,7 @@ def q_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", F.unix_micros(F.col("ts")).alias("us")
     )
-    jitter_s = (
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 7200
-    )
+    jitter_s = md5_bits(F.col("event_id").cast("string")) % 7200
     ev = ev.withColumn(
         "arr", F.col("us") + jitter_s * F.lit(1_000_000)
     )

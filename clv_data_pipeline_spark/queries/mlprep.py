@@ -22,28 +22,75 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clv_data_pipeline_spark.functions.text import normalize_text
+from clv_data_pipeline_spark.functions.stats import (
+    md5_bits,
+    md5_bits_sql,
+    md5_uniform,
+    md5_uniform_sql,
+    poisson1_quantile_sql,
+)
+from clv_data_pipeline_spark.functions.text import (
+    NORMALIZE_SQL,
+    QUALITY_SCORE_SQL,
+    SPLIT_TOKENS_SQL,
+    TOKENIZE_SQL,
+    normalize_text,
+)
 from clv_data_pipeline_spark.registry import query
 from clv_data_pipeline_spark.sources.io import load_table
 
-#: DuckDB twin of the Spark tokenizer (normalize_text + split on space).
-_TOKENIZE_SQL = (
-    "string_split_regex(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),"
-    " ' ')"
-)
+
+def _term_freq(docs: DataFrame) -> DataFrame:
+    """(doc_id, term, tf): each doc's count of every non-empty term of
+    its normalized, space-split text — one (doc, term) partial-agg
+    shuffle."""
+    toks = docs.select(
+        "doc_id",
+        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("term"),
+    ).filter(F.col("term") != "")
+    return toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+
+
+def _term_freq_sql(tokens: str = TOKENIZE_SQL) -> str:
+    """DuckDB twin of :func:`_term_freq`: the ``toks`` and ``tf``
+    (doc_id, term, tf) CTEs over the token list ``tokens``."""
+    return f"""toks AS (
+        SELECT doc_id, unnest({tokens}) AS term FROM documents),
+    tf AS (
+        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
+        FROM toks WHERE term <> '' GROUP BY doc_id, term)"""
+
 
 _BM25_K1 = 1.2
 _BM25_B = 0.75
 
 
-@query(
-    "q_bm25",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, unnest({_TOKENIZE_SQL}) AS term FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
+def _bm25_stats(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """BM25's inputs over ``docs``: (doc_id, term, tf, dl), the per-term
+    document frequency (term, df) and the 1-row corpus stats (n_docs,
+    avgdl; avgdl summed as DECIMAL, divided once)."""
+    tf = _term_freq(docs)
+    # doc length as a window over the TF frame, not a separate
+    # aggregate-plus-join: the one exchange onto doc_id then serves the
+    # length window AND (because the broadcast joins downstream
+    # preserve partitioning) a later doc-keyed window
+    tf_dl = tf.withColumn(
+        "dl", F.sum("tf").over(Window.partitionBy("doc_id"))
+    )
+    df = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    corpus = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).agg(
+        F.count("*").alias("n_docs"),
+        (
+            F.sum(F.col("dl").cast("decimal(18,0)")).cast("double")
+            / F.count("*")
+        ).alias("avgdl"),
+    )
+    return tf_dl, df, corpus
+
+
+#: DuckDB twin of :func:`_bm25_stats`: the ``tf`` (doc_id, term, tf),
+#: ``dl``, ``df`` and 1-row ``corpus`` CTEs.
+_BM25_STATS_SQL = f"""{_term_freq_sql()},
     dl AS (
         SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
     df AS (
@@ -53,7 +100,13 @@ _BM25_B = 0.75
         SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
                CAST(SUM(CAST(dl AS DECIMAL(18,0))) AS DOUBLE) / COUNT(*)
                    AS avgdl
-        FROM dl),
+        FROM dl)"""
+
+
+@query(
+    "q_bm25",
+    oracle=f"""
+    WITH {_BM25_STATS_SQL},
     scored AS (
         SELECT tf.doc_id, tf.term,
                ROUND(
@@ -97,40 +150,6 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _term_freq(docs: DataFrame) -> DataFrame:
-    """(doc_id, term, tf): each doc's count of every non-empty term of
-    its normalized, space-split text — one (doc, term) partial-agg
-    shuffle."""
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("term"),
-    ).filter(F.col("term") != "")
-    return toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-
-
-def _bm25_stats(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """BM25's inputs over ``docs``: (doc_id, term, tf, dl), the per-term
-    document frequency (term, df) and the 1-row corpus stats (n_docs,
-    avgdl; avgdl summed as DECIMAL, divided once)."""
-    tf = _term_freq(docs)
-    # doc length as a window over the TF frame, not a separate
-    # aggregate-plus-join: the one exchange onto doc_id then serves the
-    # length window AND (because the broadcast joins downstream
-    # preserve partitioning) a later doc-keyed window
-    tf_dl = tf.withColumn(
-        "dl", F.sum("tf").over(Window.partitionBy("doc_id"))
-    )
-    df = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    corpus = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).agg(
-        F.count("*").alias("n_docs"),
-        (
-            F.sum(F.col("dl").cast("decimal(18,0)")).cast("double")
-            / F.count("*")
-        ).alias("avgdl"),
-    )
-    return tf_dl, df, corpus
-
-
 def _bm25_term():
     """Okapi BM25 weight of one (doc, term) row joined to its df and
     the corpus stats (k1 = _BM25_K1, b = _BM25_B)."""
@@ -153,11 +172,7 @@ def _bm25_term():
 @query(
     "q_token_entropy",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, unnest({_TOKENIZE_SQL}) AS term FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
+    WITH {_term_freq_sql()},
     parts AS (
         SELECT doc_id,
                CAST(SUM(tf) AS BIGINT) AS n_tokens,
@@ -510,15 +525,10 @@ def _qc_weights():
 @query(
     "q_quality_classifier",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, unnest({_TOKENIZE_SQL}) AS term FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
+    WITH {_term_freq_sql()},
     feat AS (
         SELECT doc_id, tf,
-               CAST('0x' || substr(md5(term), 1, 8) AS BIGINT) % {_QC_DIM}
-                   AS bucket
+               {md5_bits_sql("term")} % {_QC_DIM} AS bucket
         FROM tf),
     dots AS (
         SELECT doc_id,
@@ -671,9 +681,7 @@ def _pair_stats_frames(docs: DataFrame, emb: DataFrame) -> DataFrame:
         .filter(F.col("tok") != "")
         .select(
             "doc_id",
-            F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10)
-            .cast("long")
-            .alias("h"),
+            md5_bits(F.col("tok")).alias("h"),
         )
         .select(
             "doc_id",
@@ -727,14 +735,10 @@ def _pair_stats_frames(docs: DataFrame, emb: DataFrame) -> DataFrame:
 #: Shared oracle CTE chain producing the per-pair integer stats
 #: frame `base` = (doc_id, n_tokens, dot, na, nb) — consumed by
 #: q_caption_align (per-pair readout) and q_pair_curate (funnel).
-_CA_PAIR_SQL = f"""toks AS (
-        SELECT doc_id, unnest({_TOKENIZE_SQL}) AS term FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
+_CA_PAIR_SQL = f"""{_term_freq_sql()},
     hx AS (
         SELECT doc_id, tf,
-               CAST('0x' || substr(md5(term), 1, 8) AS BIGINT) AS h
+               {md5_bits_sql("term")} AS h
         FROM tf),
     cvec AS (
         SELECT doc_id, h % {_CA_DIM} AS j,
@@ -1038,11 +1042,7 @@ def q_stream_pair_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_perplexity",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, unnest({_TOKENIZE_SQL}) AS term FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
+    WITH {_term_freq_sql()},
     lm AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS n_t FROM tf GROUP BY term),
     corpus AS (SELECT CAST(SUM(n_t) AS BIGINT) AS n_total FROM lm),
     scored AS (
@@ -1708,7 +1708,7 @@ _LAMBDA_BIGRAM = 0.7  # interpolation weight on the bigram ML estimate
     "q_perplexity_bigram",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, {_TOKENIZE_SQL} AS ts FROM documents),
+        SELECT doc_id, {TOKENIZE_SQL} AS ts FROM documents),
     pb AS (
         SELECT doc_id,
                unnest(list_transform(range(1, len(ts)), i -> ts[i])) AS w1,
@@ -1981,16 +1981,14 @@ def q_pca_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_feature_hash",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               unnest(string_split(
-                   trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
-                   AS token
+               unnest({SPLIT_TOKENS_SQL}) AS token
         FROM documents),
     h AS (
         SELECT doc_id,
-               ('0x' || substr(md5(token), 1, 8))::BIGINT % 256 AS bucket,
+               {md5_bits_sql("token")} % 256 AS bucket,
                CASE WHEN substr(md5(token), 9, 1) < '8'
                     THEN 1 ELSE -1 END AS sign
         FROM toks WHERE token <> '')
@@ -2018,7 +2016,7 @@ def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(normalize_text(F.col("text")), " ")).alias("token"),
     ).filter(F.col("token") != "")
     h = F.md5(F.col("token").cast("binary"))
-    bucket = F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % 256
+    bucket = md5_bits(F.col("token").cast("binary")) % 256
     sign = F.when(F.substring(h, 9, 1) < "8", 1).otherwise(-1)
     return (
         toks.select("doc_id", bucket.alias("bucket"), sign.alias("sign"))
@@ -2027,43 +2025,54 @@ def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RRF_K = 60
+def _quality_points(
+    spark: SparkSession, sf_dir: str, n_bins: int, *extra
+) -> DataFrame:
+    """(bin, *extra, pos) per document: its q_quality_score folded into
+    one of ``n_bins`` equal-width bins, and pos = 1 iff its token
+    entropy (q_token_entropy) is >= 4.4 — the labelled score both
+    AUC-style and calibration evaluations bin."""
+    from clv_data_pipeline_spark.queries.textops import q_quality_score
+
+    q = q_quality_score(spark, sf_dir)
+    e = q_token_entropy(spark, sf_dir).select("doc_id", "entropy")
+    return q.join(e, "doc_id").select(
+        F.least(
+            F.floor(F.col("quality") * n_bins).cast("long"),
+            F.lit(n_bins - 1),
+        ).alias("bin"),
+        *extra,
+        F.when(F.col("entropy") >= 4.4, 1).otherwise(0).alias("pos"),
+    )
 
 
-@query(
-    "q_rank_fusion",
-    oracle=f"""
-    WITH q AS (
-        SELECT doc_id,
-               ROUND(
-                 LEAST(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * (CASE WHEN (CAST(length(trim(text)) AS DOUBLE)
-                               / GREATEST(len(regexp_extract_all(trim(text),
-                                              '\\S+', 0)), 1))
-                              BETWEEN 3.0 AND 12.0
-                         THEN 1.0 ELSE 0.5 END),
-               6) AS quality
+def _quality_entropy_ctes(
+    tokens: str = SPLIT_TOKENS_SQL, score: str = "score", cols: str = "doc_id"
+) -> str:
+    """DuckDB twin of the two signals :func:`_quality_points` joins:
+    ``q`` (``cols`` plus the quality score as ``score``) and ``e``
+    (doc_id, token entropy over the token list ``tokens``)."""
+    return f"""q AS (
+        SELECT {cols},
+               {QUALITY_SCORE_SQL} AS {score}
         FROM documents),
-    toks AS (
-        SELECT doc_id, unnest({{tok}}) AS term FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
+    {_term_freq_sql(tokens)},
     e AS (
         SELECT doc_id,
                ROUND(log2(CAST(SUM(tf) AS DOUBLE))
                      - CAST(SUM(CAST(ROUND(tf * log2(CAST(tf AS DOUBLE)), 9)
                                 AS DECIMAL(28,9))) AS DOUBLE) / SUM(tf), 6)
                    AS entropy
-        FROM tf GROUP BY doc_id),
+        FROM tf GROUP BY doc_id)"""
+
+
+_RRF_K = 60
+
+
+@query(
+    "q_rank_fusion",
+    oracle=f"""
+    WITH {_quality_entropy_ctes(TOKENIZE_SQL, "quality")},
     rq AS (
         SELECT d.source, q.doc_id,
                CAST(ROW_NUMBER() OVER (PARTITION BY d.source
@@ -2084,7 +2093,7 @@ _RRF_K = 60
                          ORDER BY rrf DESC, doc_id) AS BIGINT) AS rnk
           FROM f)
     WHERE rnk <= 10
-    """.replace("{tok}", _TOKENIZE_SQL).replace("{{", "{").replace("}}", "}"),
+    """,
 )
 def q_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal rank fusion (RRF, k=60) of two independent document
@@ -2132,41 +2141,8 @@ def q_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_auc",
-    oracle="""
-    WITH q AS (
-        SELECT doc_id,
-               ROUND(
-                 LEAST(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * (CASE WHEN (CAST(length(trim(text)) AS DOUBLE)
-                               / GREATEST(len(regexp_extract_all(trim(text),
-                                              '\\S+', 0)), 1))
-                              BETWEEN 3.0 AND 12.0
-                         THEN 1.0 ELSE 0.5 END),
-               6) AS score
-        FROM documents),
-    toks AS (
-        SELECT doc_id, unnest(string_split(
-                   trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
-                   AS term
-        FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
-    e AS (
-        SELECT doc_id,
-               ROUND(log2(CAST(SUM(tf) AS DOUBLE))
-                     - CAST(SUM(CAST(ROUND(tf * log2(CAST(tf AS DOUBLE)), 9)
-                                AS DECIMAL(28,9))) AS DOUBLE) / SUM(tf), 6)
-                   AS entropy
-        FROM tf GROUP BY doc_id),
+    oracle=f"""
+    WITH {_quality_entropy_ctes()},
     pts AS (
         SELECT LEAST(CAST(FLOOR(q.score * 100) AS BIGINT), 99) AS bin,
                CASE WHEN e.entropy >= 4.4 THEN 1 ELSE 0 END AS pos
@@ -2249,33 +2225,12 @@ def q_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quality_points(
-    spark: SparkSession, sf_dir: str, n_bins: int, *extra
-) -> DataFrame:
-    """(bin, *extra, pos) per document: its q_quality_score folded into
-    one of ``n_bins`` equal-width bins, and pos = 1 iff its token
-    entropy (q_token_entropy) is >= 4.4 — the labelled score both
-    AUC-style and calibration evaluations bin."""
-    from clv_data_pipeline_spark.queries.textops import q_quality_score
-
-    q = q_quality_score(spark, sf_dir)
-    e = q_token_entropy(spark, sf_dir).select("doc_id", "entropy")
-    return q.join(e, "doc_id").select(
-        F.least(
-            F.floor(F.col("quality") * n_bins).cast("long"),
-            F.lit(n_bins - 1),
-        ).alias("bin"),
-        *extra,
-        F.when(F.col("entropy") >= 4.4, 1).otherwise(0).alias("pos"),
-    )
-
-
 @query(
     "q_dsir",
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, doc_id % 97 = 0 AS is_target,
-               {_TOKENIZE_SQL} AS t
+               {TOKENIZE_SQL} AS t
         FROM documents),
     grams AS (
         SELECT doc_id, is_target, unnest(
@@ -2288,7 +2243,7 @@ def _quality_points(
         FROM toks),
     hashed AS (
         SELECT doc_id, is_target,
-               ('0x' || substr(md5(g), 1, 8))::BIGINT % 256 AS bucket
+               {md5_bits_sql("g")} % 256 AS bucket
         FROM grams),
     dist AS (
         SELECT bucket,
@@ -2350,10 +2305,7 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "is_target",
         F.explode(F.concat(F.col("_t"), bigrams)).alias("g"),
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("g").cast("binary")), 1, 8), 16, 10)
-        .cast("long") % 256
-    )
+    bucket = md5_bits(F.col("g").cast("binary")) % 256
     from clv_data_pipeline_spark.sources.io import (
         materialize_temp,
         source_key,
@@ -2461,7 +2413,7 @@ def q_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: twin of ``_nb_scored``, reused by q_naive_bayes / q_active_learning.
 _NB_CTES = f"""
     WITH docs AS (
-        SELECT doc_id, lang, {_TOKENIZE_SQL} AS toks,
+        SELECT doc_id, lang, {TOKENIZE_SQL} AS toks,
                substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc' AS is_train
         FROM documents),
     ttok AS (
@@ -2983,28 +2935,13 @@ _RETRIEVAL_VALUES = ", ".join(
 )
 
 
-#: shared BM25 CTE chain (through ``ranked``) — q_bm25_retrieval's
-#: final SELECT cuts it at top-5; the reranker's shortlist stage cuts
-#: the SAME ranking at top-{_RERANK_SHORTLIST}
-_BM25_ORACLE_CTES = f"""
+#: shared BM25 CTE chain (through ``scored``: per-(query, doc) BM25
+#: sums) — _mmr_oracle continues it with its own candidate cut.
+_BM25_SCORED_CTES = f"""
     WITH q(query_id, qtext) AS (VALUES {_RETRIEVAL_VALUES}),
     qt AS (
         SELECT query_id, unnest(string_split(qtext, ' ')) AS term FROM q),
-    toks AS (
-        SELECT doc_id, unnest({_TOKENIZE_SQL}) AS term FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
-    dl AS (
-        SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-    df AS (
-        SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-        FROM tf GROUP BY term),
-    corpus AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(CAST(dl AS DECIMAL(18,0))) AS DOUBLE) / COUNT(*)
-                   AS avgdl
-        FROM dl),
+    {_BM25_STATS_SQL},
     scored AS (
         SELECT qt.query_id, tf.doc_id,
                SUM(CAST(ROUND(
@@ -3017,7 +2954,12 @@ _BM25_ORACLE_CTES = f"""
         FROM qt JOIN tf USING (term) JOIN df USING (term)
         JOIN dl ON tf.doc_id = dl.doc_id
         CROSS JOIN corpus
-        GROUP BY qt.query_id, tf.doc_id),
+        GROUP BY qt.query_id, tf.doc_id)"""
+
+#: ... through ``ranked`` — q_bm25_retrieval's final SELECT cuts it at
+#: top-5; the reranker's shortlist stage cuts the SAME ranking at
+#: top-{_RERANK_SHORTLIST}
+_BM25_ORACLE_CTES = _BM25_SCORED_CTES + """,
     ranked AS (
         SELECT query_id, doc_id, CAST(s AS DOUBLE) AS score,
                CAST(ROW_NUMBER() OVER (
@@ -3101,7 +3043,7 @@ _RERANK_POS_CAP = 64    #: first-match-position feature saturation
     qtd AS (SELECT DISTINCT query_id, term FROM qt),
     nq AS (SELECT query_id, CAST(COUNT(*) AS BIGINT) AS nq
            FROM qtd GROUP BY query_id),
-    sdocs AS (SELECT doc_id, {_TOKENIZE_SQL} AS ts FROM documents
+    sdocs AS (SELECT doc_id, {TOKENIZE_SQL} AS ts FROM documents
               WHERE doc_id IN (SELECT doc_id FROM short)),
     dtoks AS (
         SELECT doc_id, unnest(ts) AS term,
@@ -3320,11 +3262,7 @@ _SPLADE_Q = 1_000_000  #: integer weight scale (direct term weight)
     WITH q(query_id, qtext) AS (VALUES {_RETRIEVAL_VALUES}),
     qt AS (SELECT DISTINCT query_id,
                   unnest(string_split(qtext, ' ')) AS term FROM q),
-    toks AS (
-        SELECT doc_id, unnest({_TOKENIZE_SQL}) AS term FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
+    {_term_freq_sql()},
     df AS (
         SELECT term, CAST(COUNT(*) AS BIGINT) AS df
         FROM tf GROUP BY term),
@@ -3592,41 +3530,8 @@ def q_splade_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_calibration",
-    oracle=r"""
-    WITH q AS (
-        SELECT doc_id,
-               ROUND(
-                 LEAST(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * (CASE WHEN (CAST(length(trim(text)) AS DOUBLE)
-                               / GREATEST(len(regexp_extract_all(trim(text),
-                                              '\S+', 0)), 1))
-                              BETWEEN 3.0 AND 12.0
-                         THEN 1.0 ELSE 0.5 END),
-               6) AS score
-        FROM documents),
-    toks AS (
-        SELECT doc_id, unnest(string_split(
-                   trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '))
-                   AS term
-        FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
-    e AS (
-        SELECT doc_id,
-               ROUND(log2(CAST(SUM(tf) AS DOUBLE))
-                     - CAST(SUM(CAST(ROUND(tf * log2(CAST(tf AS DOUBLE)), 9)
-                                AS DECIMAL(28,9))) AS DOUBLE) / SUM(tf), 6)
-                   AS entropy
-        FROM tf GROUP BY doc_id),
+    oracle=rf"""
+    WITH {_quality_entropy_ctes()},
     pts AS (
         SELECT LEAST(CAST(FLOOR(q.score * 10) AS BIGINT), 9) AS bin,
                CAST(q.score AS DECIMAL(18,6)) AS score,
@@ -3713,41 +3618,8 @@ def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_auc_sliced",
-    oracle=r"""
-    WITH q AS (
-        SELECT doc_id, lang,
-               ROUND(
-                 LEAST(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * (CASE WHEN (CAST(length(trim(text)) AS DOUBLE)
-                               / GREATEST(len(regexp_extract_all(trim(text),
-                                              '\S+', 0)), 1))
-                              BETWEEN 3.0 AND 12.0
-                         THEN 1.0 ELSE 0.5 END),
-               6) AS score
-        FROM documents),
-    toks AS (
-        SELECT doc_id, unnest(string_split(
-                   trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '))
-                   AS term
-        FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
-    e AS (
-        SELECT doc_id,
-               ROUND(log2(CAST(SUM(tf) AS DOUBLE))
-                     - CAST(SUM(CAST(ROUND(tf * log2(CAST(tf AS DOUBLE)), 9)
-                                AS DECIMAL(28,9))) AS DOUBLE) / SUM(tf), 6)
-                   AS entropy
-        FROM tf GROUP BY doc_id),
+    oracle=rf"""
+    WITH {_quality_entropy_ctes(cols="doc_id, lang")},
     pts AS (
         SELECT q.lang,
                LEAST(CAST(FLOOR(q.score * 100) AS BIGINT), 99) AS bin,
@@ -3865,7 +3737,7 @@ _WV_V = 64  # vocabulary = context dimensions (top words by frequency)
     "q_word_vectors",
     oracle=f"""
     WITH toks AS (
-        SELECT {_TOKENIZE_SQL} AS ts FROM documents),
+        SELECT {TOKENIZE_SQL} AS ts FROM documents),
     adj AS (
         SELECT unnest(list_transform(
             range(1, len(ts)),
@@ -3876,7 +3748,7 @@ _WV_V = 64  # vocabulary = context dimensions (top words by frequency)
         UNION ALL SELECT p.y, p.x FROM adj),
     wf AS (
         SELECT word, COUNT(*) AS freq
-        FROM (SELECT unnest({_TOKENIZE_SQL}) AS word FROM documents)
+        FROM (SELECT unnest({TOKENIZE_SQL}) AS word FROM documents)
         WHERE word <> '' GROUP BY word),
     topv AS (
         SELECT word,
@@ -4200,41 +4072,8 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ISO_CAL_BINS_SQL = r"""
-    q AS (
-        SELECT doc_id,
-               ROUND(
-                 LEAST(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * (CASE WHEN (CAST(length(trim(text)) AS DOUBLE)
-                               / GREATEST(len(regexp_extract_all(trim(text),
-                                              '\S+', 0)), 1))
-                              BETWEEN 3.0 AND 12.0
-                         THEN 1.0 ELSE 0.5 END),
-               6) AS score
-        FROM documents),
-    toks AS (
-        SELECT doc_id, unnest(string_split(
-                   trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '))
-                   AS term
-        FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
-    e AS (
-        SELECT doc_id,
-               ROUND(log2(CAST(SUM(tf) AS DOUBLE))
-                     - CAST(SUM(CAST(ROUND(tf * log2(CAST(tf AS DOUBLE)), 9)
-                                AS DECIMAL(28,9))) AS DOUBLE) / SUM(tf), 6)
-                   AS entropy
-        FROM tf GROUP BY doc_id),
+_ISO_CAL_BINS_SQL = rf"""
+    {_quality_entropy_ctes()},
     pts AS (
         SELECT LEAST(CAST(FLOOR(q.score * 10) AS BIGINT), 9) AS bin,
                CAST(q.score AS DECIMAL(18,6)) AS score,
@@ -4342,38 +4181,7 @@ def _mmr_oracle() -> str:
     IEEE expression the Spark side evaluates (one min-max normalize,
     integer-ratio Jaccards, 0.5-weighted combination — all exactly
     representable), so argmax ties resolve identically."""
-    head = f"""
-    WITH q(query_id, qtext) AS (VALUES {_RETRIEVAL_VALUES}),
-    qt AS (
-        SELECT query_id, unnest(string_split(qtext, ' ')) AS term FROM q),
-    toks AS (
-        SELECT doc_id, unnest({_TOKENIZE_SQL}) AS term FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
-    dl AS (
-        SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-    df AS (
-        SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-        FROM tf GROUP BY term),
-    corpus AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(CAST(dl AS DECIMAL(18,0))) AS DOUBLE) / COUNT(*)
-                   AS avgdl
-        FROM dl),
-    scored AS (
-        SELECT qt.query_id, tf.doc_id,
-               SUM(CAST(ROUND(
-                 ln(1 + (CAST(corpus.n_docs AS DOUBLE) - df.df + 0.5)
-                        / (df.df + 0.5))
-                 * (tf.tf * ({_BM25_K1} + 1.0))
-                 / (tf.tf + {_BM25_K1}
-                    * (1.0 - {_BM25_B} + {_BM25_B} * dl.dl / corpus.avgdl)),
-                 6) AS DECIMAL(18,6))) AS s
-        FROM qt JOIN tf USING (term) JOIN df USING (term)
-        JOIN dl ON tf.doc_id = dl.doc_id
-        CROSS JOIN corpus
-        GROUP BY qt.query_id, tf.doc_id),
+    head = f"""{_BM25_SCORED_CTES},
     cands AS MATERIALIZED (
         SELECT CAST(query_id AS BIGINT) AS query_id,
                CAST(doc_id AS BIGINT) AS doc_id,
@@ -4545,41 +4353,8 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_bootstrap_auc",
-    oracle=r"""
-    WITH q AS (
-        SELECT doc_id,
-               ROUND(
-                 LEAST(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * (CASE WHEN (CAST(length(trim(text)) AS DOUBLE)
-                               / GREATEST(len(regexp_extract_all(trim(text),
-                                              '\S+', 0)), 1))
-                              BETWEEN 3.0 AND 12.0
-                         THEN 1.0 ELSE 0.5 END),
-               6) AS score
-        FROM documents),
-    toks AS (
-        SELECT doc_id, unnest(string_split(
-                   trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '))
-                   AS term
-        FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
-    e AS (
-        SELECT doc_id,
-               ROUND(log2(CAST(SUM(tf) AS DOUBLE))
-                     - CAST(SUM(CAST(ROUND(tf * log2(CAST(tf AS DOUBLE)), 9)
-                                AS DECIMAL(28,9))) AS DOUBLE) / SUM(tf), 6)
-                   AS entropy
-        FROM tf GROUP BY doc_id),
+    oracle=rf"""
+    WITH {_quality_entropy_ctes()},
     pts AS (
         SELECT q.doc_id,
                LEAST(CAST(FLOOR(q.score * 100) AS BIGINT), 99) AS bin,
@@ -4587,17 +4362,13 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM q JOIN e USING (doc_id)),
     reps AS (
         SELECT pts.doc_id, pts.bin, pts.pos, r.b,
-               (('0x' || substr(md5(CAST(pts.doc_id AS VARCHAR) || '|'
-                    || CAST(r.b AS VARCHAR)), 1, 8))::BIGINT + 0.5)
-                   / 4294967296.0 AS p
+               {md5_uniform_sql(
+                   "CAST(pts.doc_id AS VARCHAR) || '|' || CAST(r.b AS VARCHAR)"
+               )} AS p
         FROM pts CROSS JOIN (SELECT unnest(range(50)) AS b) r),
     m AS (
         SELECT b, bin, pos,
-               CASE WHEN p < 0.367879441 THEN 0
-                    WHEN p < 0.735758882 THEN 1
-                    WHEN p < 0.919698603 THEN 2
-                    WHEN p < 0.981011843 THEN 3
-                    WHEN p < 0.996340153 THEN 4 ELSE 5 END AS mult
+               {poisson1_quantile_sql("p")} AS mult
         FROM reps),
     bins AS (
         SELECT b, bin,
@@ -4731,7 +4502,7 @@ _ALS_UPPER = [(i, j) for i in range(1, 5) for j in range(i, 5)]
 
 def _als_y0(item: str, f: int) -> int:
     """md5-seeded deterministic init in [-FQ, FQ] — same arithmetic as
-    the oracle's ('0x' || substr(md5(it || '|f|als'), 1, 4))::BIGINT
+    the oracle's 4-hex-digit ``md5_bits_sql(it || '|f|als')``
     % (2*FQ + 1) - FQ (both operands nonnegative, so Python % and
     DuckDB % agree)."""
     import hashlib
@@ -5100,7 +4871,7 @@ _ALS_RATIN_SQL = f"""
         GROUP BY o.o_custkey, p.p_brand)"""
 
 _ALS_Y0_COLS = ",\n           ".join(
-    f"CAST(('0x' || substr(md5(it || '|{f}|als'), 1, 4))::BIGINT "
+    f"""CAST({md5_bits_sql(f"it || '|{f}|als'", width=4)} """
     f"% {2 * _ALS_FQ + 1} - {_ALS_FQ} AS BIGINT) AS y{f}"
     for f in range(1, 5)
 )
@@ -5346,41 +5117,8 @@ def q_als_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_best_split",
-    oracle=r"""
-    WITH q AS (
-        SELECT doc_id,
-               ROUND(
-                 LEAST(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * (CASE WHEN (CAST(length(trim(text)) AS DOUBLE)
-                               / GREATEST(len(regexp_extract_all(trim(text),
-                                              '\S+', 0)), 1))
-                              BETWEEN 3.0 AND 12.0
-                         THEN 1.0 ELSE 0.5 END),
-               6) AS score
-        FROM documents),
-    toks AS (
-        SELECT doc_id, unnest(string_split(
-                   trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '))
-                   AS term
-        FROM documents),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks WHERE term <> '' GROUP BY doc_id, term),
-    e AS (
-        SELECT doc_id,
-               ROUND(log2(CAST(SUM(tf) AS DOUBLE))
-                     - CAST(SUM(CAST(ROUND(tf * log2(CAST(tf AS DOUBLE)), 9)
-                                AS DECIMAL(28,9))) AS DOUBLE) / SUM(tf), 6)
-                   AS entropy
-        FROM tf GROUP BY doc_id),
+    oracle=rf"""
+    WITH {_quality_entropy_ctes()},
     pts AS (
         SELECT LEAST(CAST(FLOOR(q.score * 100) AS BIGINT), 99) AS bin,
                CASE WHEN e.entropy >= 4.4 THEN 1 ELSE 0 END AS pos
@@ -5674,7 +5412,6 @@ def _adaboost_oracle(rounds: int = 3) -> str:
     tie-break, alpha, and the multiplicative weight update with a
     DECIMAL-sum normalizer — DuckDB replays the exact training
     trajectory (the q_pagerank discipline at a full-ensemble scale)."""
-    from clv_data_pipeline_spark.queries.textops import _QUALITY_SQL
 
     steps = []
     for r in range(1, rounds + 1):
@@ -5754,10 +5491,10 @@ def _adaboost_oracle(rounds: int = 3) -> str:
         for r in range(1, rounds + 1)
     )
     return f"""
-    WITH q AS (SELECT doc_id, {_QUALITY_SQL} AS quality FROM documents),
+    WITH q AS (SELECT doc_id, {QUALITY_SCORE_SQL} AS quality FROM documents),
     toks AS (
         SELECT doc_id, unnest(string_split_regex(
-            trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
+            {NORMALIZE_SQL}, ' '))
             AS term
         FROM documents),
     tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
@@ -6044,7 +5781,7 @@ _NOISE_MARGIN = 2.0  # ln-units: flagged disagreements are >= e^2 likelier
                  OR b.best_score - g.given_score
                     >= CAST({_NOISE_MARGIN} AS DOUBLE))) AS suspect
     FROM best b LEFT JOIN given g USING (doc_id)
-    """.replace("{tok}", _TOKENIZE_SQL),
+    """.replace("{tok}", TOKENIZE_SQL),
 )
 def q_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-noise detection by confident learning (Northcutt et al.):
@@ -6118,7 +5855,7 @@ _LM_STEPS = 12
     "q_lm_generate",
     oracle=f"""
     WITH RECURSIVE toks AS MATERIALIZED (
-        SELECT doc_id, {_TOKENIZE_SQL} AS ts FROM documents),
+        SELECT doc_id, {TOKENIZE_SQL} AS ts FROM documents),
     pb AS (
         SELECT unnest(list_transform(range(1, len(ts)), i -> ts[i]))
                    AS w1,
@@ -6738,7 +6475,7 @@ _TA_ARGMAX = (
     WITH RECURSIVE
     wc AS (
         SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT doc_id, unnest({_TOKENIZE_SQL}) AS w
+        FROM (SELECT doc_id, unnest({TOKENIZE_SQL}) AS w
               FROM documents)
         WHERE w <> '' GROUP BY doc_id, w),
     vocab AS (SELECT w FROM wc GROUP BY w
@@ -7382,7 +7119,7 @@ def q_active_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_kneser_ney",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, lang, {_TOKENIZE_SQL} AS ts,
+        SELECT doc_id, lang, {TOKENIZE_SQL} AS ts,
                substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
                    AS is_train
         FROM documents),
@@ -7557,7 +7294,7 @@ def q_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_skipgram_pairs",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, {_TOKENIZE_SQL} AS ts FROM documents),
+        SELECT doc_id, {TOKENIZE_SQL} AS ts FROM documents),
     fwd AS (
         SELECT unnest(list_transform(range(1, len(ts)), i -> ts[i]))
                    AS a,
@@ -7588,9 +7325,8 @@ def q_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     wtot AS (SELECT CAST(MAX(cum) AS DOUBLE) AS w FROM cdf),
     draws AS (
         SELECT p.center, p.context, p.n_pos,
-               ((('0x' || substr(md5(p.center || '|' || p.context),
-                                 1, 8))::BIGINT + 0.5)
-                / 4294967296.0) * wt.w AS target
+               ({md5_uniform_sql("p.center || '|' || p.context")})
+               * wt.w AS target
         FROM pairs p CROSS JOIN wtot wt),
     neg AS (
         SELECT d.center, d.context, d.n_pos,
@@ -7672,26 +7408,14 @@ def q_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cum"),
     )
     wtot = cdf.agg(F.max("cum").cast("double").alias("w"))
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("center"), F.lit("|"), F.col("context")
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    u = md5_uniform(
+        F.concat(F.col("center"), F.lit("|"), F.col("context"))
+    )
     draws = pairs.crossJoin(F.broadcast(wtot)).select(
         "center",
         "context",
         "n_pos",
-        (((h + F.lit(0.5)) / F.lit(4294967296.0)) * F.col("w")).alias(
-            "target"
-        ),
+        (u * F.col("w")).alias("target"),
     )
     neg = (
         draws.join(
@@ -8014,6 +7738,53 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _nb_fit_sql(s: str, where: str) -> str:
+    """Multinomial Naive Bayes fit on the ``rtok``/``docs`` rows
+    matching ``where``, as CTEs suffixed ``_{s}``: DECIMAL log-priors
+    ``pri`` (cls, lp0), Laplace-smoothed log-likelihoods ``lp`` (cls,
+    tok, lp) and the out-of-vocabulary fallback ``oov`` (cls, lpo)."""
+    return f"""ttok_{s} AS (
+        SELECT lang, tok FROM rtok WHERE {where}),
+    cc_{s} AS (
+        SELECT lang, tok, COUNT(*) AS c FROM ttok_{s}
+        GROUP BY lang, tok),
+    ct_{s} AS (SELECT lang, COUNT(*) AS tot FROM ttok_{s}
+               GROUP BY lang),
+    v_{s} AS (SELECT COUNT(DISTINCT tok) AS vsz FROM ttok_{s}),
+    ntr_{s} AS (SELECT COUNT(*) AS n_train FROM docs
+                WHERE {where}),
+    pri_{s} AS (
+        SELECT lang AS cls,
+               CAST(ROUND(ln(COUNT(*) * 1.0 / ntr_{s}.n_train), 9)
+                    AS DECIMAL(20,9)) AS lp0
+        FROM docs, ntr_{s} WHERE {where}
+        GROUP BY lang, ntr_{s}.n_train),
+    lp_{s} AS (
+        SELECT cc_{s}.lang AS cls, cc_{s}.tok,
+               CAST(ROUND(ln((cc_{s}.c + 1.0)
+                             / (ct_{s}.tot + v_{s}.vsz)), 9)
+                    AS DECIMAL(20,9)) AS lp
+        FROM cc_{s} JOIN ct_{s} ON cc_{s}.lang = ct_{s}.lang, v_{s}),
+    oov_{s} AS (
+        SELECT ct_{s}.lang AS cls,
+               CAST(ROUND(ln(1.0 / (ct_{s}.tot + v_{s}.vsz)), 9)
+                    AS DECIMAL(20,9)) AS lpo
+        FROM ct_{s}, v_{s})"""
+
+
+def _nb_scored_sql(s: str, test: str) -> str:
+    """``scored_{s}`` (doc_id, true_lang, cls, sc): each test doc's
+    summed token log-likelihood per class under model ``s``, over the
+    ``test`` (doc_id, true_lang, tok) relation."""
+    return f"""scored_{s} AS (
+        SELECT t.doc_id, t.true_lang, o.cls,
+               SUM(COALESCE(lp_{s}.lp, o.lpo)) AS sc
+        FROM {test} t
+        CROSS JOIN oov_{s} o
+        LEFT JOIN lp_{s} ON lp_{s}.tok = t.tok AND lp_{s}.cls = o.cls
+        GROUP BY t.doc_id, t.true_lang, o.cls)"""
+
+
 _LC_THRESHOLDS = ["33", "66", "99", "cc"]  # ~20/40/60/80% md5 prefixes
 
 
@@ -8026,40 +7797,8 @@ def _learning_curve_oracle() -> str:
     for t in _LC_THRESHOLDS:
         s = t
         blocks.append(f"""
-    ttok_{s} AS (
-        SELECT lang, tok FROM rtok WHERE pref < '{t}'),
-    cc_{s} AS (
-        SELECT lang, tok, COUNT(*) AS c FROM ttok_{s}
-        GROUP BY lang, tok),
-    ct_{s} AS (SELECT lang, COUNT(*) AS tot FROM ttok_{s}
-               GROUP BY lang),
-    v_{s} AS (SELECT COUNT(DISTINCT tok) AS vsz FROM ttok_{s}),
-    ntr_{s} AS (SELECT COUNT(*) AS n_train FROM docs
-                WHERE pref < '{t}'),
-    pri_{s} AS (
-        SELECT lang AS cls,
-               CAST(ROUND(ln(COUNT(*) * 1.0 / ntr_{s}.n_train), 9)
-                    AS DECIMAL(20,9)) AS lp0
-        FROM docs, ntr_{s} WHERE pref < '{t}'
-        GROUP BY lang, ntr_{s}.n_train),
-    lp_{s} AS (
-        SELECT cc_{s}.lang AS cls, cc_{s}.tok,
-               CAST(ROUND(ln((cc_{s}.c + 1.0)
-                             / (ct_{s}.tot + v_{s}.vsz)), 9)
-                    AS DECIMAL(20,9)) AS lp
-        FROM cc_{s} JOIN ct_{s} ON cc_{s}.lang = ct_{s}.lang, v_{s}),
-    oov_{s} AS (
-        SELECT ct_{s}.lang AS cls,
-               CAST(ROUND(ln(1.0 / (ct_{s}.tot + v_{s}.vsz)), 9)
-                    AS DECIMAL(20,9)) AS lpo
-        FROM ct_{s}, v_{s}),
-    scored_{s} AS (
-        SELECT t.doc_id, t.true_lang, o.cls,
-               SUM(COALESCE(lp_{s}.lp, o.lpo)) AS sc
-        FROM ttest t
-        CROSS JOIN oov_{s} o
-        LEFT JOIN lp_{s} ON lp_{s}.tok = t.tok AND lp_{s}.cls = o.cls
-        GROUP BY t.doc_id, t.true_lang, o.cls),
+    {_nb_fit_sql(s, f"pref < '{t}'")},
+    {_nb_scored_sql(s, "ttest")},
     pred_{s} AS (
         SELECT doc_id, true_lang, cls,
                ROW_NUMBER() OVER (PARTITION BY doc_id
@@ -8080,7 +7819,7 @@ def _learning_curve_oracle() -> str:
         )
     return f"""
     WITH docs AS MATERIALIZED (
-        SELECT doc_id, lang, {_TOKENIZE_SQL} AS toks,
+        SELECT doc_id, lang, {TOKENIZE_SQL} AS toks,
                substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS pref
         FROM documents),
     rtok_raw AS MATERIALIZED (
@@ -8211,43 +7950,11 @@ def _cv_oracle(k: int = 5) -> str:
     for f in range(k):
         s = f
         blocks.append(f"""
-    ttok_{s} AS (
-        SELECT lang, tok FROM rtok WHERE fold <> {f}),
-    cc_{s} AS (
-        SELECT lang, tok, COUNT(*) AS c FROM ttok_{s}
-        GROUP BY lang, tok),
-    ct_{s} AS (SELECT lang, COUNT(*) AS tot FROM ttok_{s}
-               GROUP BY lang),
-    v_{s} AS (SELECT COUNT(DISTINCT tok) AS vsz FROM ttok_{s}),
-    ntr_{s} AS (SELECT COUNT(*) AS n_train FROM docs
-                WHERE fold <> {f}),
-    pri_{s} AS (
-        SELECT lang AS cls,
-               CAST(ROUND(ln(COUNT(*) * 1.0 / ntr_{s}.n_train), 9)
-                    AS DECIMAL(20,9)) AS lp0
-        FROM docs, ntr_{s} WHERE fold <> {f}
-        GROUP BY lang, ntr_{s}.n_train),
-    lp_{s} AS (
-        SELECT cc_{s}.lang AS cls, cc_{s}.tok,
-               CAST(ROUND(ln((cc_{s}.c + 1.0)
-                             / (ct_{s}.tot + v_{s}.vsz)), 9)
-                    AS DECIMAL(20,9)) AS lp
-        FROM cc_{s} JOIN ct_{s} ON cc_{s}.lang = ct_{s}.lang, v_{s}),
-    oov_{s} AS (
-        SELECT ct_{s}.lang AS cls,
-               CAST(ROUND(ln(1.0 / (ct_{s}.tot + v_{s}.vsz)), 9)
-                    AS DECIMAL(20,9)) AS lpo
-        FROM ct_{s}, v_{s}),
+    {_nb_fit_sql(s, f"fold <> {f}")},
     tt_{s} AS (
         SELECT doc_id, lang AS true_lang, tok
         FROM rtok WHERE fold = {f}),
-    scored_{s} AS (
-        SELECT t.doc_id, t.true_lang, o.cls,
-               SUM(COALESCE(lp_{s}.lp, o.lpo)) AS sc
-        FROM tt_{s} t
-        CROSS JOIN oov_{s} o
-        LEFT JOIN lp_{s} ON lp_{s}.tok = t.tok AND lp_{s}.cls = o.cls
-        GROUP BY t.doc_id, t.true_lang, o.cls),
+    {_nb_scored_sql(s, f"tt_{s}")},
     pred_{s} AS (
         SELECT doc_id, true_lang, cls,
                ROW_NUMBER() OVER (PARTITION BY doc_id
@@ -8265,7 +7972,7 @@ def _cv_oracle(k: int = 5) -> str:
         selects.append(f"SELECT * FROM acc_{s}")
     return f"""
     WITH docs AS MATERIALIZED (
-        SELECT doc_id, lang, {_TOKENIZE_SQL} AS toks,
+        SELECT doc_id, lang, {TOKENIZE_SQL} AS toks,
                ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) % 5
                    AS fold
         FROM documents),
@@ -8315,41 +8022,8 @@ def _shapley_oracle() -> str:
         s = _ds_tag(m)
         inlist = ", ".join(str(g) for g in m)
         blocks.append(f"""
-    ttok_{s} AS (
-        SELECT lang, tok FROM rtok
-        WHERE pref < 'cc' AND grp IN ({inlist})),
-    cc_{s} AS (
-        SELECT lang, tok, COUNT(*) AS c FROM ttok_{s}
-        GROUP BY lang, tok),
-    ct_{s} AS (SELECT lang, COUNT(*) AS tot FROM ttok_{s}
-               GROUP BY lang),
-    v_{s} AS (SELECT COUNT(DISTINCT tok) AS vsz FROM ttok_{s}),
-    ntr_{s} AS (SELECT COUNT(*) AS n_train FROM docs
-                WHERE pref < 'cc' AND grp IN ({inlist})),
-    pri_{s} AS (
-        SELECT lang AS cls,
-               CAST(ROUND(ln(COUNT(*) * 1.0 / ntr_{s}.n_train), 9)
-                    AS DECIMAL(20,9)) AS lp0
-        FROM docs, ntr_{s} WHERE pref < 'cc' AND grp IN ({inlist})
-        GROUP BY lang, ntr_{s}.n_train),
-    lp_{s} AS (
-        SELECT cc_{s}.lang AS cls, cc_{s}.tok,
-               CAST(ROUND(ln((cc_{s}.c + 1.0)
-                             / (ct_{s}.tot + v_{s}.vsz)), 9)
-                    AS DECIMAL(20,9)) AS lp
-        FROM cc_{s} JOIN ct_{s} ON cc_{s}.lang = ct_{s}.lang, v_{s}),
-    oov_{s} AS (
-        SELECT ct_{s}.lang AS cls,
-               CAST(ROUND(ln(1.0 / (ct_{s}.tot + v_{s}.vsz)), 9)
-                    AS DECIMAL(20,9)) AS lpo
-        FROM ct_{s}, v_{s}),
-    scored_{s} AS (
-        SELECT t.doc_id, t.true_lang, o.cls,
-               SUM(COALESCE(lp_{s}.lp, o.lpo)) AS sc
-        FROM tt t
-        CROSS JOIN oov_{s} o
-        LEFT JOIN lp_{s} ON lp_{s}.tok = t.tok AND lp_{s}.cls = o.cls
-        GROUP BY t.doc_id, t.true_lang, o.cls),
+    {_nb_fit_sql(s, f"pref < 'cc' AND grp IN ({inlist})")},
+    {_nb_scored_sql(s, "tt")},
     pred_{s} AS (
         SELECT doc_id, true_lang, cls,
                ROW_NUMBER() OVER (PARTITION BY doc_id
@@ -8396,7 +8070,7 @@ def _shapley_oracle() -> str:
                AS shapley""")
     return f"""
     WITH docs AS MATERIALIZED (
-        SELECT doc_id, lang, source, {_TOKENIZE_SQL} AS toks,
+        SELECT doc_id, lang, source, {TOKENIZE_SQL} AS toks,
                substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS pref,
                ascii(substr(md5(source), 1, 1)) % 3 AS grp
         FROM documents),

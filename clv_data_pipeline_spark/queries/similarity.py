@@ -10,6 +10,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clv_data_pipeline_spark.functions.stats import (
+    md5_bits,
+    md5_bits_sql,
+    md5_uniform,
+    md5_uniform_sql,
+)
 from clv_data_pipeline_spark.operators.similarity import (
     cosine,
     cosine_topk_sharded,
@@ -19,6 +25,7 @@ from clv_data_pipeline_spark.operators.similarity import (
     ivf_topk,
     lsh_topk,
     portable_cell_assign,
+    portable_cell_assign_sql,
 )
 from clv_data_pipeline_spark.registry import query
 from clv_data_pipeline_spark.sources.io import load_table
@@ -105,36 +112,10 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_topk(load_table(spark, sf_dir, "embeddings"), k=1)
 
 
-@query(
-    "q_ann_lsh_portable",
-    oracle="""
-    WITH dims AS (
-        SELECT vec_id,
-               unnest(range(len(embedding))) AS i,
-               CAST(unnest(CAST(embedding AS DOUBLE[])) AS DOUBLE) AS x
-        FROM embeddings WHERE vec_id < 800),
-    w AS (
-        SELECT p.p, i.i,
-               (('0x' || substr(md5(p.p || '|' || i.i || '|srp'), 1, 8))
-                ::BIGINT + 0.5) / 4294967296.0 * 2 - 1 AS w
-        FROM (SELECT unnest(range(18)) AS p) p,
-             (SELECT unnest(range(64)) AS i) i),
-    dots AS (
-        SELECT d.vec_id, w.p,
-               CAST(SUM(CAST(ROUND(d.x * w.w * 1000000000.0, 0)
-                             AS BIGINT)) AS BIGINT) AS dot
-        FROM dims d JOIN w ON d.i = w.i GROUP BY d.vec_id, w.p),
-    sig AS (
-        SELECT vec_id, p // 6 AS band,
-               CAST(SUM(CASE WHEN dot > 0
-                    THEN (1::BIGINT << CAST(p % 6 AS INT)) ELSE 0 END)
-                    AS BIGINT) AS bv
-        FROM dots GROUP BY vec_id, p // 6),
-    cand AS (
-        SELECT DISTINCT a.vec_id, b.vec_id AS neighbor_id
-        FROM sig a JOIN sig b
-          ON a.band = b.band AND a.bv = b.bv AND a.vec_id <> b.vec_id),
-    pairdims AS (
+#: the exact top-1 cosine neighbour of each ``cand`` (vec_id,
+#: neighbor_id) pair over ``dims`` (vec_id, i, x): nano-unit integer
+#: dot sums, so the ranking is identical across engines.
+_CAND_TOP1_COSINE_SQL = """pairdims AS (
         SELECT c.vec_id, c.neighbor_id, da.x AS xa, db.x AS xb
         FROM cand c
         JOIN dims da ON da.vec_id = c.vec_id
@@ -156,7 +137,39 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(ROW_NUMBER() OVER (PARTITION BY vec_id
                     ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
         FROM sims)
-    SELECT vec_id, neighbor_id, sim, rank FROM ranked WHERE rank <= 1
+    SELECT vec_id, neighbor_id, sim, rank FROM ranked WHERE rank <= 1"""
+
+
+@query(
+    "q_ann_lsh_portable",
+    oracle=f"""
+    WITH dims AS (
+        SELECT vec_id,
+               unnest(range(len(embedding))) AS i,
+               CAST(unnest(CAST(embedding AS DOUBLE[])) AS DOUBLE) AS x
+        FROM embeddings WHERE vec_id < 800),
+    w AS (
+        SELECT p.p, i.i,
+               {md5_uniform_sql("p.p || '|' || i.i || '|srp'")} * 2 - 1
+                   AS w
+        FROM (SELECT unnest(range(18)) AS p) p,
+             (SELECT unnest(range(64)) AS i) i),
+    dots AS (
+        SELECT d.vec_id, w.p,
+               CAST(SUM(CAST(ROUND(d.x * w.w * 1000000000.0, 0)
+                             AS BIGINT)) AS BIGINT) AS dot
+        FROM dims d JOIN w ON d.i = w.i GROUP BY d.vec_id, w.p),
+    sig AS (
+        SELECT vec_id, p // 6 AS band,
+               CAST(SUM(CASE WHEN dot > 0
+                    THEN (1::BIGINT << CAST(p % 6 AS INT)) ELSE 0 END)
+                    AS BIGINT) AS bv
+        FROM dots GROUP BY vec_id, p // 6),
+    cand AS (
+        SELECT DISTINCT a.vec_id, b.vec_id AS neighbor_id
+        FROM sig a JOIN sig b
+          ON a.band = b.band AND a.bv = b.bv AND a.vec_id <> b.vec_id),
+    {_CAND_TOP1_COSINE_SQL}
     """,
 )
 def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,28 +257,14 @@ def _direction_dots(
         (F.col("id") / 64).cast("long").alias(key),
         (F.col("id") % 64).alias("i"),
         (
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                (F.col("id") / 64)
-                                .cast("long")
-                                .cast("string"),
-                                F.lit("|"),
-                                (F.col("id") % 64).cast("string"),
-                                F.lit("|" + salt),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                + F.lit(0.5)
+            md5_uniform(
+                F.concat(
+                    (F.col("id") / 64).cast("long").cast("string"),
+                    F.lit("|"),
+                    (F.col("id") % 64).cast("string"),
+                    F.lit("|" + salt),
+                )
             )
-            / F.lit(4294967296.0)
             * 2
             - 1
         ).alias("w"),
@@ -385,7 +384,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ann_ivf_portable",
-    oracle="""
+    oracle=f"""
     WITH dims AS (
         SELECT vec_id,
                unnest(range(len(embedding))) AS i,
@@ -393,8 +392,8 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM embeddings WHERE vec_id < 500),
     w AS (
         SELECT c.c, i.i,
-               (('0x' || substr(md5(c.c || '|' || i.i || '|ivf'), 1, 8))
-                ::BIGINT + 0.5) / 4294967296.0 * 2 - 1 AS w
+               {md5_uniform_sql("c.c || '|' || i.i || '|ivf'")} * 2 - 1
+                   AS w
         FROM (SELECT unnest(range(16)) AS c) c,
              (SELECT unnest(range(64)) AS i) i),
     cdots AS (
@@ -413,35 +412,13 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT p.vec_id, m.vec_id AS neighbor_id
         FROM probes p JOIN assign m
           ON p.cell = m.cell AND p.vec_id <> m.vec_id),
-    pairdims AS (
-        SELECT c.vec_id, c.neighbor_id, da.x AS xa, db.x AS xb
-        FROM cand c
-        JOIN dims da ON da.vec_id = c.vec_id
-        JOIN dims db ON db.vec_id = c.neighbor_id AND db.i = da.i),
-    sims AS (
-        SELECT vec_id, neighbor_id,
-               ROUND(
-                   CAST(SUM(CAST(ROUND(xa * xb * 1000000000.0, 0)
-                                 AS BIGINT)) AS DOUBLE)
-                   / sqrt(CAST(SUM(CAST(ROUND(xa * xa * 1000000000.0,
-                                              0) AS BIGINT)) AS DOUBLE)
-                          * CAST(SUM(CAST(ROUND(xb * xb
-                                                * 1000000000.0, 0)
-                                          AS BIGINT)) AS DOUBLE)),
-                   6) AS sim
-        FROM pairdims GROUP BY vec_id, neighbor_id),
-    ranked AS (
-        SELECT vec_id, neighbor_id, sim,
-               CAST(ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-        FROM sims)
-    SELECT vec_id, neighbor_id, sim, rank FROM ranked WHERE rank <= 1
+    {_CAND_TOP1_COSINE_SQL}
     """,
 )
 def q_ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over an md5-PORTABLE coarse quantizer — the
-    q_ann_lsh_portable discipline applied to the inverted-file path
-    (VERDICT r8 item 6): 16 cell directions derive from
+    q_ann_lsh_portable discipline applied to the inverted-file path,
+    where 16 cell directions derive from
     md5(cell|dim|'ivf'), assignment is the argmax nano-unit integer
     dot (a dot-product coarse quantizer — centroids are NOT
     normalized, unlike the k-means production quantizer, which is
@@ -542,8 +519,8 @@ _PQ_NQ = 128     # deterministic id-capped query audit slice
         FROM embeddings),
     cw AS (
         SELECT m, k, m * {_PQ_DSUB} + d AS i,
-               ('0x' || substr(md5(m || '|' || k || '|' || d || '|pq'),
-                               1, 8))::BIGINT % 20001 - 10000 AS c
+               {md5_bits_sql("m || '|' || k || '|' || d || '|pq'")}
+                   % 20001 - 10000 AS c
         FROM (SELECT unnest(range({_PQ_M})) AS m),
              (SELECT unnest(range({_PQ_K})) AS k),
              (SELECT unnest(range({_PQ_DSUB})) AS d)),
@@ -649,23 +626,15 @@ def q_ann_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
         (F.col("m") * _PQ_DSUB + F.col("d")).alias("i"),
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.col("m").cast("string"),
-                            F.col("k").cast("string"),
-                            F.col("d").cast("string"),
-                            F.lit("pq"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_bits(
+                F.concat_ws(
+                    "|",
+                    F.col("m").cast("string"),
+                    F.col("k").cast("string"),
+                    F.col("d").cast("string"),
+                    F.lit("pq"),
+                )
+            )
             % 20001
             - 10000
         ).alias("c"),
@@ -1393,31 +1362,7 @@ _SD_AUDIT_IDS = 1000
 #: the same independent DuckDB replay
 _SD_ORACLE_SQL = f"""
     WITH RECURSIVE
-    dims AS (
-        SELECT vec_id,
-               CAST(unnest(range(len(embedding))) AS BIGINT) AS i,
-               CAST(unnest(embedding) AS DOUBLE) AS x
-        FROM embeddings WHERE vec_id < {_SD_AUDIT_IDS}),
-    w AS (
-        SELECT c, d AS i,
-               (('0x' || substr(md5(c || '|' || d || '|sd'),
-                                1, 8))::BIGINT + 0.5)
-                   / 4294967296.0 * 2 - 1 AS w
-        FROM (SELECT unnest(range({_SD_CELLS})) AS c),
-             (SELECT unnest(range(64)) AS d)),
-    cdots AS (
-        SELECT dm.vec_id, w.c,
-               CAST(SUM(CAST(ROUND(dm.x * w.w * 1000000000.0, 0)
-                             AS BIGINT)) AS BIGINT) AS dot
-        FROM dims dm JOIN w ON w.i = dm.i
-        GROUP BY dm.vec_id, w.c),
-    assign AS (
-        SELECT vec_id, c AS cell
-        FROM (SELECT vec_id, c,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY dot DESC, c) AS rn
-              FROM cdots)
-        WHERE rn = 1),
+    {portable_cell_assign_sql(_SD_CELLS, "|sd", _SD_AUDIT_IDS)},
     pairdims AS (
         SELECT a.vec_id AS lo, b.vec_id AS hi,
                da.x AS xa, db.x AS xb
@@ -1619,31 +1564,7 @@ def q_stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_knn_label_portable",
     oracle=f"""
-    WITH dims AS (
-        SELECT vec_id,
-               CAST(unnest(range(len(embedding))) AS BIGINT) AS i,
-               CAST(unnest(embedding) AS DOUBLE) AS x
-        FROM embeddings WHERE vec_id < {_SD_AUDIT_IDS}),
-    w AS (
-        SELECT c, d AS i,
-               (('0x' || substr(md5(c || '|' || d || '|knn'),
-                                1, 8))::BIGINT + 0.5)
-                   / 4294967296.0 * 2 - 1 AS w
-        FROM (SELECT unnest(range({_SD_CELLS})) AS c),
-             (SELECT unnest(range(64)) AS d)),
-    cdots AS (
-        SELECT dm.vec_id, w.c,
-               CAST(SUM(CAST(ROUND(dm.x * w.w * 1000000000.0, 0)
-                             AS BIGINT)) AS BIGINT) AS dot
-        FROM dims dm JOIN w ON w.i = dm.i
-        GROUP BY dm.vec_id, w.c),
-    assign AS (
-        SELECT vec_id, c AS cell
-        FROM (SELECT vec_id, c,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY dot DESC, c) AS rn
-              FROM cdots)
-        WHERE rn = 1),
+    WITH {portable_cell_assign_sql(_SD_CELLS, "|knn", _SD_AUDIT_IDS)},
     cand AS (
         SELECT a.vec_id, b.vec_id AS neighbor_id
         FROM assign a JOIN assign b

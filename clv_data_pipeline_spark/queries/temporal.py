@@ -16,13 +16,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from clv_data_pipeline_spark.queries.tpch import (
+    _SESSION_FLAGS_SQL,
+    _SESSIONIZE_ORACLE,
+)
 from clv_data_pipeline_spark.registry import query
 from clv_data_pipeline_spark.sources.io import load_table
 
 
-@query(
-    "q_scd2",
-    oracle="""
+#: the batch SCD2 interval table: per-user runs of one event_type
+#: collapsed into [valid_from, valid_to) — the oracle of the batch,
+#: MERGE and streaming builds alike.
+_SCD2_ORACLE = """
     WITH ordered AS (
         SELECT user_id, event_type, ts, event_id,
                LAG(event_type) OVER w AS prev_type
@@ -37,7 +42,12 @@ from clv_data_pipeline_spark.sources.io import load_table
            CAST(LEAD(valid_from) OVER w2 IS NULL AS BIGINT) AS is_current
     FROM changes
     WINDOW w2 AS (PARTITION BY user_id ORDER BY valid_from, event_id)
-    """,
+    """
+
+
+@query(
+    "q_scd2",
+    oracle=_SCD2_ORACLE,
 )
 def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension Type 2 from an event stream: collapse
@@ -427,22 +437,7 @@ def scd2_merge(
 
 @query(
     "q_scd2_merge",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, event_type, ts, event_id,
-               LAG(event_type) OVER w AS prev_type
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-    changes AS (
-        SELECT user_id, event_type, ts AS valid_from, event_id
-        FROM ordered
-        WHERE prev_type IS NULL OR prev_type <> event_type)
-    SELECT user_id, event_type, valid_from,
-           LEAD(valid_from) OVER w2 AS valid_to,
-           CAST(LEAD(valid_from) OVER w2 IS NULL AS BIGINT) AS is_current
-    FROM changes
-    WINDOW w2 AS (PARTITION BY user_id ORDER BY valid_from, event_id)
-    """,
+    oracle=_SCD2_ORACLE,
 )
 def q_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental SCD2: build the interval table from the first 20
@@ -470,22 +465,7 @@ def q_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_scd2_stream",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, event_type, ts, event_id,
-               LAG(event_type) OVER w AS prev_type
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-    changes AS (
-        SELECT user_id, event_type, ts AS valid_from, event_id
-        FROM ordered
-        WHERE prev_type IS NULL OR prev_type <> event_type)
-    SELECT user_id, event_type, valid_from,
-           LEAD(valid_from) OVER w2 AS valid_to,
-           CAST(LEAD(valid_from) OVER w2 IS NULL AS BIGINT) AS is_current
-    FROM changes
-    WINDOW w2 AS (PARTITION BY user_id ORDER BY valid_from, event_id)
-    """,
+    oracle=_SCD2_ORACLE,
 )
 def q_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 maintenance run by the REAL Structured Streaming engine —
@@ -578,26 +558,7 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sessionize_incremental",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, ts, event_id,
-               epoch_us(ts) - lag(epoch_us(ts)) OVER
-                   (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        FROM events),
-    flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN gap_us IS NULL OR gap_us > 1800 * 1000000
-                    THEN 1 ELSE 0 END AS is_new
-        FROM ordered),
-    sessions AS (
-        SELECT user_id, ts,
-               CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        FROM flagged)
-    SELECT user_id, session_id, COUNT(*) AS n_events,
-           MIN(ts) AS session_start, MAX(ts) AS session_end
-    FROM sessions GROUP BY user_id, session_id
-    """,
+    oracle=_SESSIONIZE_ORACLE,
 )
 def q_sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O(delta) session-table maintenance: split the event log at
@@ -2034,17 +1995,8 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_interval_join",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, ts, event_id,
-               epoch_us(ts) - lag(epoch_us(ts)) OVER
-                   (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        FROM events),
-    flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN gap_us IS NULL OR gap_us > 1800 * 1000000
-                    THEN 1 ELSE 0 END AS is_new
-        FROM ordered),
+    oracle=f"""
+    WITH {_SESSION_FLAGS_SQL},
     sessions AS (
         SELECT user_id,
                CAST(session_id AS BIGINT) AS session_id,

@@ -10,8 +10,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clv_data_pipeline_spark.functions.stats import (
+    md5_bits,
+    md5_bits_sql,
+    md5_uniform_sql,
+)
 from clv_data_pipeline_spark.functions.text import (
+    FINGERPRINT_SQL,
     LANG_MARKERS,
+    NORMALIZE_SQL,
+    QUALITY_SCORE_SQL,
+    SPLIT_TOKENS_SQL,
+    TOKENIZE_SQL,
     bpe_ish_token_count,
     digit_ratio,
     fingerprint,
@@ -49,26 +59,23 @@ from clv_data_pipeline_spark.operators.multimodal import (
 from clv_data_pipeline_spark.registry import query
 from clv_data_pipeline_spark.sources.io import load_table
 
-#: DuckDB twin of the Spark tokenizer (normalize_text + split on space)
-#: — defined up top because both the BPE-training oracle and the
-#: corpus-statistics queries below interpolate it.
-_TOKENIZE_SQL = (
-    "string_split_regex(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),"
-    " ' ')"
-)
 
-
-@query(
-    "q_dedup_exact",
-    oracle="""
+#: DuckDB twin of operators/dedup.dedup_exact: the min-id document per
+#: normalized-text md5 fingerprint.
+_DEDUP_EXACT_ORACLE = f"""
     WITH fp AS (
         SELECT doc_id,
-               md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS f
+               {FINGERPRINT_SQL} AS f
         FROM documents),
     winners AS (SELECT f, MIN(doc_id) AS doc_id FROM fp GROUP BY f)
     SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
     FROM documents d JOIN winners w ON d.doc_id = w.doc_id
-    """,
+    """
+
+
+@query(
+    "q_dedup_exact",
+    oracle=_DEDUP_EXACT_ORACLE,
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: min-id winner per normalized-text fingerprint.
@@ -78,13 +85,13 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_incremental",
-    oracle="""
+    oracle=f"""
     WITH stats AS (
         SELECT MAX(doc_id) - CAST(FLOOR(COUNT(*) / 10.0) AS BIGINT) AS cut
         FROM documents),
     fp AS (
         SELECT doc_id,
-               md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS f
+               {FINGERPRINT_SQL} AS f
         FROM documents),
     winners AS (SELECT f, MIN(doc_id) AS doc_id FROM fp GROUP BY f)
     SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
@@ -232,7 +239,7 @@ _BPE_IT_TEMPLATE = """
                                         r := ws.syms[i + 2],
                                         f := ws.freq)))) AS ap
                 FROM it WHERE t < {n})))
-""".replace("{tok}", _TOKENIZE_SQL).replace("{merged}", _BPE_MERGED_SQL)
+""".replace("{tok}", TOKENIZE_SQL).replace("{merged}", _BPE_MERGED_SQL)
 
 _BPE_IT_SQL = _bpe_it_sql(_BPE_NUM_MERGES)
 
@@ -253,7 +260,7 @@ _UNI_UNK_LOGP = -20 * 10**9
 _UNI_VOCAB_SQL = f"""
     uwords AS (
         SELECT w AS word, CAST(COUNT(*) AS BIGINT) AS freq
-        FROM (SELECT unnest({_TOKENIZE_SQL}) AS w FROM documents)
+        FROM (SELECT unnest({TOKENIZE_SQL}) AS w FROM documents)
         WHERE w <> '' GROUP BY w),
     utwords AS (
         SELECT word, freq FROM uwords
@@ -402,7 +409,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                     CAST(len(ws.syms) AS BIGINT) AS n_tok FROM fin),
     docw AS (
         SELECT doc_id, w
-        FROM (SELECT doc_id, unnest({_TOKENIZE_SQL}) AS w
+        FROM (SELECT doc_id, unnest({TOKENIZE_SQL}) AS w
               FROM documents)
         WHERE w <> ''),
     agg AS (
@@ -447,15 +454,7 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_dedup",
-    oracle="""
-    WITH fp AS (
-        SELECT doc_id,
-               md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS f
-        FROM documents),
-    winners AS (SELECT f, MIN(doc_id) AS doc_id FROM fp GROUP BY f)
-    SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
-    FROM documents d JOIN winners w ON d.doc_id = w.doc_id
-    """,
+    oracle=_DEDUP_EXACT_ORACLE,
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once corpus-ingest dedup run by the REAL Structured
@@ -521,10 +520,11 @@ def q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return admitted.select("doc_id", "text", "lang", "source", "n_chars")
 
 
-@query(
-    "q_dedup_clusters",
-    oracle="""
-    WITH RECURSIVE star AS (
+#: ``reach`` (node, r): every doc joined to each doc it reaches over
+#: the (lang, n_chars // 20) and (source, n_chars // 20) star edges —
+#: the DuckDB twin of the cluster_documents fixpoint; a node's
+#: cluster id is MIN(r).  Needs ``WITH RECURSIVE``.
+_DEDUP_REACH_SQL = """star AS (
         SELECT doc_id AS a,
                MIN(doc_id) OVER (PARTITION BY lang, n_chars // 20) AS b
         FROM documents
@@ -542,7 +542,13 @@ def q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, doc_id FROM documents
         UNION
         SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b
-    )
+    )"""
+
+
+@query(
+    "q_dedup_clusters",
+    oracle=f"""
+    WITH RECURSIVE {_DEDUP_REACH_SQL}
     SELECT CAST(node AS BIGINT) AS doc_id,
            CAST(MIN(r) AS BIGINT) AS cluster_id
     FROM reach GROUP BY node
@@ -639,27 +645,10 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: DuckDB twin of functions/text.py quality_score — shared by
-#: q_quality_score and q_curriculum so both stages score identically.
-_QUALITY_SQL = r"""ROUND(
-             LEAST(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
-             * GREATEST(0.0, 1.0 -
-                 (CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE)
-                  / GREATEST(length(text), 1)) * 5.0)
-             * GREATEST(0.0, 1.0 -
-                 (CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
-                  / GREATEST(length(text), 1)) * 5.0)
-             * (CASE WHEN (CAST(length(trim(text)) AS DOUBLE)
-                           / GREATEST(len(regexp_extract_all(trim(text), '\S+', 0)), 1))
-                          BETWEEN 3.0 AND 12.0
-                     THEN 1.0 ELSE 0.5 END),
-           6)"""
-
-
 @query(
     "q_quality_score",
     oracle=f"""
-    SELECT doc_id, {_QUALITY_SQL} AS quality
+    SELECT doc_id, {QUALITY_SCORE_SQL} AS quality
     FROM documents
     """,
 )
@@ -774,10 +763,10 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_gopher_rules",
-    oracle=r"""
-    WITH t AS (
+#: DuckDB twin of q_gopher_rules' per-doc measures: ``t`` (token
+#: list and symbol counts) and ``m`` (n_words, mean_word_len,
+#: alpha_frac, symbol_ratio, stop_hits).
+_GOPHER_STATS_SQL = r"""t AS (
         SELECT doc_id,
                regexp_extract_all(trim(text), '\S+') AS toks,
                length(text) - length(replace(text, '#', '')) AS n_hash,
@@ -799,7 +788,13 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
                         list_transform(toks, x -> lower(x)),
                         ['the','be','to','of','and','that','have','with']))
                     AS BIGINT) AS stop_hits
-        FROM t)
+        FROM t)"""
+
+
+@query(
+    "q_gopher_rules",
+    oracle=rf"""
+    WITH {_GOPHER_STATS_SQL}
     SELECT doc_id, n_words, mean_word_len, alpha_frac, symbol_ratio,
            stop_hits,
            CAST(n_words BETWEEN 50 AND 100000 AS BIGINT) AS r_word_count,
@@ -891,9 +886,9 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+           {FINGERPRINT_SQL} AS fp
     FROM documents
     """,
 )
@@ -904,20 +899,25 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
 
 
-@query(
-    "q_ngram_jaccard",
-    oracle="""
-    WITH sh AS (
+#: ``pairs`` (id_a, id_b, sa, sb): the distinct char-3-gram sets of
+#: each document and its doc_id + 1 neighbour, over normalized text.
+_NEIGHBOR_SHINGLES_SQL = f"""sh AS (
         SELECT doc_id,
                list_distinct(list_transform(
                    range(1, GREATEST(length(norm) - 2, 1) + 1),
                    i -> substring(norm, CAST(i AS INT), 3))) AS s
         FROM (SELECT doc_id,
-                     trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
+                     {NORMALIZE_SQL} AS norm
               FROM documents)),
     pairs AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.s AS sa, b.s AS sb
-        FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1)
+        FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1)"""
+
+
+@query(
+    "q_ngram_jaccard",
+    oracle=f"""
+    WITH {_NEIGHBOR_SHINGLES_SQL}
     SELECT id_a, id_b,
            ROUND(CAST(len(list_intersect(sa, sb)) AS DOUBLE)
                  / GREATEST(len(sa) + len(sb) - len(list_intersect(sa, sb)), 1),
@@ -954,7 +954,7 @@ _LSH_SWEEP_GRID = [(1, 64), (2, 32), (4, 16), (8, 8),
     oracle=f"""
     WITH d AS (
         SELECT doc_id,
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))
+               {NORMALIZE_SQL}
                    AS norm
         FROM documents WHERE doc_id < {_LSH_SWEEP_IDS}),
     sh0 AS (
@@ -1144,10 +1144,9 @@ def _lsh_sweep_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_vocab_top",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT unnest(string_split(
-                   trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
+        SELECT unnest({SPLIT_TOKENS_SQL})
                AS token
         FROM documents)
     SELECT token, COUNT(*) AS n FROM toks
@@ -1278,9 +1277,9 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (operators/dedup.py minhash_candidates_portable): distinct 5-char
 #: shingles of the normalized text -> 64 md5(shingle|k) minima -> 16
 #: 4-row band keys -> bucket-join candidate pairs.
-_MINHASH_PORTABLE_CANDS_SQL = r"""
+_MINHASH_PORTABLE_CANDS_SQL = rf"""
     n AS (SELECT doc_id,
-                 trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
+                 {NORMALIZE_SQL} AS norm
           FROM documents),
     sh AS (SELECT doc_id,
                   unnest(list_distinct(list_transform(
@@ -2006,10 +2005,10 @@ def q_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_set_similarity_join",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id, unnest(list_distinct(string_split_regex(
-                   trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')))
+                   {NORMALIZE_SQL}, ' ')))
                    AS token
         FROM documents),
     toks_f AS (SELECT doc_id, token FROM toks WHERE token <> ''),
@@ -2151,11 +2150,9 @@ def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SUBSTR_W = 50  #: Lee et al. 2021's 50-token exact-substring threshold
 
-
-@query(
-    "q_dedup_substring",
-    oracle=f"""
-    WITH t AS (
+#: ``grams`` (doc_id, g): the md5 of every stride-1 ``_SUBSTR_W``-token
+#: window of each document.
+_SUBSTR_TOKEN_GRAMS_SQL = f"""t AS (
       SELECT doc_id, string_split(lower(text), ' ') AS toks
       FROM documents),
     grams AS (
@@ -2163,8 +2160,11 @@ _SUBSTR_W = 50  #: Lee et al. 2021's 50-token exact-substring threshold
              md5(array_to_string(toks[i : i + {_SUBSTR_W - 1}], ' ')) AS g
       FROM t, UNNEST(generate_series(1, len(toks) - {_SUBSTR_W - 1}))
            AS u(i)
-      WHERE len(toks) >= {_SUBSTR_W}),
-    keepers AS (SELECT g, MIN(doc_id) AS keeper FROM grams GROUP BY g)
+      WHERE len(toks) >= {_SUBSTR_W})"""
+
+#: per-doc duplicate-window stats over a ``grams`` (doc_id, g) CTE: a
+#: window is duplicated when a smaller doc id holds the same gram.
+_SUBSTR_DUP_STATS_SQL = """keepers AS (SELECT g, MIN(doc_id) AS keeper FROM grams GROUP BY g)
     SELECT CAST(doc_id AS BIGINT) AS doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_windows,
            CAST(SUM(CASE WHEN doc_id > keeper THEN 1 ELSE 0 END)
@@ -2173,9 +2173,18 @@ _SUBSTR_W = 50  #: Lee et al. 2021's 50-token exact-substring threshold
                  * 1.0 / COUNT(*), 6) AS dup_ratio,
            (SUM(CASE WHEN doc_id > keeper THEN 1 ELSE 0 END) > 0)
                AS substring_dup
-    FROM grams JOIN keepers USING (g)
+    FROM grams JOIN keepers USING (g)"""
+
+_SUBSTR_DEDUP_ORACLE = f"""
+    WITH {_SUBSTR_TOKEN_GRAMS_SQL},
+    {_SUBSTR_DUP_STATS_SQL}
     GROUP BY doc_id
-    """,
+    """
+
+
+@query(
+    "q_dedup_substring",
+    oracle=_SUBSTR_DEDUP_ORACLE,
 )
 def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact substring dedup (Lee et al. 2021, ExactSubstr) — flag
@@ -2210,7 +2219,7 @@ _SUBSTR_CS = 4    #: char stride: guaranteed detection >= 120+4-1 chars
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS tt
+             {NORMALIZE_SQL} AS tt
       FROM documents),
     grams AS (
       SELECT doc_id,
@@ -2218,16 +2227,7 @@ _SUBSTR_CS = 4    #: char stride: guaranteed detection >= 120+4-1 chars
       FROM t, UNNEST(generate_series(1, len(tt) - {_SUBSTR_CW - 1},
                                      {_SUBSTR_CS})) AS u(i)
       WHERE len(tt) >= {_SUBSTR_CW}),
-    keepers AS (SELECT g, MIN(doc_id) AS keeper FROM grams GROUP BY g)
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_windows,
-           CAST(SUM(CASE WHEN doc_id > keeper THEN 1 ELSE 0 END)
-                AS BIGINT) AS dup_windows,
-           ROUND(SUM(CASE WHEN doc_id > keeper THEN 1 ELSE 0 END)
-                 * 1.0 / COUNT(*), 6) AS dup_ratio,
-           (SUM(CASE WHEN doc_id > keeper THEN 1 ELSE 0 END) > 0)
-               AS substring_dup
-    FROM grams JOIN keepers USING (g)
+    {_SUBSTR_DUP_STATS_SQL}
     GROUP BY doc_id
     """,
 )
@@ -2305,7 +2305,7 @@ def _substr_eval_oracle() -> str:
                             THEN 1 ELSE 0 END) AS BIGINT) AS pt
             FROM tg JOIN tk USING (g) GROUP BY tg.doc_id),
     ct AS (SELECT doc_id,
-                  trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))
+                  {NORMALIZE_SQL}
                       AS tn
            FROM docs),
     cg AS (SELECT doc_id,
@@ -2468,22 +2468,10 @@ _CURATE_CONTAM_MIN_GRAMS = 2
 
 @query(
     "q_corpus_curate",
-    oracle=r"""
+    oracle=rf"""
     WITH scored AS (
       SELECT doc_id, text, n_chars,
-             ROUND(
-               LEAST(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
-               * GREATEST(0.0, 1.0 -
-                   (CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE)
-                    / GREATEST(length(text), 1)) * 5.0)
-               * GREATEST(0.0, 1.0 -
-                   (CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
-                    / GREATEST(length(text), 1)) * 5.0)
-               * (CASE WHEN (CAST(length(trim(text)) AS DOUBLE)
-                             / GREATEST(len(regexp_extract_all(trim(text), '\S+', 0)), 1))
-                            BETWEEN 3.0 AND 12.0
-                       THEN 1.0 ELSE 0.5 END),
-             6) AS quality
+             {QUALITY_SCORE_SQL} AS quality
       FROM documents),
     base AS (
       SELECT * FROM scored
@@ -2491,7 +2479,7 @@ _CURATE_CONTAM_MIN_GRAMS = 2
     winners AS (
       SELECT MIN(doc_id) AS doc_id
       FROM (SELECT doc_id,
-                   md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS f
+                   {FINGERPRINT_SQL} AS f
             FROM base)
       GROUP BY f),
     deduped AS (
@@ -2718,11 +2706,10 @@ def q_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_minhash_weighted",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               unnest(string_split(
-                   trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
+               unnest({SPLIT_TOKENS_SQL})
                    AS token
         FROM documents),
     tf AS (
@@ -2731,8 +2718,7 @@ def q_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex AS (SELECT doc_id, token, tf, unnest(range(16)) AS k FROM tf),
     sc AS (
         SELECT doc_id, k, token,
-               -ln((('0x' || substr(md5(token || '|' || k), 1, 8))::BIGINT
-                    + 0.5) / 4294967296.0) / tf AS score
+               -ln({md5_uniform_sql("token || '|' || k")}) / tf AS score
         FROM ex),
     rk AS (
         SELECT doc_id, k, token,
@@ -2770,18 +2756,8 @@ def q_minhash_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_containment",
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(1, GREATEST(length(norm) - 2, 1) + 1),
-                   i -> substring(norm, CAST(i AS INT), 3))) AS s
-        FROM (SELECT doc_id,
-                     trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
-              FROM documents)),
-    pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.s AS sa, b.s AS sb
-        FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1)
+    oracle=f"""
+    WITH {_NEIGHBOR_SHINGLES_SQL}
     SELECT id_a, id_b,
            ROUND(CAST(len(list_intersect(sa, sb)) AS DOUBLE)
                  / GREATEST(len(sa), 1), 6) AS contain_ab,
@@ -2828,12 +2804,11 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_vocab_oov",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT doc_id, source,
                substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc' AS is_train,
-               string_split(
-                   trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')
+               {SPLIT_TOKENS_SQL}
                    AS ws
         FROM documents),
     bg AS (
@@ -2920,10 +2895,9 @@ def q_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_zipf_fit",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT unnest(string_split(
-                   trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
+        SELECT unnest({SPLIT_TOKENS_SQL})
                    AS token
         FROM documents),
     tf AS (
@@ -3232,12 +3206,13 @@ def q_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_cdc_chunks",
-    oracle="""
-    WITH norm AS (
+#: DuckDB twin of the content-defined chunker's boundary pass: ``cid``
+#: (doc_id, t, p, chunk_id) numbers each normalized-text position by
+#: the count of boundaries (p = 1 or an 8-char window whose md5 is
+#: 0 mod 64) at or before it.
+_CDC_CHUNK_IDS_SQL = f"""norm AS (
         SELECT doc_id,
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
+               {NORMALIZE_SQL} AS t
         FROM documents),
     pos AS (
         SELECT doc_id, t, unnest(range(1, length(t) - 6)) AS p
@@ -3245,15 +3220,20 @@ def q_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     b AS (
         SELECT doc_id, t, p,
                CASE WHEN p = 1 OR
-                    ('0x' || substr(md5(substring(t, CAST(p AS INT), 8)),
-                     1, 8))::BIGINT % 64 = 0
+                    {md5_bits_sql("substring(t, CAST(p AS INT), 8)")} % 64 = 0
                     THEN 1 ELSE 0 END AS is_boundary
         FROM pos),
     cid AS (
         SELECT doc_id, t, p,
                SUM(is_boundary) OVER (PARTITION BY doc_id ORDER BY p
                    ROWS UNBOUNDED PRECEDING) AS chunk_id
-        FROM b),
+        FROM b)"""
+
+
+@query(
+    "q_cdc_chunks",
+    oracle=f"""
+    WITH {_CDC_CHUNK_IDS_SQL},
     chunks AS (
         SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
                MIN(p) AS lo, MAX(p) AS hi, t
@@ -3301,9 +3281,7 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p"),
     )
     win = F.substring(F.col("t"), F.col("p"), F.lit(8))
-    h = F.conv(F.substring(F.md5(win.cast("binary")), 1, 8), 16, 10).cast(
-        "long"
-    )
+    h = md5_bits(win.cast("binary"))
     is_boundary = F.when(
         (F.col("p") == 1) | (h % 64 == 0), 1
     ).otherwise(0)
@@ -3337,10 +3315,10 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ngram_novelty",
-    oracle="""
+    oracle=f"""
     WITH norm AS (
         SELECT doc_id,
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
+               {NORMALIZE_SQL} AS t
         FROM documents),
     grams AS (
         SELECT DISTINCT doc_id,
@@ -3405,26 +3383,8 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_chunks",
-    oracle="""
-    WITH norm AS (
-        SELECT doc_id,
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
-        FROM documents),
-    pos AS (
-        SELECT doc_id, t, unnest(range(1, length(t) - 6)) AS p
-        FROM norm WHERE length(t) >= 8),
-    b AS (
-        SELECT doc_id, t, p,
-               CASE WHEN p = 1 OR
-                    ('0x' || substr(md5(substring(t, CAST(p AS INT), 8)),
-                     1, 8))::BIGINT % 64 = 0
-                    THEN 1 ELSE 0 END AS is_boundary
-        FROM pos),
-    cid AS (
-        SELECT doc_id, t, p,
-               SUM(is_boundary) OVER (PARTITION BY doc_id ORDER BY p
-                   ROWS UNBOUNDED PRECEDING) AS chunk_id
-        FROM b),
+    oracle=f"""
+    WITH {_CDC_CHUNK_IDS_SQL},
     chunks AS (
         SELECT doc_id, chunk_id, MIN(p) AS lo, MAX(p) AS hi, t
         FROM cid GROUP BY doc_id, chunk_id, t),
@@ -3555,10 +3515,10 @@ def q_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_normalize_ladder",
-    oracle="""
+    oracle=f"""
     WITH forms AS (
         SELECT md5(text) AS raw_fp,
-               md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
+               {FINGERPRINT_SQL}
                    AS ws_fp,
                md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ',
                                        'g'))) AS canon_fp
@@ -3878,9 +3838,9 @@ def q_pack_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH s AS (
         SELECT doc_id,
-               CASE WHEN {_QUALITY_SQL} >= 0.75 THEN 1
-                    WHEN {_QUALITY_SQL} >= 0.5  THEN 2
-                    WHEN {_QUALITY_SQL} >= 0.25 THEN 3
+               CASE WHEN {QUALITY_SCORE_SQL} >= 0.75 THEN 1
+                    WHEN {QUALITY_SCORE_SQL} >= 0.5  THEN 2
+                    WHEN {QUALITY_SCORE_SQL} >= 0.25 THEN 3
                     ELSE 4 END AS stage
         FROM documents)
     SELECT doc_id, CAST(stage AS BIGINT) AS stage,
@@ -3938,7 +3898,7 @@ def q_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     + f"""
     , docw AS (
         SELECT doc_id, w
-        FROM (SELECT doc_id, unnest({_TOKENIZE_SQL}) AS w
+        FROM (SELECT doc_id, unnest({TOKENIZE_SQL}) AS w
               FROM documents)
         WHERE w <> ''),
     agg AS (
@@ -4220,7 +4180,7 @@ def q_min_pieces_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
                      CAST(len(ws.syms) AS BIGINT) AS n_tok FROM bfin),
     docw AS (
         SELECT doc_id, w
-        FROM (SELECT doc_id, unnest({_TOKENIZE_SQL}) AS w
+        FROM (SELECT doc_id, unnest({TOKENIZE_SQL}) AS w
               FROM documents)
         WHERE w <> ''),
     perdoc AS (
@@ -4313,31 +4273,13 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_keep_best",
     oracle=f"""
-    WITH RECURSIVE star AS (
-        SELECT doc_id AS a,
-               MIN(doc_id) OVER (PARTITION BY lang, n_chars // 20) AS b
-        FROM documents
-        UNION ALL
-        SELECT doc_id,
-               MIN(doc_id) OVER (PARTITION BY source, n_chars // 20)
-        FROM documents
-    ),
-    edges AS (
-        SELECT a, b FROM star WHERE a <> b
-        UNION
-        SELECT b, a FROM star WHERE a <> b
-    ),
-    reach(node, r) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.a, reach.r FROM edges e JOIN reach ON reach.node = e.b
-    ),
+    WITH RECURSIVE {_DEDUP_REACH_SQL},
     clusters AS (
         SELECT CAST(node AS BIGINT) AS doc_id,
                CAST(MIN(r) AS BIGINT) AS cluster_id
         FROM reach GROUP BY node),
     quality AS (
-        SELECT doc_id, {_QUALITY_SQL} AS q FROM documents),
+        SELECT doc_id, {QUALITY_SCORE_SQL} AS q FROM documents),
     ranked AS (
         SELECT c.doc_id, c.cluster_id, q.q,
                ROW_NUMBER() OVER (PARTITION BY c.cluster_id
@@ -4390,25 +4332,8 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT MAX(doc_id) - CAST(FLOOR(COUNT(*) / 10.0) AS BIGINT)
                    AS cut
         FROM documents),
-    t AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks
-      FROM documents),
-    grams AS (
-      SELECT doc_id,
-             md5(array_to_string(toks[i : i + {_SUBSTR_W - 1}], ' ')) AS g
-      FROM t, UNNEST(generate_series(1, len(toks) - {_SUBSTR_W - 1}))
-           AS u(i)
-      WHERE len(toks) >= {_SUBSTR_W}),
-    keepers AS (SELECT g, MIN(doc_id) AS keeper FROM grams GROUP BY g)
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_windows,
-           CAST(SUM(CASE WHEN doc_id > keeper THEN 1 ELSE 0 END)
-                AS BIGINT) AS dup_windows,
-           ROUND(SUM(CASE WHEN doc_id > keeper THEN 1 ELSE 0 END)
-                 * 1.0 / COUNT(*), 6) AS dup_ratio,
-           (SUM(CASE WHEN doc_id > keeper THEN 1 ELSE 0 END) > 0)
-               AS substring_dup
-    FROM grams JOIN keepers USING (g), s
+    {_SUBSTR_TOKEN_GRAMS_SQL},
+    {_SUBSTR_DUP_STATS_SQL}, s
     WHERE doc_id > cut
     GROUP BY doc_id
     """,
@@ -4450,28 +4375,7 @@ def q_dedup_substring_incremental(
 
 @query(
     "q_stream_dedup_substring",
-    oracle=f"""
-    WITH t AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks
-      FROM documents),
-    grams AS (
-      SELECT doc_id,
-             md5(array_to_string(toks[i : i + {_SUBSTR_W - 1}], ' ')) AS g
-      FROM t, UNNEST(generate_series(1, len(toks) - {_SUBSTR_W - 1}))
-           AS u(i)
-      WHERE len(toks) >= {_SUBSTR_W}),
-    keepers AS (SELECT g, MIN(doc_id) AS keeper FROM grams GROUP BY g)
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_windows,
-           CAST(SUM(CASE WHEN doc_id > keeper THEN 1 ELSE 0 END)
-                AS BIGINT) AS dup_windows,
-           ROUND(SUM(CASE WHEN doc_id > keeper THEN 1 ELSE 0 END)
-                 * 1.0 / COUNT(*), 6) AS dup_ratio,
-           (SUM(CASE WHEN doc_id > keeper THEN 1 ELSE 0 END) > 0)
-               AS substring_dup
-    FROM grams JOIN keepers USING (g)
-    GROUP BY doc_id
-    """,
+    oracle=_SUBSTR_DEDUP_ORACLE,
 )
 def q_stream_dedup_substring(
     spark: SparkSession, sf_dir: str
@@ -4638,30 +4542,8 @@ def q_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_filter_funnel",
-    oracle=r"""
-    WITH t AS (
-        SELECT doc_id,
-               regexp_extract_all(trim(text), '\S+') AS toks,
-               length(text) - length(replace(text, '#', '')) AS n_hash,
-               CAST((length(text) - length(replace(text, '...', ''))) / 3
-                    AS BIGINT) AS n_ellipsis
-        FROM documents),
-    m AS (
-        SELECT doc_id,
-               CAST(len(toks) AS BIGINT) AS n_words,
-               ROUND(CAST(list_sum(list_transform(toks, x -> length(x)))
-                          AS DOUBLE)
-                     / GREATEST(len(toks), 1), 6) AS mean_word_len,
-               ROUND(CAST(len(list_filter(toks,
-                          x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-                     / GREATEST(len(toks), 1), 6) AS alpha_frac,
-               ROUND(CAST(n_hash + n_ellipsis AS DOUBLE)
-                     / GREATEST(len(toks), 1), 6) AS symbol_ratio,
-               CAST(len(list_intersect(
-                        list_transform(toks, x -> lower(x)),
-                        ['the','be','to','of','and','that','have','with']))
-                    AS BIGINT) AS stop_hits
-        FROM t),
+    oracle=rf"""
+    WITH {_GOPHER_STATS_SQL},
     f AS (
         SELECT CAST(n_words BETWEEN 50 AND 100000 AS BIGINT) AS r1,
                CAST(mean_word_len BETWEEN 3 AND 10 AS BIGINT) AS r2,
@@ -4751,29 +4633,14 @@ def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dataset_card",
-    oracle=r"""
+    oracle=rf"""
     WITH q AS (
         SELECT doc_id,
-               ROUND(
-                 LEAST(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * GREATEST(0.0, 1.0 -
-                     (CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                           AS DOUBLE)
-                      / GREATEST(length(text), 1)) * 5.0)
-                 * (CASE WHEN (CAST(length(trim(text)) AS DOUBLE)
-                               / GREATEST(len(regexp_extract_all(trim(text),
-                                              '\S+', 0)), 1))
-                              BETWEEN 3.0 AND 12.0
-                         THEN 1.0 ELSE 0.5 END),
-               6) AS quality,
+               {QUALITY_SCORE_SQL} AS quality,
                CAST(len(regexp_extract_all(trim(text), '\S+'))
                     AS BIGINT) AS n_toks,
                CAST(length(text) AS BIGINT) AS n_chars,
-               md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
+               {FINGERPRINT_SQL}
                    AS fp,
                regexp_extract_all(trim(text), '\S+') AS toks
         FROM documents),
@@ -4870,7 +4737,7 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_good_turing",
     oracle=f"""
     WITH ts0 AS (
-        SELECT {_TOKENIZE_SQL} AS ts FROM documents),
+        SELECT {TOKENIZE_SQL} AS ts FROM documents),
     toks AS (
         SELECT unnest(list_transform(range(1, len(ts)),
                    i -> ts[i] || ' ' || ts[i + 1])) AS term
@@ -4973,7 +4840,7 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_heaps_law",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, unnest({_TOKENIZE_SQL}) AS term
+        SELECT doc_id, unnest({TOKENIZE_SQL}) AS term
         FROM documents),
     firstdoc AS (
         SELECT term, MIN(doc_id) AS fd

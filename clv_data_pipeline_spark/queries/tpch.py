@@ -270,10 +270,10 @@ def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-@query(
-    "q_sessionize",
-    oracle="""
-    WITH ordered AS (
+#: 30-minute-gap session starts: ``flagged`` (user_id, ts, event_id,
+#: is_new) marks each event whose gap to the user's previous one
+#: exceeds 1800 s (or that has none).
+_SESSION_FLAGS_SQL = """ordered AS (
         SELECT user_id, ts, event_id,
                epoch_us(ts) - lag(epoch_us(ts)) OVER
                    (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
@@ -282,7 +282,12 @@ def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT user_id, ts, event_id,
                CASE WHEN gap_us IS NULL OR gap_us > 1800 * 1000000
                     THEN 1 ELSE 0 END AS is_new
-        FROM ordered),
+        FROM ordered)"""
+
+#: DuckDB twin of operators/sessions.session_stats: per-session event
+#: count and first/last timestamp.
+_SESSIONIZE_ORACLE = f"""
+    WITH {_SESSION_FLAGS_SQL},
     sessions AS (
         SELECT user_id, ts,
                CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -291,7 +296,12 @@ def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, session_id, COUNT(*) AS n_events,
            MIN(ts) AS session_start, MAX(ts) AS session_end
     FROM sessions GROUP BY user_id, session_id
-    """,
+    """
+
+
+@query(
+    "q_sessionize",
+    oracle=_SESSIONIZE_ORACLE,
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 extension: gap-and-island sessionization (30 min gap) — the

@@ -9,7 +9,8 @@ The reference pipeline delegated execution to BigQuery and pandas
 - AQE on (coalesce + skew-join): at 100 TB the right shuffle
   partitioning is data-dependent; let the runtime re-plan.
 - Arrow on: every driver <-> executor pandas crossing (the model-fit
-  barrier, pandas UDF scoring) moves columnar batches, not pickled rows.
+  barrier, Arrow-batched numpy kernels) moves columnar batches, not
+  pickled rows.
 - A 1000-entry generated-class cache: Spark's default of 100 is below
   the ~135 classes one round of q_hits, q_ridge and q_scd2_stream
   generates, so with it every warm round evicted and recompiled 80-95

@@ -312,10 +312,11 @@ def materialize_temp(
     and every consumer is a cheap columnar scan; the artifact is also
     exactly what a production pipeline stores at these branch points
     (a features table, a signature index), just at a managed path
-    instead of a tmpdir.  Lifecycle: the OS/container reaps the
-    tempdir; nothing stays resident in the Spark session.  The scan
-    runs no schema-inference job: it reads with the schema of the
-    frame just written, or (keyed) through ``read_parquet``.
+    instead of a tmpdir.  Lifecycle: an unkeyed dataset lives in a
+    :func:`scratch_dir`, removed when the process exits; nothing stays
+    resident in the Spark session.  The scan runs no schema-inference
+    job: it reads with the schema of the frame just written, or
+    (keyed) through ``read_parquet``.
 
     ``key`` opts into DERIVED-ARTIFACT semantics: a deterministic
     content key (e.g. source path + mtime) maps to a stable path, and a
@@ -325,12 +326,9 @@ def materialize_temp(
     source version).  Concurrent builders race safely: each writes to a
     unique staging dir and the first atomic rename wins.
     """
-    import shutil
-    import tempfile
-
     spark = df.sparkSession
     if key is None:
-        path = tempfile.mkdtemp(prefix=prefix) + "/data"
+        path = os.path.join(scratch_dir(prefix), "data")
         df.write.parquet(path)
         return spark.read.schema(df.schema).parquet(path)
 

@@ -315,8 +315,8 @@ def test_materialize_temp_reads_back_without_inference(spark, tmp_path):
 
 def test_scratch_dir_root_is_removed_at_exit(tmp_path):
     """Scratch directories live under one per-process root that an
-    atexit hook removes: a process that wrote into one leaves its
-    TMPDIR empty."""
+    atexit hook removes: a process that wrote into one, and read back
+    an unkeyed ``materialize_temp`` dataset, leaves its TMPDIR empty."""
     import os
     import pathlib
     import subprocess
@@ -326,10 +326,17 @@ def test_scratch_dir_root_is_removed_at_exit(tmp_path):
     tmpdir.mkdir()
     code = (
         "import os\n"
-        "from clv_data_pipeline_spark.sources.io import scratch_dir\n"
+        "from pyspark.sql import SparkSession\n"
+        "from clv_data_pipeline_spark.sources.io import (\n"
+        "    materialize_temp, scratch_dir)\n"
         "for prefix in ('a_', 'b_'):\n"
         "    d = scratch_dir(prefix)\n"
         "    open(os.path.join(d, 'f'), 'w').write('x')\n"
+        "spark = (SparkSession.builder.master('local[1]')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "df = materialize_temp(spark.range(3), 'unkeyed_')\n"
+        "assert df.count() == 3\n"
+        "spark.stop()\n"
     )
     subprocess.run(
         [sys.executable, "-c", code],
