@@ -24,7 +24,17 @@ def nelder_mead(
     xatol: float = 1e-8,
     fatol: float = 1e-10,
 ) -> tuple[np.ndarray, float]:
-    """Minimize ``f`` from ``x0``; returns (x_best, f_best)."""
+    """Minimize ``f`` from ``x0``; returns (x_best, f_best).
+
+    A non-finite value (NaN, or -inf at a likelihood's boundary) counts
+    as +inf: such a point is never kept as the best, and the
+    convergence test, which NaN would never pass, stays meaningful.
+    """
+
+    def value(p: np.ndarray) -> float:
+        v = f(p)
+        return v if np.isfinite(v) else np.inf
+
     x0 = np.asarray(x0, dtype=np.float64)
     n = x0.size
 
@@ -35,7 +45,7 @@ def nelder_mead(
         p[i] = p[i] * 1.05 if p[i] != 0 else 0.00025
         simplex.append(p)
     simplex = np.array(simplex)
-    fvals = np.array([f(p) for p in simplex])
+    fvals = np.array([value(p) for p in simplex])
 
     for _ in range(max_iter):
         order = np.argsort(fvals)
@@ -51,13 +61,13 @@ def nelder_mead(
         worst = simplex[-1]
 
         reflected = centroid + (centroid - worst)
-        f_r = f(reflected)
+        f_r = value(reflected)
         if fvals[0] <= f_r < fvals[-2]:
             simplex[-1], fvals[-1] = reflected, f_r
             continue
         if f_r < fvals[0]:
             expanded = centroid + 2.0 * (centroid - worst)
-            f_e = f(expanded)
+            f_e = value(expanded)
             if f_e < f_r:
                 simplex[-1], fvals[-1] = expanded, f_e
             else:
@@ -68,14 +78,14 @@ def nelder_mead(
             contracted = centroid + 0.5 * (reflected - centroid)
         else:
             contracted = centroid + 0.5 * (worst - centroid)
-        f_c = f(contracted)
+        f_c = value(contracted)
         if f_c < min(f_r, fvals[-1]):
             simplex[-1], fvals[-1] = contracted, f_c
             continue
         # shrink toward best
         for i in range(1, n + 1):
             simplex[i] = simplex[0] + 0.5 * (simplex[i] - simplex[0])
-            fvals[i] = f(simplex[i])
+            fvals[i] = value(simplex[i])
 
     best = int(np.argmin(fvals))
     return simplex[best], float(fvals[best])

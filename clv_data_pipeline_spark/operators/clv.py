@@ -334,18 +334,22 @@ def prob_alive_col(
 
 
 def expected_avg_value_col(
-    params: GammaGammaParams,
+    params: GammaGammaParams | tuple[Column, Column, Column],
     frequency: Column | str = "frequency",
     monetary: Column | str = "monetary",
 ) -> Column:
     """M4: Gamma-Gamma conditional expected average profit (Fader &
     Hardie 2013 eq. (5)) as native Column arithmetic — a weighted blend
     of the population mean and the customer's observed mean.  Stays
-    inside whole-stage codegen; no UDF.
+    inside whole-stage codegen; no UDF.  ``params`` may also be the
+    (p, q, v) columns of a row that carries them (see
+    ``score_customers``); the arithmetic is the same either way.
     """
     x = F.col(frequency) if isinstance(frequency, str) else frequency
     m = F.col(monetary) if isinstance(monetary, str) else monetary
-    p, q, v = (F.lit(params.p), F.lit(params.q), F.lit(params.v))
+    if isinstance(params, GammaGammaParams):
+        params = (params.p, params.q, params.v)
+    p, q, v = (F.lit(c) for c in params)
     weight = (p * x) / (p * x + q - F.lit(1.0))
     population_mean = v * p / (q - F.lit(1.0))
     return (F.lit(1.0) - weight) * population_mean + weight * m
@@ -355,6 +359,7 @@ def _expected_purchases_table(
     df: DataFrame,
     triples: pd.DataFrame,
     columns: dict[str, tuple[Callable[..., np.ndarray], object, float]],
+    constants: dict[str, float] | None = None,
 ) -> DataFrame:
     """One row per distinct (frequency, recency, t) triple: the triple
     as ``_frequency``, ``_recency``, ``_t`` (typed like ``df``'s
@@ -362,17 +367,22 @@ def _expected_purchases_table(
     names its numpy kernel, the kernel's params and the horizon in
     days — ``(expected_purchases_np, BetaGeoParams, t)`` or
     ``(pnbd_expected_purchases_np, ParetoNBDParams, t)`` — evaluated
-    on the driver over the triples.  ``createDataFrame`` turns the
-    pandas frame into a LocalRelation through Arrow, so neither the
-    table nor its join runs a Python worker."""
+    on the driver over the triples.  ``constants`` adds one double
+    column per entry holding that value on every row.
+    ``createDataFrame`` turns the pandas frame into a LocalRelation
+    through Arrow, so neither the table nor its join runs a Python
+    worker."""
     keys = triples[_RFT_KEYS].reset_index(drop=True)
     x, t_x, T = (keys[k].to_numpy(dtype=np.float64) for k in _RFT_KEYS)
     table = keys.rename(columns={k: f"_{k}" for k in _RFT_KEYS})
     for name, (kernel, params, horizon) in columns.items():
         table[name] = kernel(params, horizon, x, t_x, T)
+    constants = constants or {}
+    for name, value in constants.items():
+        table[name] = np.float64(value)
     schema = StructType(
         [StructField(f"_{k}", df.schema[k].dataType) for k in _RFT_KEYS]
-        + [StructField(name, DoubleType()) for name in columns]
+        + [StructField(name, DoubleType()) for name in [*columns, *constants]]
     )
     return df.sparkSession.createDataFrame(table, schema)
 
@@ -381,17 +391,18 @@ def join_expected_purchases(
     df: DataFrame,
     columns: dict[str, tuple[Callable[..., np.ndarray], object, float]],
     triples: pd.DataFrame | None = None,
+    constants: dict[str, float] | None = None,
 ) -> DataFrame:
     """``df`` (with frequency, recency, t) left-joined to its
     ``_expected_purchases_table`` on null-safe equality of the triple:
-    every row gains the ``columns`` predictions (and the table's
-    ``_``-prefixed keys).  The table is broadcast.  ``triples`` holds
-    the distinct triples when the caller already has them (extra
-    columns are ignored); when None they are collected from ``df`` in
-    one job."""
+    every row gains the ``columns`` predictions, the ``constants``
+    (and the table's ``_``-prefixed keys).  The table is broadcast.
+    ``triples`` holds the distinct triples when the caller already has
+    them (extra columns are ignored); when None they are collected from
+    ``df`` in one job."""
     if triples is None:
         triples = df.select(*_RFT_KEYS).distinct().toPandas()
-    table = _expected_purchases_table(df, triples, columns)
+    table = _expected_purchases_table(df, triples, columns, constants)
     on = [F.col(k).eqNullSafe(F.col(f"_{k}")) for k in _RFT_KEYS]
     return df.join(F.broadcast(table), on, "left")
 
@@ -415,7 +426,12 @@ def score_customers(
     arithmetic.  ``triples`` holds those distinct triples (the BG/NBD
     statistics of ``fit_statistics``, whose extra columns are ignored);
     when None they are collected from ``returning`` in one job.
+
+    The fitted Gamma-Gamma p, q, v ride the broadcast table as constant
+    columns: as literals they would be written into the generated code,
+    which then compiles anew for every fit.
     """
+    gg_cols = {"_gg_p": gg.p, "_gg_q": gg.q, "_gg_v": gg.v}
     scored = (
         join_expected_purchases(
             returning,
@@ -424,11 +440,14 @@ def score_customers(
                 "_purchases_clv": (expected_purchases_np, bg, clv_horizon),
             },
             triples,
+            gg_cols,
         )
         .select(
             *returning.columns,
             F.col("_purchases_predict").alias("predicted_purchases"),
-            expected_avg_value_col(gg).alias("predicted_avg_value"),
+            expected_avg_value_col(tuple(map(F.col, gg_cols))).alias(
+                "predicted_avg_value"
+            ),
             "_purchases_clv",
         )
         .withColumn(

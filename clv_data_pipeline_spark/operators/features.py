@@ -33,9 +33,12 @@ customers' active days), far smaller than the input scan.
 from __future__ import annotations
 
 import datetime as dt
+from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+_EPOCH = dt.date(1970, 1, 1)
 
 
 def rfm_features(
@@ -59,12 +62,17 @@ def rfm_features(
     the associative formulation.  Decimal partial sums are exact, keep
     map-side combine, and cost a few percent over double sums.
     """
+    ts = F.col(ts_col)
+    first_day = F.to_date(F.min(ts))
     if asof is None:
-        asof_col = F.current_date()
+        T = F.datediff(F.current_date(), first_day)
     elif isinstance(asof, Column):
-        asof_col = asof
+        T = F.datediff(asof, first_day)
     else:
-        asof_col = F.lit(str(asof)).cast("date")
+        # days since the epoch as a decimal literal: a date literal
+        # would be written into the generated code, one class per as-of
+        days = (dt.date.fromisoformat(str(asof)[:10]) - _EPOCH).days
+        T = F.lit(Decimal(days)).cast("decimal(10,0)") - F.unix_date(first_day)
 
     if exact_monetary:
         monetary = (
@@ -74,16 +82,13 @@ def rfm_features(
     else:
         monetary = F.avg(amount_col).alias("monetary_value")
 
-    ts = F.col(ts_col)
     # datediff casts to long: BQ DATE_DIFF returns INT64 (faithful) and it
     # pins schema parity with DuckDB oracles (date_diff -> BIGINT).
     return transactions.groupBy(
         F.col(customer_col).alias("customer_id")
     ).agg(
-        F.datediff(F.to_date(F.max(ts)), F.to_date(F.min(ts)))
-        .cast("long")
-        .alias("recency"),
-        F.datediff(asof_col, F.to_date(F.min(ts))).cast("long").alias("T"),
+        F.datediff(F.to_date(F.max(ts)), first_day).cast("long").alias("recency"),
+        T.cast("long").alias("T"),
         (F.size(F.collect_set(F.to_date(ts))) - F.lit(1))
         .cast("long")
         .alias("frequency"),

@@ -56,6 +56,24 @@ def test_nelder_mead_quadratic():
     assert fx < 1e-8
 
 
+def test_nelder_mead_counts_non_finite_values_as_worst():
+    """A region where the objective is NaN or -inf (a likelihood's
+    boundary) is never taken as the minimum, and the search still
+    converges well before max_iter."""
+    calls = [0]
+
+    def f(p):
+        calls[0] += 1
+        if p[0] <= 0:
+            return float("-inf") if p[0] > -0.5 else float("nan")
+        return float((p[0] - 0.05) ** 2 + (p[1] - 1.0) ** 2)
+
+    x, fx = nelder_mead(f, np.array([1.0, 0.5]), max_iter=20000)
+    assert np.isfinite(fx) and fx < 1e-8
+    assert np.allclose(x, [0.05, 1.0], atol=1e-4)
+    assert calls[0] < 20000
+
+
 def test_nelder_mead_rosenbrock_2d():
     f = lambda p: float((1 - p[0]) ** 2 + 100 * (p[1] - p[0] ** 2) ** 2)  # noqa: E731
     x, fx = nelder_mead(f, np.array([-1.2, 1.0]), max_iter=5000)

@@ -1,13 +1,16 @@
 """Every oracle-checked query vs DuckDB at sf0.001 (fast) — the local
 replica of the driver's correctness gate.  `RUN_SF001_ONLY=0` also runs
-sf0.01 (what the driver actually uses)."""
+sf0.01 (what the driver actually uses); select a subset with ``-k``,
+e.g. ``RUN_SF001_ONLY=0 pytest tests/test_queries_oracle.py -k sf001``."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
 from clv_data_pipeline_spark import registry
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle import check_query
 
 
@@ -18,6 +21,15 @@ def _oracle_names() -> list[str]:
 @pytest.mark.parametrize("name", _oracle_names())
 def test_query_matches_oracle_sf0001(spark, name):
     check_query(spark, name, SF_SMOKE)
+
+
+@pytest.mark.skipif(
+    os.environ.get("RUN_SF001_ONLY") != "0",
+    reason="sf0.01 oracle pass runs with RUN_SF001_ONLY=0",
+)
+@pytest.mark.parametrize("name", _oracle_names())
+def test_query_matches_oracle_sf001(spark, name):
+    check_query(spark, name, SF_ORACLE)
 
 
 def test_entry_smoke(spark):
