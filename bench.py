@@ -405,16 +405,18 @@ SUMMARY_MAX_BYTES = 1500
 
 def session_config(spark) -> dict:
     """The resolved session settings the timings depend on: master,
-    heap (as configured and as the JVM got it), GC, shuffle partitions
-    and the generated-class cache size."""
+    heap (as configured and as the JVM got it), the driver's ``-XX:``
+    options (collector and JIT policy), shuffle partitions and the
+    generated-class cache size."""
     conf = spark.sparkContext.getConf()
     runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
     return {
         "spark.master": conf.get("spark.master"),
         "spark.driver.memory": conf.get("spark.driver.memory", "unset"),
         "jvm_max_heap_mb": round(runtime.maxMemory() / 2**20),
-        "gc": [o for o in conf.get("spark.driver.extraJavaOptions", "").split()
-               if o.startswith("-XX:+Use") and o.endswith("GC")],
+        "jvm_options": [o for o in
+                        conf.get("spark.driver.extraJavaOptions", "").split()
+                        if o.startswith("-XX:")],
         "spark.sql.shuffle.partitions":
             spark.conf.get("spark.sql.shuffle.partitions"),
         "spark.sql.codegen.cache.maxEntries":

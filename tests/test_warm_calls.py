@@ -5,7 +5,8 @@ q_hits, q_ridge and q_scd2_stream run Spark jobs before they return
 should pay for those alone: no generated class compiled again (the
 session's ``spark.sql.codegen.cache.maxEntries`` holds the mix's
 working set) and no parquet schema inferred again
-(``sources.io.read_parquet``).
+(``sources.io.read_parquet``).  The driver JVM that runs the warm
+code compiles it under the local JIT policy of ``session.get_spark``.
 """
 
 from __future__ import annotations
@@ -24,6 +25,21 @@ HITS_BUILD_JOB_BUDGET = 25
 def _compiled(spark) -> int:
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
     return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_driver_jvm_runs_local_jit_policy(spark):
+    """The driver JVM was started with the local collector and the
+    raised C2 (tier-4) thresholds, not just configured with them."""
+    jvm = spark.sparkContext._jvm
+    args = set(jvm.java.lang.management.ManagementFactory
+               .getRuntimeMXBean().getInputArguments())
+    assert {
+        "-XX:+UseParallelGC",
+        "-XX:Tier4InvocationThreshold=50000",
+        "-XX:Tier4MinInvocationThreshold=6000",
+        "-XX:Tier4CompileThreshold=150000",
+        "-XX:Tier4BackEdgeThreshold=400000",
+    } <= args
 
 
 def test_warm_round_compiles_no_new_class(spark):
