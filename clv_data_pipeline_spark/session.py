@@ -18,25 +18,20 @@ The reference pipeline delegated execution to BigQuery and pandas
   static conf: it must be set before the session's first query, which
   ``get_spark`` does.
 - Local mode only: the driver JVM runs ParallelGC with C2 (tier-4)
-  compile thresholds at 10x HotSpot 17's defaults
+  compile thresholds at 5x HotSpot 17's defaults
   (``LOCAL_DRIVER_JAVA_OPTIONS``).  Local traffic is short-lived
   sessions: one pipeline day per process (the reference runs one
   Airflow task per day), a bench pass, a test session.  The stock
-  thresholds suit servers that run for days, so C2 kept recompiling
-  Catalyst, planner and scheduler methods that such a session calls
-  thousands of times, not millions; JIT threads took 39-46% of the
-  warm driver's CPU.  Generated row loops pass 400k back-edges within
-  milliseconds and still reach C2; lukewarm driver code stays at C1.
-  Measured on 4 vCPUs (per-thread CPU of the driver JVM, warm days
-  4-11 of a pipeline run, 2 runs per side): JVM CPU per day 2.57/2.48
-  -> 2.04/2.07 s, of which compiler threads (live plus retired)
-  1.36/1.33 -> 0.74/0.76 s and task plus py4j threads 0.81/0.77 ->
-  0.91/0.91 s (that code stays at C1 longer); wall 1.71/1.58 ->
-  1.71/1.69 s.  The price is wall time on code a process runs only a
-  few times: +9% on a 3-pass sf1 scan mix at equal CPU, +1% on the
-  best-of-3 bench.py HEADLINE at 11% less CPU.
-  Dropping C2 altogether (``-XX:TieredStopAtLevel=1``) cost 14-23%
-  more JVM CPU.  ``extra_conf["spark.driver.extraJavaOptions"]``
+  thresholds suit servers that run for days, so C2 spent a large share
+  of the driver's CPU compiling Catalyst, planner and scheduler methods
+  that such a session calls thousands of times, not millions.  Raising
+  the thresholds trades that compiler CPU for wall time on code that
+  runs longer at C1.  5x keeps most of 10x's CPU saving, and its wall
+  time on execution-bound and one-pass runs stayed within noise where
+  10x's rose by about a tenth; dropping C2 altogether
+  (``-XX:TieredStopAtLevel=1``) cost more CPU.
+  The measurements are in ROADMAP.md ("C2 thresholds sized for short
+  sessions").  ``extra_conf["spark.driver.extraJavaOptions"]``
   replaces the whole string.
 """
 
@@ -74,10 +69,10 @@ DEFAULT_CONF: dict[str, str] = {
 # throughput collector and C2 thresholds sized for short-lived sessions.
 LOCAL_DRIVER_JAVA_OPTIONS = " ".join([
     "-XX:+UseParallelGC",
-    "-XX:Tier4InvocationThreshold=50000",
-    "-XX:Tier4MinInvocationThreshold=6000",
-    "-XX:Tier4CompileThreshold=150000",
-    "-XX:Tier4BackEdgeThreshold=400000",
+    "-XX:Tier4InvocationThreshold=25000",
+    "-XX:Tier4MinInvocationThreshold=3000",
+    "-XX:Tier4CompileThreshold=75000",
+    "-XX:Tier4BackEdgeThreshold=200000",
 ])
 
 

@@ -75,7 +75,7 @@ def test_summary_line_records_session_config_within_budget(spark):
     assert config["spark.sql.codegen.cache.maxEntries"] == "1000"
     assert {"spark.master", "spark.driver.memory", "jvm_options",
             "spark.sql.shuffle.partitions"} <= set(config)
-    assert "-XX:Tier4BackEdgeThreshold=400000" in config["jvm_options"]
+    assert "-XX:Tier4BackEdgeThreshold=200000" in config["jvm_options"]
     timings = {n: round(100 + len(n) + 0.123, 3) for n in bench.HEADLINE}
     calib = {"jvm": 0.123, "shuffle": 0.456, "python": 0.789}
     out = {

@@ -35,10 +35,10 @@ def test_driver_jvm_runs_local_jit_policy(spark):
                .getRuntimeMXBean().getInputArguments())
     assert {
         "-XX:+UseParallelGC",
-        "-XX:Tier4InvocationThreshold=50000",
-        "-XX:Tier4MinInvocationThreshold=6000",
-        "-XX:Tier4CompileThreshold=150000",
-        "-XX:Tier4BackEdgeThreshold=400000",
+        "-XX:Tier4InvocationThreshold=25000",
+        "-XX:Tier4MinInvocationThreshold=3000",
+        "-XX:Tier4CompileThreshold=75000",
+        "-XX:Tier4BackEdgeThreshold=200000",
     } <= args
 
 
